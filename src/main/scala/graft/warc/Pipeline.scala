@@ -16,8 +16,10 @@ import graft.rake.Rake
   * DataFrame plan: cheap filters are plain column predicates BEFORE the
   * expensive decode/parse UDFs so Catalyst keeps them next to the scan
   * (SURVEY §4); the parse cascade is a single deterministic struct-
-  * returning UDF; everything per-field after that is built-in expressions
-  * so column pruning drops unused work.
+  * returning UDF. Every output field after that is its own expression —
+  * a built-in, or a named single-pass kernel UDF where the regex form
+  * dominated the cost (GA scans, whitespace collapse, word count, RAKE) —
+  * so column pruning drops the work of every unused field.
   */
 object Pipeline {
 
@@ -27,6 +29,8 @@ object Pipeline {
   val GaConfigPattern = "ga\\((.*?)\\)"
   /** F3 oversize guard threshold (`src/main.rs:376`). */
   val MaxParseBytes = 2000000L
+  /** P3 HTTP envelope separator (`src/main.rs:303-304`). */
+  val EnvelopeSep = "\n\r\n"
 
   // ---- scalar functions (SURVEY §2.7) ----
 
@@ -57,6 +61,120 @@ object Pipeline {
 
   val rakeFn: String => Map[String, Float] = text => Rake.keywords(text)
 
+  /** `regexp_extract_all(s, re, group)`, trying `re` only where one of
+    * `literals` begins. Every match of the GA patterns starts with one of
+    * its literals, so this finds the same matches in the same order; a
+    * page without a literal costs one `indexOf` per literal. Transparent
+    * bounds let `\b` see the character before the candidate position. */
+  private def extractAt(re: java.util.regex.Pattern, group: Int,
+      literals: Array[String], s: String): Seq[String] = {
+    if (s == null) return null
+    val next = literals.map(s.indexOf(_)) // -1 once a literal is exhausted
+    var m: java.util.regex.Matcher = null
+    val out = Seq.newBuilder[String]
+    var from = 0
+    var at = 0
+    while (at >= 0) {
+      at = -1
+      var k = 0
+      while (k < next.length) {
+        if (next(k) >= 0 && next(k) < from) next(k) = s.indexOf(literals(k), from)
+        if (next(k) >= 0 && (at < 0 || next(k) < at)) at = next(k)
+        k += 1
+      }
+      if (at >= 0) {
+        if (m == null) m = re.matcher(s).useTransparentBounds(true)
+        m.region(at, s.length)
+        from = if (m.lookingAt()) {
+          val g = m.group(group)
+          out += (if (g == null) "" else g)
+          m.end()
+        } else at + 1
+      }
+    }
+    out.result()
+  }
+
+  private val GaRe = java.util.regex.Pattern.compile(GaPattern)
+  private val GaConfigRe = java.util.regex.Pattern.compile(GaConfigPattern)
+  private val GaLiterals = Array("UA-", "GTM-")
+  private val GaConfigLiterals = Array("ga(")
+
+  /** P7: every [[GaPattern]] match (`regexp_extract_all(_, GaPattern, 0)`). */
+  val gaTrackerIds: String => Seq[String] = html => extractAt(GaRe, 0, GaLiterals, html)
+
+  /** P8: capture 1 of every [[GaConfigPattern]] match. */
+  val gaConfigCalls: String => Seq[String] =
+    html => extractAt(GaConfigRe, 1, GaConfigLiterals, html)
+
+  /** P10: `regexp_replace(s, "(\\s|\\\\n){2,}", "")` in one pass. A unit is
+    * one ASCII `\s` char or the two chars `\` `n`; a run of two or more
+    * units is removed, a lone unit is kept. */
+  val collapseWs: String => String = s => {
+    if (s == null) null
+    else {
+      val n = s.length
+      var sb: java.lang.StringBuilder = null
+      var copied = 0 // s[0, copied) is already in sb
+      var i = 0
+      while (i < n) {
+        var j = i
+        var units = 0
+        var more = true
+        while (more) {
+          if (j < n && Rake.isSpace(s.charAt(j))) { j += 1; units += 1 }
+          else if (j + 1 < n && s.charAt(j) == '\\' && s.charAt(j + 1) == 'n') {
+            j += 2; units += 1
+          } else more = false
+        }
+        if (units >= 2) {
+          if (sb == null) sb = new java.lang.StringBuilder(n)
+          sb.append(s, copied, i)
+          copied = j
+        }
+        i = if (units > 0) j else i + 1
+      }
+      if (sb == null) s else sb.append(s, copied, n).toString
+    }
+  }
+
+  /** P11: `size(split(trim(s), "\\s+"))`, or 0 when `trim(s)` is empty.
+    * SQL `trim` strips spaces only and the split keeps leading and
+    * trailing empty pieces, so the count is the number of `\s` runs + 1. */
+  val wordCount: String => java.lang.Integer = s => {
+    if (s == null) null
+    else {
+      var b = 0
+      var e = s.length
+      while (b < e && s.charAt(b) == ' ') b += 1
+      while (e > b && s.charAt(e - 1) == ' ') e -= 1
+      var runs = 0
+      var i = b
+      while (i < e) {
+        if (Rake.isSpace(s.charAt(i))) {
+          runs += 1
+          while (i < e && Rake.isSpace(s.charAt(i))) i += 1
+        } else i += 1
+      }
+      if (b == e) 0 else runs + 1
+    }
+  }
+
+  /** P3 header block: the text before the first [[EnvelopeSep]] (all of
+    * it when there is none) — part 0 of `split(decoded, "\n\r\n")`. */
+  def headerBlock(decoded: Column): Column = substring_index(decoded, EnvelopeSep, 1)
+
+  /** P3 raw HTML: the text after the first [[EnvelopeSep]] with every
+    * further separator replaced by one space, or "" when there is none —
+    * `array_join(slice(split(decoded, "\n\r\n"), 2, ∞), " ")` without
+    * the regex split and the array. */
+  def htmlBody(decoded: Column): Column = {
+    val at = instr(decoded, EnvelopeSep)
+    when(at === 0, lit(""))
+      .otherwise(replace(decoded.substr(at + EnvelopeSep.length, lit(Int.MaxValue)),
+        lit(EnvelopeSep), lit(" ")))
+  }
+
   // ---- the plan ----
 
   /** Full enrichment: Dataset[WarcRecord] → url_resource DataFrame with
@@ -70,7 +188,11 @@ object Pipeline {
     val parseU = udf(parseHtmlFn)
     val absU = udf(absolutizeFn)
     val domainU = udf(domainRootFn)
-    val rakeU = udf(rakeFn)
+    val rakeU = udf(rakeFn).withName("rake_keywords")
+    val gaU = udf(gaTrackerIds).withName("ga_tracker_ids")
+    val gaConfigU = udf(gaConfigCalls).withName("ga_config_calls")
+    val collapseU = udf(collapseWs).withName("collapse_ws")
+    val wordCountU = udf(wordCount).withName("count_words")
 
     val df = records.toDF()
       // F1 record-type filter (`src/main.rs:230-231`)
@@ -93,10 +215,8 @@ object Pipeline {
       .withColumn("decoded", gunzipU($"content"))
       .filter($"decoded".isNotNull)
       // P3 envelope split on "\n\r\n" (`src/main.rs:303-304,342`)
-      .withColumn("envelope", split($"decoded", "\n\r\n"))
-      .withColumn("headers", headersU(element_at($"envelope", 1)))
-      .withColumn("raw_html",
-        array_join(slice($"envelope", 2, Int.MaxValue), " "))
+      .withColumn("headers", headersU(headerBlock($"decoded")))
+      .withColumn("raw_html", htmlBody($"decoded"))
       // P5 load_time (`src/main.rs:316-325`)
       .withColumn("load_time",
         (coalesce(element_at($"headers", "X-Funnelback-Total-Request-Time-MS")
@@ -108,8 +228,7 @@ object Pipeline {
       // P2 domain root (`src/main.rs:333-339`)
       .withColumn("domain_name", domainU($"hostname"))
       // P7 GA tracker ids (`src/main.rs:344-355`)
-      .withColumn("google_analytics",
-        regexp_extract_all($"raw_html", lit(GaPattern), lit(0)))
+      .withColumn("google_analytics", gaU($"raw_html"))
       // P8+F5 GA config minus plain pageviews (`src/main.rs:356-375`),
       // LAMBDA-FREE (r12): the two literal pageview forms drop via
       // array_remove ∘ array_remove ≡ filter(_, x => x ≠ a && x ≠ b) on
@@ -121,26 +240,25 @@ object Pipeline {
       .withColumn("google_analytics_config",
         array_remove(
           array_remove(
-            regexp_extract_all($"raw_html", lit(GaConfigPattern), lit(1)),
+            gaConfigU($"raw_html"),
             "\"send\", \"pageview\""),
           "'send', 'pageview'"))
-      // F3 size guard around the parse cascade (`src/main.rs:376-381`)
+      // F3 size guard around the parse cascade (`src/main.rs:376-381`);
+      // chars <= bytes, so only pages over the bound in bytes are counted
       .withColumn("html",
         when($"size_bytes" > MaxParseBytes ||
-            length($"raw_html") > MaxParseBytes,
+            (octet_length($"raw_html") > MaxParseBytes &&
+              length($"raw_html") > MaxParseBytes),
           typedLit(HtmlResult.empty))
           .otherwise(parseU($"raw_html")))
       // P9 absolutize + canonicalize (`src/lib.rs:400-417`)
       .withColumn("links", absU($"url", $"html.links"))
       .withColumn("resource_urls", absU($"url", $"html.resource_urls"))
       // P10 text join + parser-path whitespace collapse (`src/main.rs:384-386`)
-      .withColumn("text_content",
-        regexp_replace(array_join($"html.text", " "), "(\\s|\\\\n){2,}", ""))
+      .withColumn("text_content", collapseU(array_join($"html.text", " ")))
       .withColumn("headings_text", array_join($"html.headings_text", " "))
       // P11 word count (`src/main.rs:468-471`)
-      .withColumn("word_count",
-        when(length(trim($"text_content")) === 0, 0)
-          .otherwise(size(split(trim($"text_content"), "\\s+"))))
+      .withColumn("word_count", wordCountU($"text_content"))
       // A1–A5 RAKE keywords (`src/lib.rs:386-399`)
       .withColumn("keywords", rakeU($"text_content"))
       // K3 DAY axis: the crawl day from the record's WARC-Date header

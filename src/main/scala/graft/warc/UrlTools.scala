@@ -9,18 +9,22 @@ object UrlTools {
 
   private val StripRe = java.util.regex.Pattern.compile("'|“|\"|&quot;|%\\d\\d$")
 
+  /** The page URL, parsed once per page; None when it does not parse
+    * (every link is then kept, cleaned). */
+  private def parseBase(pageUrl: String): Option[URI] =
+    try Some(new URI(pageUrl)) catch { case _: Exception => None }
+
   /** Resolve one link against the page URL; unresolvable links are kept
     * as-is (reference behavior). Normalizes bare-authority URLs to end
     * with "/" (rust-url does; java.net.URI does not —
     * `tests/lib-tests.rs:34-37` depends on it). */
-  def resolveOne(pageUrl: String, link: String): String = {
+  private def resolveOne(base: Option[URI], link: String): String = {
     val cleaned = StripRe.matcher(link.trim).replaceAll("")
-    val resolved =
-      try {
-        val base = new URI(pageUrl)
-        val r = base.resolve(cleaned).toString
-        r
-      } catch { case _: Exception => cleaned }
+    val resolved = base match {
+      case Some(b) =>
+        try b.resolve(cleaned).toString catch { case _: Exception => cleaned }
+      case None => cleaned
+    }
     // bare authority (scheme://host[:port] with no path) gets a trailing /
     val schemeEnd = resolved.indexOf("://")
     if (schemeEnd > 0 && resolved.indexOf('/', schemeEnd + 3) < 0 &&
@@ -34,7 +38,10 @@ object UrlTools {
     * because cleaning can collapse distinct raw hrefs). */
   def absolutize(pageUrl: String, links: Seq[String]): Seq[String] =
     if (links == null) Nil
-    else links.distinct.sorted.map(resolveOne(pageUrl, _)).distinct.sorted
+    else {
+      val base = parseBase(pageUrl)
+      links.distinct.sorted.map(resolveOne(base, _)).distinct.sorted
+    }
 
   /** The COMPLETE Public Suffix List (publicsuffix.org — MPL-2.0-licensed
     * public data, embedded verbatim as a resource; the reference links

@@ -69,6 +69,18 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exchanges <= 1, s"expected <=1 exchange, got $exchanges:\n$plan")
   }
 
+  test("p02/p03 WARC corpus: column pruning drops the RAKE, GA and word-count kernels") {
+    // warcCorpus keeps url, text_content and hostname only; the named
+    // kernel UDFs of the other fields must not be evaluated for it
+    val unused = Seq("rake_keywords", "ga_tracker_ids", "ga_config_calls", "count_words")
+    val full = physical(graft.warc.Pipeline.urlResources(
+      graft.warc.WarcSource.fromBytes(graft.warc.WarcQueries.warcFiles(spark, sf))))
+    unused.foreach(u => assert(full.contains(s"$u("), s"$u not named in:\n$full"))
+    val plan = physical(graft.pipeline.TrainingPipeline.warcCorpus(spark, sf))
+    assert(plan.contains("collapse_ws("), s"text kernel missing:\n$plan")
+    unused.foreach(u => assert(!plan.contains(s"$u("), s"$u evaluated for p02:\n$plan"))
+  }
+
   test("cosine_sim participates in whole-stage codegen") {
     val sp = spark
     import sp.implicits._

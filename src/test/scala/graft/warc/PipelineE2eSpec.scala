@@ -239,4 +239,47 @@ class PipelineE2eSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readUnitRows(rootB) == clean,
       "restarted output must equal the never-crashed run")
   }
+
+  test("urlResources schema: names, types and nullability of all 19 columns") {
+    // a kernel UDF returning a primitive would flip its column to
+    // nullable = false, which the Avro sink and the warehouse see
+    import org.apache.spark.sql.types._
+    val strings = ArrayType(StringType, containsNull = true)
+    val stringMap = MapType(StringType, StringType, valueContainsNull = true)
+    val expected = StructType(Seq(
+      StructField("url", StringType, nullable = false),
+      StructField("hostname", StringType, nullable = false),
+      StructField("domain_name", StringType),
+      StructField("size_bytes", IntegerType, nullable = false),
+      StructField("load_time", FloatType),
+      StructField("title", StringType),
+      StructField("text_content", StringType),
+      StructField("headings_text", StringType),
+      StructField("word_count", IntegerType),
+      StructField("links", strings),
+      StructField("resource_urls", strings),
+      StructField("keywords", MapType(StringType, FloatType, valueContainsNull = false)),
+      StructField("meta_tags", stringMap),
+      StructField("headers", stringMap),
+      StructField("google_analytics", strings),
+      StructField("google_analytics_config", strings),
+      StructField("html_errors", StringType),
+      StructField("source", StringType),
+      StructField("crawl_day", DateType)))
+    val b = page(0)
+    val recs = WarcSource.splitWarc(WarcSource.toWireFormat("response",
+      "https://s.ex.gov.au/p/0", b.length, b), "s.warc").toSeq
+    val sp = spark
+    import sp.implicits._
+    val df = Pipeline.urlResources(sp.createDataset(recs))
+    assert(df.schema == expected, df.schema.treeString)
+    // a local Dataset is evaluated by the interpreted projection, where a
+    // `slice(_, 2, Int.MaxValue)` envelope split returned no HTML at all:
+    // it must give the rows generated code gives
+    val local = df.collect().toSeq
+    val generated = Pipeline.urlResources(
+      sp.sparkContext.parallelize(recs, 1).toDS()).collect().toSeq
+    assert(local == generated)
+    assert(local.map(_.getAs[String]("title")) == Seq("T0"))
+  }
 }

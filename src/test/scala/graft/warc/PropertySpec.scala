@@ -52,13 +52,15 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("rake keys never contain stopwords and scores are >= 1 or 0") {
-    forAll(text) { t =>
+    // lowercase ASCII prose, then the kernel generator's punctuation,
+    // Unicode digits, mixed case and control characters
+    Seq(text, KernelGen.text).foreach(g => forAll(g) { t =>
       val kw = Rake.keywords(t)
       kw.keys.foreach { k =>
-        assert(!k.split(" ").exists(Stopwords.english.contains))
+        assert(!k.split(" ").exists(w => Stopwords.english.contains(w.toLowerCase)))
       }
       kw.values.foreach(v => assert(v >= 1.0f || v == 0.0f))
-    }
+    })
   }
 
   test("words appearing only in solo phrases score exactly 1.0") {

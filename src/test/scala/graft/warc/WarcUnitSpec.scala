@@ -123,6 +123,12 @@ class WarcUnitSpec extends AnyFunSuite {
       "https://ex.gov.au/z").sorted)
   }
 
+  test("absolutize with a page URL that does not parse keeps every link, cleaned") {
+    val out = UrlTools.absolutize("https://ex gov.au/a b",
+      Seq("b.html", "\"/q.html\"", "https://other.com", "b.html"))
+    assert(out == Seq("/q.html", "b.html", "https://other.com/"))
+  }
+
   // ---- P2 domain root ----
 
   test("domainRoot handles 2-level public suffixes and plain TLDs") {

@@ -870,6 +870,26 @@ object DedupOps {
       .crossJoin(normHits.agg(count(lit(1)).as("n_norm_contaminated")))
   }
 
+  /** Bound on the wait for a CC round's observed convergence count.
+    * The metric arrives through the listener bus right after the round's
+    * checkpoint action, normally within milliseconds; a count that never
+    * arrives must fail the loop, not hang it. */
+  private val ObservedWait = scala.concurrent.duration.Duration(120, "s")
+
+  /** The round's `changed` count from its [[org.apache.spark.sql.Observation]],
+    * waited on with a bound: no count means no convergence decision, so
+    * a missing one throws naming the round. */
+  private[graft] def observedChanged(obs: org.apache.spark.sql.Observation, round: Int,
+      wait: scala.concurrent.duration.Duration = ObservedWait): Long =
+    try scala.concurrent.Await.result(obs.future, wait).getAs[Long]("changed")
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"connectedComponents round $round: convergence count not observed " +
+            s"within $wait after the round's checkpoint — refusing to " +
+            "guess whether labels converged")
+    }
+
   /** d06: dedup CLUSTERING — the step that turns pair emission (d02/d04)
     * into an actionable keep/drop decision: connected components over the
     * confirmed near-dup pairs (consumed from the session's
@@ -932,9 +952,9 @@ object DedupOps {
           (col("chg") || col("ll") < col("label")).as("chg"))
         .observe(obs, count(when(col("chg"), lit(1))).as("changed"))
         .localCheckpoint(true)
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = next.select(col("id"), col("label"))
       rounds += 1
+      changed = observedChanged(obs, rounds)
+      labels = next.select(col("id"), col("label"))
     }
     if (changed > 0)
       throw new IllegalStateException(

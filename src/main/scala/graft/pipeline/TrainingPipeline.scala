@@ -45,20 +45,19 @@ object TrainingPipeline {
     * carried through (the audit drops it; the shard WRITER ships it). */
   private def shardedSurvivors(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    shardedSurvivorsOf(Tables.documents(s, d)
-      .select($"doc_id", $"text", $"source"))
+    val docs = Tables.documents(s, d).select($"doc_id", $"text", $"source")
+    shardedSurvivorsOf(gateVerdictOf(docs), resolveThresholdCap(docs))
   }
 
-  /** Gate → dedup → cap → shard → audit over a caller-supplied
-    * `(doc_id, text, source)` corpus — the full pipeline tail
-    * p01/p02 share, exposed for p03's streaming composition (the
-    * stream ADMITS rows, then this tail runs batch-side on the
-    * accumulated corpus — one implementation, no drift). */
-  private[graft] def shardedAuditOf(docs: DataFrame,
-      unifiedDedup: Boolean = false,
-      unifiedPre: Option[DataFrame] = None): DataFrame =
-    auditRollup(shardedSurvivorsOf(docs, unifiedDedup = unifiedDedup,
-      unifiedPre = unifiedPre))
+  /** Gate → dedup → cap → shard → audit over a stage-1 verdict
+    * ([[gateVerdictOf]] of a `(doc_id, text, source)` corpus) — the
+    * full pipeline tail p01/p02 share, exposed for p03's streaming
+    * composition (the stream ADMITS rows, then this tail runs
+    * batch-side on the accumulated corpus — one implementation, no
+    * drift) and for the release drill's recomputed audit. */
+  private[graft] def shardedAuditOf(verdict: DataFrame, useThreshold: Boolean,
+      clusters: Option[DataFrame] = None): DataFrame =
+    auditRollup(shardedSurvivorsOf(verdict, useThreshold, clusters))
 
   /** Stage-3 discipline resolution (r14 verdict item 6 — the hatch used
     * to require the CALLER to know their corpus was skewed; now the
@@ -112,13 +111,14 @@ object TrainingPipeline {
     }
   }
 
-  /** The pipeline stages over a caller-supplied `(doc_id, text, source)`
-    * frame — ONE definition of gate → dedup → cap → shard, shared by
-    * p01 (the `documents` table) and p02 (the WARC-extracted corpus).
-    * `thresholdCap`: Some(true) forces the hot-domain escape hatch for
-    * stage 3 (see [[p01b_threshold_cap]]), Some(false) forces the exact
-    * window; None (the default) resolves via [[resolveThresholdCap]] —
-    * `capMode=auto` unless the session says otherwise. */
+  /** The pipeline stages over a stage-1 verdict of a `(doc_id, text,
+    * source)` corpus — ONE definition of gate → dedup → cap → shard,
+    * shared by p01 (the `documents` table) and p02 (the WARC-extracted
+    * corpus). `useThreshold` selects stage 3's discipline: true is the
+    * hot-domain escape hatch (see [[p01b_threshold_cap]]), false the
+    * exact window; callers resolve it on the RAW corpus via
+    * [[resolveThresholdCap]] (`capMode=auto` unless the session says
+    * otherwise) — its memo is keyed by the raw plan. */
   /** Stage-1 verdict as ONE shared column: the first-failing gate
     * predicate by documented priority, 'none' when the doc passes —
     * consumed as a filter (=== "none") by the survivor path and as a
@@ -190,43 +190,53 @@ object TrainingPipeline {
       .localCheckpoint(true)
   }
 
-  /** Stage 1 + the gated frame — t07's gate, bit-for-bit (same signal
-    * frame the gate and the t13 classifier train on), via the shared
-    * verdict column; text/source rejoin on doc_id (the gate's gram
-    * aggregation cannot carry the text through); co-partitioned
-    * equi-join, no skew. ONE definition so [[releaseDrillImpl]] can
-    * precompute [[unifiedClusters]] on the same frame the survivor and
-    * provenance paths gate on. */
-  private[graft] def gatedOf(docs: DataFrame): DataFrame = {
+  /** Stage 1's per-doc VERDICT — the ONE gate definition: t07's gate
+    * signals (the same signal frame the t13 classifier trains on)
+    * reduced to the shared [[gateReasonCol]], one row per input doc
+    * carrying `doc_id`, `n_tok`, `gate_reason` and the corpus columns.
+    * The corpus rejoins on doc_id (the gate's gram aggregation cannot
+    * carry the text through) — co-partitioned equi-join, no skew. The
+    * survivor path ([[gatedFrom]]) and p07's provenance both read this
+    * frame, and [[releaseDrillImpl]] checkpoints it once so every drill
+    * surface shares ONE gate pass. */
+  private[graft] def gateVerdictOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     graft.text.TextOps.gateSignalsOf(docs.select($"doc_id", $"text"))
-      .filter(gateReasonCol === "none")
-      .select($"doc_id", $"n_tok")
+      .select($"doc_id", $"n_tok", gateReasonCol.as("gate_reason"))
       .join(docs, "doc_id")
+  }
+
+  /** The gated frame of a verdict: the docs that pass, with the text
+    * digest stage 2 keys on. On a lazy verdict Catalyst pushes the
+    * filter below the corpus rejoin, so only survivors rejoin. */
+  private def gatedFrom(verdict: DataFrame): DataFrame = {
+    import verdict.sparkSession.implicits._
+    verdict.filter($"gate_reason" === "none").drop("gate_reason")
       .withColumn("doc_md5", md5($"text"))
   }
 
-  private def shardedSurvivorsOf(docs: DataFrame,
-      thresholdCap: Option[Boolean] = None,
-      unifiedDedup: Boolean = false,
-      unifiedPre: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val useThreshold = thresholdCap.getOrElse(resolveThresholdCap(docs))
-    val gated = gatedOf(docs)
+  /** Stage 1 + the gated frame over a raw corpus. */
+  private[graft] def gatedOf(docs: DataFrame): DataFrame =
+    gatedFrom(gateVerdictOf(docs))
+
+  private def shardedSurvivorsOf(verdict: DataFrame, useThreshold: Boolean,
+      clusters: Option[DataFrame] = None): DataFrame = {
+    import verdict.sparkSession.implicits._
+    val gated = gatedFrom(verdict)
     // Stage 2 — keep/drop: exact dedup (d01's keeper rule: min doc_id
-    // per digest) or the UNIFIED decision ([[unifiedClusters]], or a
-    // caller-precomputed copy — the drill runs three pipeline surfaces
-    // over one corpus and must not pay the pair engines three times) —
-    // one anti-join against the bounded drop set either way
-    val deduped = if (unifiedDedup) {
-      val dropIds = unifiedPre.getOrElse(unifiedClusters(gated))
-        .filter($"doc_id" =!= $"keeper_id").select($"doc_id")
-      gated.join(dropIds, Seq("doc_id"), "left_anti")
-    } else {
-      val byDigest = Window.partitionBy($"doc_md5").orderBy($"doc_id")
-      gated
-        .withColumn("rn", row_number().over(byDigest))
-        .filter($"rn" === 1).drop("rn")
+    // per digest) or, given the UNIFIED decision's clusters
+    // ([[unifiedClusters]], computed once by the caller — the drill runs
+    // three pipeline surfaces over one corpus and must not pay the pair
+    // engines three times), one anti-join against the bounded drop set
+    val deduped = clusters match {
+      case Some(c) =>
+        val dropIds = c.filter($"doc_id" =!= $"keeper_id").select($"doc_id")
+        gated.join(dropIds, Seq("doc_id"), "left_anti")
+      case None =>
+        val byDigest = Window.partitionBy($"doc_md5").orderBy($"doc_id")
+        gated
+          .withColumn("rn", row_number().over(byDigest))
+          .filter($"rn" === 1).drop("rn")
     }
     // Stage 3 — per-domain cap, two selectable disciplines sharing the
     // same "p01cap:" salt family (selection: forced by the caller, or
@@ -337,8 +347,8 @@ object TrainingPipeline {
     * whole mode oracles bit-for-bit. */
   def p01b_threshold_cap(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    auditRollup(shardedSurvivorsOf(Tables.documents(s, d)
-      .select($"doc_id", $"text", $"source"), thresholdCap = Some(true)))
+    auditRollup(shardedSurvivorsOf(gateVerdictOf(Tables.documents(s, d)
+      .select($"doc_id", $"text", $"source")), useThreshold = true))
   }
 
   /** p07: PER-DOC PROVENANCE through the composed pipeline (r15 verdict
@@ -374,45 +384,38 @@ object TrainingPipeline {
     * surfaces cannot drift. */
   def p07_provenance(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    provenanceOf(Tables.documents(s, d)
-      .select($"doc_id", $"text", $"source"))
+    val docs = Tables.documents(s, d).select($"doc_id", $"text", $"source")
+    provenanceOf(gateVerdictOf(docs), resolveThresholdCap(docs))
   }
 
-  /** `withTok = true` is the WIDENED twin (r17 verdict item 5): the
-    * same frame plus an `n_tok` column carried from the gate-signal
-    * pass that already computes it — so [[cardOf]] doesn't pay a second
-    * corpus scan just to re-read token counts. p07's registered output
-    * schema stays frozen at the default. */
-  private[graft] def provenanceOf(docs: DataFrame,
-      thresholdCap: Option[Boolean] = None,
+  /** Provenance over a stage-1 verdict ([[gateVerdictOf]]): its
+    * `gate_reason` is the per-doc gate fact, its survivors feed the
+    * stage chain. `withTok = true` is the WIDENED twin (r17 verdict
+    * item 5): the same frame plus the verdict's `n_tok` — so [[cardOf]]
+    * doesn't pay a second corpus scan just to re-read token counts.
+    * p07's registered output schema stays frozen at the default. */
+  private[graft] def provenanceOf(verdict: DataFrame, useThreshold: Boolean,
       withTok: Boolean = false,
-      unifiedDedup: Boolean = false,
-      unifiedPre: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val useThreshold = thresholdCap.getOrElse(resolveThresholdCap(docs))
-    val rsn = graft.text.TextOps.gateSignalsOf(docs.select($"doc_id", $"text"))
-      .select($"doc_id", $"n_tok", gateReasonCol.as("gate_reason"))
-    val gated = rsn.filter($"gate_reason" === "none")
-      .select($"doc_id", $"n_tok")
-      .join(docs, "doc_id")
-      .withColumn("doc_md5", md5($"text"))
+      clusters: Option[DataFrame] = None): DataFrame = {
+    import verdict.sparkSession.implicits._
+    val gated = gatedFrom(verdict)
     // stage-2 verdict columns (rn, keeper_id) under either discipline:
     // exact = d01's md5-window rule; unified = d24's component keeper
-    // ([[unifiedClusters]] — keeper_id is the component's quality
-    // keeper, rn = 2 marks the dropped members)
-    val dd = if (unifiedDedup) {
-      val clusters = unifiedPre.getOrElse(unifiedClusters(gated))
-        .withColumnRenamed("keeper_id", "u_keeper")
-      gated.join(clusters, Seq("doc_id"), "left")
-        .withColumn("keeper_id", coalesce($"u_keeper", $"doc_id"))
-        .withColumn("rn", when($"doc_id" === $"keeper_id", 1).otherwise(2))
-        .drop("u_keeper")
-    } else {
-      val byMd5 = Window.partitionBy($"doc_md5").orderBy($"doc_id")
-      gated
-        .withColumn("rn", row_number().over(byMd5))
-        .withColumn("keeper_id",
-          min($"doc_id").over(Window.partitionBy($"doc_md5")))
+    // (the caller's [[unifiedClusters]] — keeper_id is the component's
+    // quality keeper, rn = 2 marks the dropped members)
+    val dd = clusters match {
+      case Some(c) =>
+        gated.join(c.withColumnRenamed("keeper_id", "u_keeper"),
+            Seq("doc_id"), "left")
+          .withColumn("keeper_id", coalesce($"u_keeper", $"doc_id"))
+          .withColumn("rn", when($"doc_id" === $"keeper_id", 1).otherwise(2))
+          .drop("u_keeper")
+      case None =>
+        val byMd5 = Window.partitionBy($"doc_md5").orderBy($"doc_id")
+        gated
+          .withColumn("rn", row_number().over(byMd5))
+          .withColumn("keeper_id",
+            min($"doc_id").over(Window.partitionBy($"doc_md5")))
     }
     val deduped = dd.filter($"rn" === 1)
     val capv = if (useThreshold) {
@@ -443,8 +446,8 @@ object TrainingPipeline {
         .cast("long"))
       .select($"doc_id", $"shard", $"shard_rank")
     val rsnCols =
-      if (withTok) rsn.select($"doc_id", $"gate_reason", $"n_tok")
-      else rsn.select($"doc_id", $"gate_reason")
+      if (withTok) verdict.select($"doc_id", $"gate_reason", $"n_tok")
+      else verdict.select($"doc_id", $"gate_reason")
     val outCols = Seq($"doc_id",
       when($"gate_reason" =!= "none", lit("gated"))
         .when($"rn" > 1, lit("duplicate"))
@@ -456,8 +459,7 @@ object TrainingPipeline {
       coalesce($"shard", lit(-1L)).as("shard"),
       coalesce($"shard_rank", lit(-1L)).as("shard_rank")) ++
       (if (withTok) Seq($"n_tok") else Nil)
-    docs.select($"doc_id")
-      .join(rsnCols, "doc_id")
+    rsnCols
       .join(dd.select($"doc_id", $"rn", $"keeper_id"), Seq("doc_id"), "left")
       .join(capv.select($"doc_id", $"cap_draw", $"capped_out"),
         Seq("doc_id"), "left")
@@ -516,7 +518,8 @@ object TrainingPipeline {
 
   private[graft] def cardOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val prov = provenanceOf(docs.select($"doc_id", $"text", $"source"),
+    val core = docs.select($"doc_id", $"text", $"source")
+    val prov = provenanceOf(gateVerdictOf(core), resolveThresholdCap(core),
       withTok = true)
     cardRollupOf(prov.join(docs.select($"doc_id", $"lang"), "doc_id"))
   }
@@ -643,8 +646,9 @@ object TrainingPipeline {
     import s.implicits._
     val flagged = graft.dedup.Contamination.d15FlaggedIds(
       docs.select($"doc_id", $"text"), benchDocs)
-    auditRollup(shardedSurvivorsOf(
-      docs.join(flagged, Seq("doc_id"), "left_anti")))
+    val kept = docs.join(flagged, Seq("doc_id"), "left_anti")
+    auditRollup(shardedSurvivorsOf(gateVerdictOf(kept),
+      resolveThresholdCap(kept)))
   }
 
   val p09Oracle: String = {
@@ -694,21 +698,21 @@ object TrainingPipeline {
   def materializeShards(s: SparkSession, d: String, outDir: String,
       maxRecordsPerFile: Long = 50000L): DataFrame = {
     import s.implicits._
-    materializeShardsOf(Tables.documents(s, d)
-      .select($"doc_id", $"text", $"source"), outDir, maxRecordsPerFile)
+    val docs = Tables.documents(s, d).select($"doc_id", $"text", $"source")
+    materializeShardsOf(gateVerdictOf(docs), resolveThresholdCap(docs),
+      outDir, maxRecordsPerFile)
   }
 
-  /** [[materializeShards]] over a caller-supplied `(doc_id, text,
-    * source)` corpus — the variant [[releaseDrill]] drives on the WARC
-    * surface. */
-  private[graft] def materializeShardsOf(docs: DataFrame, outDir: String,
+  /** [[materializeShards]] over a stage-1 verdict of a caller-supplied
+    * `(doc_id, text, source)` corpus — the variant [[releaseDrill]]
+    * drives on the WARC surface. */
+  private[graft] def materializeShardsOf(verdict: DataFrame,
+      useThreshold: Boolean, outDir: String,
       maxRecordsPerFile: Long = 50000L,
-      unifiedDedup: Boolean = false,
-      unifiedPre: Option[DataFrame] = None): DataFrame = {
-    val s = docs.sparkSession
+      clusters: Option[DataFrame] = None): DataFrame = {
+    val s = verdict.sparkSession
     import s.implicits._
-    shardedSurvivorsOf(docs, unifiedDedup = unifiedDedup,
-      unifiedPre = unifiedPre)
+    shardedSurvivorsOf(verdict, useThreshold, clusters)
       .select($"shard", $"order_key", $"doc_id", $"n_tok", $"doc_md5", $"text")
       .repartition($"shard")
       .sortWithinPartitions($"shard", $"order_key", $"doc_id")
@@ -753,12 +757,15 @@ object TrainingPipeline {
     * can show WHICH seam broke (the Dev subcommand and the spec both
     * require all-pass).
     *
-    * Scale shape: the pipeline cost is [[materializeShardsOf]] +
-    * [[provenanceOf]] (shared stage topology, each linear with cool
-    * keys) plus, on the decontaminated variant, d15's linear
-    * gram-digest join; the reconciliation itself reads the written
-    * files once each and collects only BOUNDED aggregates (8 shards /
-    * ≤5 dispositions / ≤8 check rows). */
+    * Scale shape: stage 1 (the gate verdict, [[gateVerdictOf]]) is
+    * computed ONCE per drill and checkpointed — corpus-sized, one row
+    * per doc with its text; every surface below reads it. On top of it
+    * the pipeline cost is [[materializeShardsOf]] + [[provenanceOf]]
+    * (shared stage topology, each linear with cool keys) plus, on the
+    * decontaminated variant, d15's linear gram-digest join; the
+    * reconciliation itself reads the written files once each and
+    * collects only BOUNDED aggregates (8 shards / ≤5 dispositions /
+    * ≤8 check rows). */
   def releaseDrill(s: SparkSession, docs: DataFrame, outDir: String,
       maxRecordsPerFile: Long = 50000L): DataFrame =
     releaseDrillImpl(s, docs, benchDocs = None, outDir, maxRecordsPerFile)
@@ -806,20 +813,25 @@ object TrainingPipeline {
       case Some(f) => core.join(f, Seq("doc_id"), "left_anti")
       case None => core
     }
-    // the unified decision is computed ONCE per drill (r20 review: the
-    // shard, provenance, and recomputed-audit surfaces each ran the
-    // pair engines + CC on the same gated corpus — the drill's dominant
-    // cost, tripled); unifiedClusters is already eagerly checkpointed
-    val uniPre =
-      if (unifiedDedup) Some(unifiedClusters(gatedOf(tailCorpus))) else None
+    // stage 1 is computed ONCE per drill: the shard, provenance and
+    // recomputed-audit surfaces and the unified pair engines all read
+    // one eagerly checkpointed verdict, where a lazy one re-runs the
+    // gate's gram shuffle per read. The cap discipline resolves on the
+    // raw corpus, where resolveThresholdCap's plan-keyed memo hits.
+    val verdict = gateVerdictOf(tailCorpus).localCheckpoint(true)
+    val useThreshold = resolveThresholdCap(tailCorpus)
+    // so is the unified decision, the drill's dominant cost (pair engines
+    // + CC); unifiedClusters is already eagerly checkpointed
+    val clusters =
+      if (unifiedDedup) Some(unifiedClusters(gatedFrom(verdict))) else None
     // (1) shards — returned frame is the from-disk audit already
-    val diskAudit = materializeShardsOf(tailCorpus, s"$outDir/shards",
-      maxRecordsPerFile, unifiedDedup = unifiedDedup, unifiedPre = uniPre)
+    val diskAudit = materializeShardsOf(verdict, useThreshold,
+      s"$outDir/shards", maxRecordsPerFile, clusters)
     // (2) provenance, widened with n_tok (+ lang when present);
     // contaminated docs appear with their own disposition, tail fields
     // sentinel-(-1) like every other pre-tail drop
-    val provTail = provenanceOf(tailCorpus, withTok = true,
-      unifiedDedup = unifiedDedup, unifiedPre = uniPre)
+    val provTail = provenanceOf(verdict, useThreshold, withTok = true,
+      clusters = clusters)
     val prov = flagged match {
       case Some(f) =>
         val contaminated = core.join(f, "doc_id")
@@ -905,7 +917,7 @@ object TrainingPipeline {
         s"${shardTotals._1}/${shardTotals._2}"),
       ("disk_audit_eq_recomputed_audit",
         renderAudit(diskAudit),
-        renderAudit(shardedAuditOf(tailCorpus, unifiedDedup, uniPre)))) ++
+        renderAudit(shardedAuditOf(verdict, useThreshold, clusters)))) ++
       decontamChecks ++ unifiedChecks
     checks.toDF("check", "lhs", "rhs")
       .withColumn("pass", $"lhs" === $"rhs")
@@ -1137,8 +1149,10 @@ object TrainingPipeline {
     * [[shardedSurvivorsOf]]), and the oracle replays end-to-end: the
     * WARC extraction is recomputed from `documents` exactly as the w01
     * oracle proves it must come out. */
-  def p02_warc_training_pipeline(s: SparkSession, d: String): DataFrame =
-    auditRollup(shardedSurvivorsOf(warcCorpus(s, d)))
+  def p02_warc_training_pipeline(s: SparkSession, d: String): DataFrame = {
+    val docs = warcCorpus(s, d)
+    auditRollup(shardedSurvivorsOf(gateVerdictOf(docs), resolveThresholdCap(docs)))
+  }
 
   /** The WARC fixture surface as a pipeline corpus `(doc_id, text,
     * source)` — staged containers through the full parse/enrichment
@@ -1564,11 +1578,9 @@ object TrainingPipeline {
         graft.dedup.DedupOps.withContainmentChain(s, d, carrySource = true))))
 
   def p10_unified_pipeline(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    auditRollup(shardedSurvivorsOf(
-      graft.dedup.DedupOps.withContainmentChain(s, d, carrySource = true),
-      unifiedDedup = true,
-      unifiedPre = Some(ensureP10Clusters(s, d))))
+    val docs = graft.dedup.DedupOps.withContainmentChain(s, d, carrySource = true)
+    auditRollup(shardedSurvivorsOf(gateVerdictOf(docs), resolveThresholdCap(docs),
+      Some(ensureP10Clusters(s, d))))
   }
 
   /** [[p10_unified_pipeline]] replayed: the chain-corpus CTEs (the

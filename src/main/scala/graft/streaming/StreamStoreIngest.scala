@@ -276,8 +276,10 @@ object StreamStoreIngest {
           col("text"), array_join(reverse(toks), " "))).as(Seq("v", "text")))
         .select((col("doc_id") + col("v") * off).as("doc_id"),
           col("text"), col("source"))
-      val finish = (t: DataFrame) =>
-        graft.pipeline.TrainingPipeline.shardedAuditOf(t)
+      val finish = (t: DataFrame) => {
+        val tp = graft.pipeline.TrainingPipeline
+        tp.shardedAuditOf(tp.gateVerdictOf(t), tp.resolveThresholdCap(t))
+      }
       drainToParquet(s, dir, overwritePerBatch = false,
         fb => crawl.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
           // PIN the micro-batch for its four consumers (guide §1.1,

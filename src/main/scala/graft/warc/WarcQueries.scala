@@ -578,6 +578,8 @@ object WarcQueries {
     // pins the zip). Nothing is given up: the loop's shuffles are
     // already size-pinned to `parts`, so runtime coalescing has nothing
     // to coalesce, and AQE cannot split aggregation skew anyway.
+    // The overrides are session-global: this assumes no other query
+    // plans on the same session while the loop runs (queries run serially).
     val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)

@@ -1231,6 +1231,16 @@ class DedupGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(checkpoints >= 3, s"unexpected action profile: $counts")
   }
 
+  test("connected components: an unobserved convergence count fails the " +
+      "round loudly instead of hanging") {
+    // an Observation whose action never posts its metrics: the bounded
+    // wait must throw naming the round, never hang or guess convergence
+    val never = new org.apache.spark.sql.Observation()
+    val e = intercept[IllegalStateException](DedupOps.observedChanged(never, 7,
+      scala.concurrent.duration.Duration(200, "ms")))
+    assert(e.getMessage.contains("round 7"), e.getMessage)
+  }
+
   test("planted identical-doc flood completes with linear candidate volume") {
     val sp = spark
     import sp.implicits._

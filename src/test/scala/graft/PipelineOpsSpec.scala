@@ -101,7 +101,10 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .mkString(" "), "bad"), // high_punct
       (64L, Seq.fill(20)("the cat sat").mkString(" "), "bad") // repetitive
     )).toDF("doc_id", "text", "source")
-    val pv = graft.pipeline.TrainingPipeline.provenanceOf(planted).cache()
+    val tp = graft.pipeline.TrainingPipeline
+    val verdict = tp.gateVerdictOf(planted)
+    val useThreshold = tp.resolveThresholdCap(planted)
+    val pv = tp.provenanceOf(verdict, useThreshold).cache()
     val d = pv.groupBy($"disposition").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // big: 20 survivors vs DomainCap 15 → 5 capped; dup: keeper kept,
@@ -120,7 +123,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getAs[String]("disposition") == "kept")
     // the planted kept-set also reconciles with the REAL pipeline run
     // on the same corpus — provenance and survivors cannot drift
-    val audited = graft.pipeline.TrainingPipeline.shardedAuditOf(planted)
+    val audited = tp.shardedAuditOf(verdict, useThreshold)
       .agg(sum($"n_docs")).head.getLong(0)
     assert(d("kept") == audited, s"planted kept ${d("kept")} != audit $audited")
     pv.unpersist()
@@ -158,7 +161,10 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val uniFps = graft.pipeline.TrainingPipeline
       .p10_unified_pipeline(spark, sf).collect()
       .map(r => r.getAs[Long]("shard") -> r.getAs[Long]("corpus_fp")).toMap
-    val exactFps = graft.pipeline.TrainingPipeline.shardedAuditOf(chain)
+    val tp = graft.pipeline.TrainingPipeline
+    val verdict = tp.gateVerdictOf(chain)
+    val useThreshold = tp.resolveThresholdCap(chain)
+    val exactFps = tp.shardedAuditOf(verdict, useThreshold)
       .collect()
       .map(r => r.getAs[Long]("shard") -> r.getAs[Long]("corpus_fp")).toMap
     assert(uniFps.keySet == exactFps.keySet)
@@ -167,8 +173,8 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // per-doc provenance under the unified discipline: duplicates exist,
     // and at least one dropped doc has an id BELOW its keeper's — the
     // quality rule (most tokens) overrode the min-id rule
-    val prov = graft.pipeline.TrainingPipeline
-      .provenanceOf(chain, unifiedDedup = true).collect()
+    val prov = tp.provenanceOf(verdict, useThreshold,
+      clusters = Some(tp.unifiedClusters(tp.gatedOf(chain)))).collect()
     val dups = prov.filter(_.getAs[String]("disposition") == "duplicate")
     assert(dups.nonEmpty, "unified stage dropped nothing")
     assert(dups.exists(r =>
@@ -347,6 +353,60 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter($"section" === "lang").count()
       assert(lang >= 1) // the lang section exists on this surface
     } finally rmTree(dir)
+  }
+
+  test("unified release drill gates the corpus exactly once") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every executed plan of the drill, in completion order; the marker
+    // action posted after it proves the listener bus delivered them all
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val marker = "gate_pin_marker"
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val docs = graft.dedup.DedupOps.withContainmentChain(spark, sf,
+      carrySource = true)
+    val dir = java.nio.file.Files.createTempDirectory("graft-drill-gate")
+    spark.listenerManager.register(l)
+    val checks = try {
+      val rows = graft.pipeline.TrainingPipeline
+        .releaseDrillUnified(spark, docs, dir.toString).collect()
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.stream().anyMatch(_.output.exists(_.name == marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      rows
+    } finally {
+      spark.listenerManager.unregister(l)
+      rmTree(dir)
+    }
+    assert(checks.length == 7 && checks.forall(_.getAs[Boolean]("pass")),
+      checks.map(_.toString).mkString("\n"))
+    // a gate pass = one executed instance of the gate's 3-gram explode
+    // (TextOps.gateSignalsOf, the one Generate emitting `gram`); a
+    // cached subplan counts once however many scans read it, and a
+    // reused exchange is a leaf, so a shared pass is not counted twice
+    val helper = new AdaptiveSparkPlanHelper {}
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def gatePasses(p: SparkPlan): Int =
+      helper.collectWithSubqueries(p) {
+        case g: GenerateExec if g.generatorOutput.exists(_.name == "gram") => 1
+        case m: InMemoryTableScanExec if seen.add(m.relation.cacheBuilder) =>
+          gatePasses(m.relation.cachedPlan)
+      }.sum
+    import scala.jdk.CollectionConverters._
+    assert(plans.asScala.exists(_.output.exists(_.name == marker)),
+      "listener never saw the marker action")
+    val n = plans.asScala.toSeq.map(gatePasses).sum
+    assert(n == 1, s"the drill gated the corpus $n times; stage 1 must run once")
   }
 
   test("card rollup: a NULL lang groups like the oracle's GROUP BY — never silently dropped") {

@@ -221,11 +221,11 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     requireTable("documents")
     val sp = spark
     val before = (sp.conf.get("spark.sql.shuffle.partitions"),
-      sp.conf.get("spark.sql.adaptive.coalescePartitions.enabled"))
+      sp.conf.get("spark.sql.adaptive.enabled"))
     val out = graft.warc.WarcQueries.w08_pagerank(sp, sf).collect()
     assert(out.nonEmpty)
     val after = (sp.conf.get("spark.sql.shuffle.partitions"),
-      sp.conf.get("spark.sql.adaptive.coalescePartitions.enabled"))
+      sp.conf.get("spark.sql.adaptive.enabled"))
     assert(after == before, s"loop leaked session confs: $before -> $after")
   }
 

@@ -3,7 +3,7 @@ package graft.analytics
 import scala.util.hashing.MurmurHash3
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-session lifecycle for the PERSISTED stores (the d10 signature
   * tables, the s07 ANN inverted lists + codebooks).
@@ -532,6 +532,168 @@ object StoreLifecycle {
     fs.delete(asideDir, true) // superseded generation reclaimed
   }
 
+  /** One component table of a store family: its kind prefix (the
+    * content-addressed name is `<kind>_f<fam>_<fp>`) and bucket layout,
+    * sorted by the bucket columns (0 buckets = unbucketed). The bucket
+    * count is by-name: a corpus-derived count (the ANN lists' `ivfK(N)`,
+    * one Spark job) is paid only when the table must be re-registered
+    * or built, never on a warm path whose tables are already in the
+    * catalog. */
+  private[graft] final class StoreTable(val kind: String, buckets: => Int = 0,
+      val bucketCols: Seq[String] = Nil) {
+    lazy val nBuckets: Int = buckets
+  }
+
+  /** BUILD-ONCE accessor shared by both persisted stores: returns the
+    * registry entry for the family `tables` of the corpus at
+    * `corpusDir` (fingerprinted over its `corpusTables`), building it at
+    * most once per generation across sessions.
+    *  - The registry key is warehouse-scoped: a session with an isolated
+    *    warehouse builds its own physical store under the same name.
+    *  - Warm registry (JVM-wide) over a per-session catalog: tables
+    *    missing from this session's catalog are re-declared over the
+    *    surviving files; if the files are gone (externally cleaned
+    *    warehouse) the entry is evicted and the family rebuilt — a
+    *    recoverable state, not a hard failure.
+    *  - Cold: a complete generation on disk is re-registered and
+    *    `load`ed (no corpus pass); otherwise the writer lease is taken
+    *    and reuse RE-CHECKED under it (another session may have
+    *    completed this exact generation while we waited — without the
+    *    re-check both run the corpus-scale build), then `build` writes
+    *    the tables, the family is marked complete and superseded
+    *    generations are swept.
+    * `load` and `build` receive the family's table names in `tables`
+    * order. */
+  private[graft] def ensure[T](s: SparkSession,
+      registry: java.util.concurrent.ConcurrentHashMap[String, T],
+      corpusDir: String, corpusTables: Seq[String], tables: Seq[StoreTable])(
+      load: Seq[String] => T)(build: Seq[String] => T): T = {
+    val (fam, fp) = corpusTags(s, corpusDir, corpusTables)
+    val names = tables.map(t => storeName(t.kind, fam, fp))
+    def registered(): Boolean = tables.zip(names).forall { case (t, n) =>
+      s.catalog.tableExists(n) ||
+        reRegister(s, n, t.nBuckets, t.bucketCols, t.bucketCols)
+    }
+    val regKey = s.conf.get("spark.sql.warehouse.dir") + ":" + names.head
+    val cached = registry.get(regKey)
+    if (cached != null) {
+      if (registered()) return cached
+      log.warn(s"store lifecycle: ${names.head} cached in registry but " +
+        "data missing; evicting and rebuilding")
+      registry.remove(regKey)
+      names.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+    registry.computeIfAbsent(regKey, _ => {
+      def reusable(): Boolean = isComplete(s, names.head) && registered()
+      if (reusable()) load(names)
+      else withWriterLease(s) {
+        if (reusable()) load(names)
+        else {
+          val out = build(names)
+          markComplete(s, names, corpusDir)
+          sweep(s, tables.map(_.kind), fam, fp)
+          out
+        }
+      }
+    })
+  }
+
+  /** COMPACTION — fold a store's O(ingested) `delta` into a new base
+    * generation and swap it in under `base`'s name, the fold-the-delta-in
+    * half of the LSM lifecycle both stores share (appends land in the
+    * delta; probes read base ∪ delta). Runs under the writer lease: it
+    * rewrites the shared base, never concurrently with another session's
+    * build, sweep or compaction. No-op when there is no delta.
+    *
+    * The new generation `<base>_compacting` (any stale one a crash left
+    * behind is dropped first) is `fold(base, delta)` in the base's
+    * layout — `nBuckets` on `bucketCols`, sorted by them, so probes keep
+    * their bucket pruning across generations. It is planned with
+    * `spark.sql.unionOutputPartitioning` off: over two identically
+    * bucketed scans Spark's UnionExec reports the children's hash
+    * partitioning but concatenates their partitions, so a fold's
+    * `distinct` planned on that claim never sees a base row and its
+    * delta twin together (observed: a re-run over a re-planted ANN delta
+    * doubled the rows). The swap kind follows the observed table type:
+    *  - EXTERNAL content-addressed store (every production store): the
+    *    generation is written at its deterministic path, stamped with
+    *    the base's corpus marker and swapped by moving DIRECTORIES
+    *    ([[swapInExternal]]) — a metastore rename cannot move an
+    *    external table's data;
+    *  - session-MANAGED copy: rename-aside swap of the metastore names
+    *    ([[TableSwap.swapIn]]).
+    * Either way readers see the old base or the complete new one, and
+    * the delta is dropped only after the swap. Folds must be idempotent
+    * over rows already in base (a `distinct`): a failed post-swap delta
+    * drop leaves the delta beside a base that already holds it, and the
+    * re-run must not fold it twice. On failure before the swap the
+    * partial generation is discarded and base and delta are untouched —
+    * re-running compaction is the recovery. */
+  private[graft] def compact(s: SparkSession, base: String, delta: String,
+      nBuckets: Int, bucketCols: Seq[String])(
+      fold: (DataFrame, DataFrame) => DataFrame): Unit = withWriterLease(s) {
+    if (s.catalog.tableExists(delta)) {
+      val gen = base + "_compacting"
+      val external = isExternalStore(s, base)
+      s.sql(s"DROP TABLE IF EXISTS $gen")
+      try {
+        val unionKey = "spark.sql.unionOutputPartitioning"
+        val prior = s.conf.getOption(unionKey)
+        s.conf.set(unionKey, "false")
+        try {
+          val folded = fold(s.table(base), s.table(delta))
+          if (external)
+            saveStoreTable(folded, gen, nBuckets, bucketCols, bucketCols)
+          else
+            folded.write.bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+              .sortBy(bucketCols.head, bucketCols.tail: _*).saveAsTable(gen)
+        } finally prior match {
+          case Some(v) => s.conf.set(unionKey, v)
+          case None => s.conf.unset(unionKey)
+        }
+        if (external) {
+          carryMarker(s, base, gen)
+          swapInExternal(s, base, gen, nBuckets, bucketCols, bucketCols)
+        } else TableSwap.swapIn(s, base, gen)
+        s.sql(s"DROP TABLE $delta")
+      } catch {
+        case e: Throwable =>
+          try {
+            s.sql(s"DROP TABLE IF EXISTS $gen")
+            if (external) {
+              val p = tablePath(s, gen)
+              p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+            }
+          } catch { case _: Throwable => () }
+          throw e
+      }
+    }
+  }
+
+  /** AUTOMATIC-compaction trigger: runs `compact` iff `delta` exists
+    * and holds at least `mark` rows; returns true iff it ran. One
+    * delta-sized count per call; with a `Long.MaxValue` mark it never
+    * fires (the gate queries' immutable-base contract). */
+  private[graft] def compactPastMark(s: SparkSession, delta: String,
+      mark: Long)(compact: => Unit): Boolean =
+    s.catalog.tableExists(delta) && s.table(delta).count() >= mark && {
+      log.info(s"store lifecycle: delta $delta crossed the $mark-row " +
+        "high-water mark; compacting")
+      compact
+      true
+    }
+
+  /** Live-families-per-kind cap (r12 item 6): a corpus republished
+    * under a NEW path each release (immutable-lake layout) creates one
+    * live family per release that the orphan rule never reclaims (the
+    * old releases still exist on disk). Beyond this many live families
+    * of a kind, the least-recently-USED (marker touch stamp — stamped
+    * at build and refreshed on every cross-session reuse) are swept.
+    * Overridable via `spark.graft.store.maxFamilies`. */
+  private[graft] def maxFamilies(s: SparkSession): Int =
+    s.conf.getOption("spark.graft.store.maxFamilies")
+      .flatMap(_.toIntOption).getOrElse(8)
+
   /** Reclaim superseded and orphaned store generations of the given
     * `kinds` (table-name prefixes, e.g. `graft_s07_lists`). Keeps the
     * current generation (`fam`, `fp`); deletes
@@ -544,17 +706,6 @@ object StoreLifecycle {
     * Directories of other LIVE families (marker corpus still present)
     * are left alone — several corpora legitimately share a warehouse.
     * Catalog entries for deleted directories are dropped too. */
-  /** Live-families-per-kind cap (r12 item 6): a corpus republished
-    * under a NEW path each release (immutable-lake layout) creates one
-    * live family per release that the orphan rule never reclaims (the
-    * old releases still exist on disk). Beyond this many live families
-    * of a kind, the least-recently-USED (marker touch stamp — stamped
-    * at build and refreshed on every cross-session reuse) are swept.
-    * Overridable via `spark.graft.store.maxFamilies`. */
-  private[graft] def maxFamilies(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.store.maxFamilies")
-      .flatMap(_.toIntOption).getOrElse(8)
-
   private[graft] def sweep(s: SparkSession, kinds: Seq[String],
       fam: String, fp: String): Unit = {
     val conf = s.sparkContext.hadoopConfiguration

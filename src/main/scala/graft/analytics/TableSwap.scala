@@ -2,9 +2,17 @@ package graft.analytics
 
 import org.apache.spark.sql.SparkSession
 
-/** Metastore-level table-generation swap shared by the persisted-store
-  * compactions (ANN inverted lists, dedup signature bands). */
+/** Metastore-level table-generation swap: the session-MANAGED branch of
+  * [[StoreLifecycle.compact]] (external stores swap directories via
+  * [[StoreLifecycle.swapInExternal]], which shares the crash hook). */
 object TableSwap {
+
+  /** Injection point for the crash spec: runs INSIDE the exposed
+    * window (target renamed aside, gen not yet renamed in). A throw
+    * here propagates like a process kill would leave the metastore —
+    * no rollback runs, both generations stay on disk, the store name
+    * is vacant. Production value is a no-op. */
+  private[graft] var betweenRenames: () => Unit = () => ()
 
   /** Swap a freshly-written generation in for `target` by RENAME-ASIDE:
     * the old generation's data is never deleted until the new one holds
@@ -13,13 +21,6 @@ object TableSwap {
     * rename is atomic; the one exposed window — target renamed aside,
     * gen not yet renamed in — leaves BOTH generations intact on disk, so
     * recovery is a loud manual rename, never data loss. */
-  /** Injection point for the crash spec: runs INSIDE the exposed
-    * window (target renamed aside, gen not yet renamed in). A throw
-    * here propagates like a process kill would leave the metastore —
-    * no rollback runs, both generations stay on disk, the store name
-    * is vacant. Production value is a no-op. */
-  private[graft] var betweenRenames: () => Unit = () => ()
-
   private[graft] def swapIn(s: SparkSession, target: String, gen: String): Unit = {
     val aside = target + "_pre_swap"
     s.sql(s"DROP TABLE IF EXISTS $aside")

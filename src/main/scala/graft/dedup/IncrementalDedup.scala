@@ -19,8 +19,6 @@ import DedupOps._
   */
 object IncrementalDedup {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.dedup")
-
   /** d07: INCREMENTAL dedup — the production ingest shape: a new batch of
     * documents is admitted against an EXISTING corpus instead of
     * re-deduplicating the world. Layer 1 drops new docs whose exact
@@ -275,55 +273,19 @@ object IncrementalDedup {
     * band table (see [[writeSignatureStore]]) plus a digest table
     * bucketed by `dg` — so BOTH admission layers probe co-located. */
   private[graft] def ensureIncrementalStore(s: SparkSession, d: String): (String, String) = {
-    import graft.analytics.StoreLifecycle
-    val (fam, fp) = StoreLifecycle.corpusTags(s, d, Seq("documents"))
-    val bandT = StoreLifecycle.storeName("graft_d10_bands", fam, fp)
-    val digT = StoreLifecycle.storeName("graft_d10_digests", fam, fp)
-    // warehouse-scoped key: a session with an isolated warehouse builds
-    // its own physical store under the same content-addressed name
-    val regKey = s.conf.get("spark.sql.warehouse.dir") + ":" + bandT
-    val cached = storeRegistry.get(regKey)
-    if (cached != null) {
-      // JVM-wide registry, per-session catalog: after a session restart
-      // re-declare the surviving tables in the new catalog
-      val ok = Seq((bandT, Seq("band", "bucket")), (digT, Seq("dg")))
-        .forall { case (t, cols) =>
-          s.catalog.tableExists(t) || StoreLifecycle.reRegister(s, t, 16, cols, cols) }
-      if (ok) return cached
-      // files gone under a warm registry (externally cleaned warehouse):
-      // evict the entry and fall through to the build path below —
-      // a recoverable state, not a hard failure (r11 ADVICE low)
-      log.warn(s"signature store $bandT cached in registry but data " +
-        "missing; evicting and rebuilding")
-      storeRegistry.remove(regKey)
-      Seq(bandT, digT).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-    }
-    storeRegistry.computeIfAbsent(regKey, _ => {
-      def reusable(): Boolean = StoreLifecycle.isComplete(s, bandT) &&
-        StoreLifecycle.reRegister(s, bandT, 16, Seq("band", "bucket"),
-          Seq("band", "bucket")) &&
-        StoreLifecycle.reRegister(s, digT, 16, Seq("dg"), Seq("dg"))
-      if (!reusable()) StoreLifecycle.withWriterLease(s) {
-        // TOCTOU re-check UNDER the lease (r12 ADVICE low, fixed r14):
-        // between the unlocked probe and lease acquisition another
-        // session may have completed this exact generation — without
-        // the re-check both sessions run the corpus-scale build
-        // (redundant work, not corruption: content-addressed paths
-        // make the second write byte-identical).
-        if (!reusable()) {
-          sigStoreBuilds.incrementAndGet()
-          val docs = spread(Tables.documents(s, d).select("doc_id", "text"))
-          writeSignatureStore(s, docs, bandT, persistent = true)
-          StoreLifecycle.saveStoreTable(
-            docs.select(md5(col("text")).as("dg")).distinct(),
-            digT, 16, Seq("dg"), Seq("dg"))
-          StoreLifecycle.markComplete(s, Seq(bandT, digT), d)
-          StoreLifecycle.sweep(s, Seq("graft_d10_bands", "graft_d10_digests"),
-            fam, fp)
-        }
-      }
+    import graft.analytics.StoreLifecycle.{ensure, saveStoreTable, StoreTable}
+    ensure(s, storeRegistry, d, Seq("documents"),
+      Seq(new StoreTable("graft_d10_bands", 16, Seq("band", "bucket")),
+        new StoreTable("graft_d10_digests", 16, Seq("dg")))) {
+      case Seq(bandT, digT) => (bandT, digT)
+    } { case Seq(bandT, digT) =>
+      sigStoreBuilds.incrementAndGet()
+      val docs = spread(Tables.documents(s, d).select("doc_id", "text"))
+      writeSignatureStore(s, docs, bandT, persistent = true)
+      saveStoreTable(docs.select(md5(col("text")).as("dg")).distinct(),
+        digT, 16, Seq("dg"), Seq("dg"))
       (bandT, digT)
-    })
+    }
   }
 
   /** d10: PRODUCTION incremental ingest — d07's semantics running
@@ -434,19 +396,15 @@ object IncrementalDedup {
     *     append path; without it a band match on an absorbed doc could
     *     never be verified and would be dropped SILENTLY).
     *
-    * The gate queries never absorb — their decisions stay pure functions
-    * of (corpus, batch), which is what makes them oracle-checkable. */
-  /** `compactAtDeltaRows` is the AUTOMATIC-compaction high-water mark
-    * (r10 verdict item 4 — absorb and compaction existed as APIs but
-    * nothing triggered them, so a production stream would grow the
-    * delta unboundedly): when the band delta reaches the mark after an
-    * absorb, [[compactStore]] fires in-line — the delta folds into a
-    * new base generation and drops, restoring O(base) probe cost. The
-    * default (MaxValue) keeps the gate queries' decisions pure
-    * functions of (corpus, batch); returns true iff a compaction ran,
-    * so callers (and the spec) can observe exactly when the policy
-    * fires. The mark is a delta ROW count — one delta-sized metadata
-    * count per absorb, negligible next to the absorb's own writes. */
+    * `compactAtDeltaRows` is the AUTOMATIC-compaction high-water mark
+    * (r10 verdict item 4 — a production stream must not grow the delta
+    * unboundedly): when the band delta reaches it after an absorb,
+    * [[compactStore]] fires in-line (see
+    * [[graft.analytics.StoreLifecycle.compactPastMark]]); returns true
+    * iff a compaction ran. The gate queries never absorb, and the
+    * default mark (MaxValue) never compacts — their decisions stay pure
+    * functions of (corpus, batch), which is what makes them
+    * oracle-checkable. */
   private[graft] def absorbAdmitted(s: SparkSession, bandT: String,
       digT: String, admitted: DataFrame,
       compactAtDeltaRows: Long = Long.MaxValue): Boolean = {
@@ -481,78 +439,28 @@ object IncrementalDedup {
     f.select($"doc_id", $"text")
       .write.mode("append").bucketBy(16, "doc_id").sortBy("doc_id")
       .saveAsTable(absorbedDocs(bandT))
-    if (s.catalog.tableExists(delta) &&
-        s.table(delta).count() >= compactAtDeltaRows) {
-      log.info(s"absorb: band delta for $bandT crossed the " +
-        s"$compactAtDeltaRows-row high-water mark; compacting")
-      compactStore(s, bandT)
-      true
-    } else false
+    graft.analytics.StoreLifecycle.compactPastMark(s, delta,
+      compactAtDeltaRows)(compactStore(s, bandT))
   }
 
-  /** COMPACTION — fold the absorbed band DELTA into a new base
-    * generation with globally-recomputed per-bucket guard stats
-    * (bkt_n/bkt_rep over base ∪ delta — per-absorb stats only bound
-    * degradation within their own append), swapped in by the shared
-    * rename-aside ([[graft.analytics.TableSwap]]) so the old generation
-    * is never deleted before the new one holds the name. The
-    * absorbed-docs text extension is NOT folded — it is corpus content,
-    * not index, and remains the verify text source for absorbed ids.
-    * No-op when nothing was absorbed. */
+  /** COMPACTION of the band delta ([[graft.analytics.StoreLifecycle.compact]]):
+    * the fold recomputes the per-bucket guard stats globally (bkt_n /
+    * bkt_rep over base ∪ delta — per-absorb stats only bound degradation
+    * within their own append) over the `distinct` band rows, which are
+    * unique per (doc_id, band) in a healthy store. The absorbed-docs
+    * text extension is NOT folded — it is corpus content, not index,
+    * and remains the verify text source for absorbed ids. No-op when
+    * nothing was absorbed. */
   private[graft] def compactStore(s: SparkSession, bandT: String): Unit =
-    // writer lease: compaction rewrites the shared base generation —
-    // never concurrently with another session's build/sweep (r12 item 5)
-    graft.analytics.StoreLifecycle.withWriterLease(s) {
-      compactStoreLeased(s, bandT)
-    }
-
-  private def compactStoreLeased(s: SparkSession, bandT: String): Unit = {
-    import graft.analytics.{StoreLifecycle, TableSwap}
-    val delta = bandDelta(bandT)
-    if (!s.catalog.tableExists(delta)) return
-    val gen = bandT + "_compacting"
-    // the base may be a session-MANAGED spec copy (metastore rename
-    // swap) or the content-addressed EXTERNAL store (FS directory swap
-    // — a metastore rename cannot move an external table's data, and a
-    // managed gen cannot land on the occupied external path; r11
-    // review). One flag picks the matching write + swap pair.
-    val external = StoreLifecycle.isExternalStore(s, bandT)
-    s.sql(s"DROP TABLE IF EXISTS $gen")
-    try {
-      // distinct: band rows are unique per (doc_id, band) in a healthy
-      // store; duplicates arise only from a rerun after a failed
-      // post-swap delta drop (the delta already folded into base) — the
-      // distinct makes that rerun idempotent instead of doubling bkt_n
-      val all = s.table(bandT).select("doc_id", "band", "bucket")
-        .unionByName(s.table(delta).select("doc_id", "band", "bucket"))
+    graft.analytics.StoreLifecycle.compact(s, bandT, bandDelta(bandT),
+        16, Seq("band", "bucket")) { (base, delta) =>
+      val all = base.select("doc_id", "band", "bucket")
+        .unionByName(delta.select("doc_id", "band", "bucket"))
         .distinct()
       val sizes = all.groupBy("band", "bucket")
         .agg(count(lit(1)).as("bkt_n"), min(col("doc_id")).as("bkt_rep"))
-      val folded = all.join(sizes, Seq("band", "bucket"))
-      if (external) {
-        StoreLifecycle.saveStoreTable(folded, gen,
-          16, Seq("band", "bucket"), Seq("band", "bucket"))
-        StoreLifecycle.carryMarker(s, bandT, gen)
-        StoreLifecycle.swapInExternal(s, bandT, gen,
-          16, Seq("band", "bucket"), Seq("band", "bucket"))
-      } else {
-        folded.write.bucketBy(16, "band", "bucket").sortBy("band", "bucket")
-          .saveAsTable(gen)
-        TableSwap.swapIn(s, bandT, gen)
-      }
-      s.sql(s"DROP TABLE $delta")
-    } catch {
-      case e: Throwable =>
-        try {
-          s.sql(s"DROP TABLE IF EXISTS $gen")
-          if (external) {
-            val p = StoreLifecycle.tablePath(s, gen)
-            p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-          }
-        } catch { case _: Throwable => () }
-        throw e
+      all.join(sizes, Seq("band", "bucket"))
     }
-  }
 
   val d07Oracle: String =
     """WITH docs AS (SELECT doc_id, text FROM documents),

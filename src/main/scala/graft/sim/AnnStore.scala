@@ -67,106 +67,57 @@ object AnnStore {
     * bounded finalist fetch). */
   private[graft] def ensureAnnStore(s: SparkSession, d: String)
       : (String, Array[(Int, Seq[Float])], Array[Array[Array[Double]]]) = {
-    import graft.analytics.StoreLifecycle
-    // content-addressed generation names: same corpus snapshot → same
-    // tables in EVERY session (r10 verdict item 2 — the applicationId
-    // key abandoned a corpus-scale generation per session)
-    val (fam, fp) = StoreLifecycle.corpusTags(s, d, Seq("embeddings"))
-    val tbl = StoreLifecycle.storeName("graft_s07_lists", fam, fp)
-    val cbT = StoreLifecycle.storeName("graft_s07_cb", fam, fp)
-    val pqT = StoreLifecycle.storeName("graft_s07_pq", fam, fp)
-    // registry key includes the warehouse: sessions with different
-    // warehouse dirs (spec suites isolate theirs) hold independent
-    // physical stores under the same content-addressed name
-    val regKey = s.conf.get("spark.sql.warehouse.dir") + ":" + tbl
-    val cached = annStoreRegistry.get(regKey)
-    if (cached != null) {
-      // the registry is JVM-wide but catalog entries are per-session: a
-      // session restart (spec suites stop/rebuild the session) keeps
-      // the cached codebooks valid while the table entry needs
-      // re-declaring over the surviving files
-      if (s.catalog.tableExists(tbl) || StoreLifecycle.reRegister(s, tbl,
-          ivfK(Tables.embeddings(s, d).count()), Seq("cid"), Seq("cid")))
-        return cached
-      // files gone under a warm registry (externally cleaned warehouse):
-      // evict and fall through to the build path — recoverable, not a
-      // hard failure (r11 ADVICE low)
-      org.slf4j.LoggerFactory.getLogger("graft.sim").warn(
-        s"ANN store $tbl cached in registry but data missing; evicting " +
-          "and rebuilding")
-      annStoreRegistry.remove(regKey)
-      Seq(tbl, cbT, pqT).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+    import graft.analytics.StoreLifecycle.{ensure, saveStoreTable, StoreTable}
+    import s.implicits._
+    // bucket count = the k the WRITER used = ivfK(N), recomputed from the
+    // same (fingerprint-pinned) corpus — NOT cb.length, which undercounts
+    // if a Lloyd round emptied a cluster; a wrong bucket count would
+    // silently misdirect bucket pruning. Lazy: a warm path whose tables
+    // are in the catalog runs no job for it.
+    lazy val k = ivfK(Tables.embeddings(s, d).count())
+    ensure(s, annStoreRegistry, d, Seq("embeddings"),
+      Seq(new StoreTable("graft_s07_lists", k, Seq("cid")),
+        new StoreTable("graft_s07_cb"), new StoreTable("graft_s07_pq"))) {
+      case Seq(tbl, cbT, pqT) =>
+        // a previous session built this generation: read back the
+        // driver-side codebooks (k + 16·256 rows — bounded); NO corpus
+        // pass, no new files
+        val cb = s.table(cbT).collect()
+          .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
+        val pq = s.table(pqT).collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
+          .groupBy(_._1).toArray.sortBy(_._1)
+          .map(_._2.sortBy(_._2).map(_._3.toArray))
+        (tbl, cb, pq)
+    } { case Seq(tbl, cbT, pqT) =>
+      annStoreBuilds.incrementAndGet()
+      val emb = Tables.embeddings(s, d).select($"vec_id", $"embedding")
+        .repartition(s.sparkContext.defaultParallelism)
+      var centroids: Array[(Int, Seq[Float])] = emb.filter($"vec_id" < k)
+        .orderBy($"vec_id").collect()
+        .map(r => (r.getLong(0).toInt, r.getSeq[Float](1)))
+      (1 to 2).foreach { _ => centroids = lloydStep(emb, centroids) }
+      val assignU = coarseAssignU(centroids)
+      // PQ training identical to s05: the 256 lowest-id NORMALIZED
+      // vectors (sample-sized driver collect), 5 local Lloyd iterations
+      val sample: Array[Seq[Float]] = emb.filter($"vec_id" < 256)
+        .orderBy($"vec_id").collect()
+        .map(r => l2normalize(r.getSeq[Float](1)))
+      val pqCb = trainPqCodebooks(sample)
+      val encodeU = udf { v: Seq[Float] => pqEncode(pqCb, l2normalize(v)) }
+      saveStoreTable(
+        emb.withColumn("cid", assignU($"embedding"))
+          .withColumn("code", encodeU($"embedding")),
+        tbl, k, Seq("cid"), Seq("cid"))
+      // codebooks persist beside the lists so a later session reuses
+      // the store WITHOUT retraining (two corpus passes at scale)
+      saveStoreTable(centroids.toSeq.toDF("cid", "c"), cbT)
+      saveStoreTable(
+        pqCb.zipWithIndex.flatMap { case (cents, mi) =>
+          cents.zipWithIndex.map { case (vals, c) => (mi, c, vals.toSeq) }
+        }.toSeq.toDF("mi", "cc", "vals"), pqT)
+      (tbl, centroids, pqCb)
     }
-    annStoreRegistry.computeIfAbsent(regKey, _ => {
-      import s.implicits._
-      // bucket count = the k the WRITER used = ivfK(N), recomputed
-      // from the same (fingerprint-pinned) corpus — NOT cb.length,
-      // which undercounts if a Lloyd round emptied a cluster; a wrong
-      // bucket count would silently misdirect bucket pruning.
-      // (metadata-cheap count: parquet row-group stats)
-      val k = ivfK(Tables.embeddings(s, d).count())
-      // lists reRegister folds into reusability: a complete marker with
-      // vanished lists data must REBUILD, not throw (r11 ADVICE low —
-      // the cold path already rebuilt on unreadable cb/pq)
-      def tryReuse(): Option[(String, Array[(Int, Seq[Float])],
-          Array[Array[Array[Double]]])] = {
-        val reusable = StoreLifecycle.isComplete(s, tbl) &&
-          StoreLifecycle.reRegister(s, cbT) && StoreLifecycle.reRegister(s, pqT) &&
-          StoreLifecycle.reRegister(s, tbl, k, Seq("cid"), Seq("cid"))
-        if (!reusable) None else {
-          // a previous session built this generation: read back the
-          // driver-side codebooks (k + 16·256 rows — bounded) and
-          // re-declare the bucketed lists; NO corpus pass, no new files
-          val cb = s.table(cbT).collect()
-            .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-          val pq = s.table(pqT).collect()
-            .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-            .groupBy(_._1).toArray.sortBy(_._1)
-            .map(_._2.sortBy(_._2).map(_._3.toArray))
-          Some((tbl, cb, pq))
-        }
-      }
-      tryReuse().getOrElse(StoreLifecycle.withWriterLease(s) {
-        // TOCTOU re-check UNDER the lease (r12 ADVICE low, fixed r14,
-        // same pattern as IncrementalDedup.ensureIncrementalStore):
-        // a session that completed this generation while we waited for
-        // the lease makes the rebuild redundant — reuse its files.
-        tryReuse().getOrElse {
-        annStoreBuilds.incrementAndGet()
-        val emb = Tables.embeddings(s, d).select($"vec_id", $"embedding")
-          .repartition(s.sparkContext.defaultParallelism)
-        var centroids: Array[(Int, Seq[Float])] = emb.filter($"vec_id" < k)
-          .orderBy($"vec_id").collect()
-          .map(r => (r.getLong(0).toInt, r.getSeq[Float](1)))
-        (1 to 2).foreach { _ => centroids = lloydStep(emb, centroids) }
-        val assignU = coarseAssignU(centroids)
-        // PQ training identical to s05: the 256 lowest-id NORMALIZED
-        // vectors (sample-sized driver collect), 5 local Lloyd iterations
-        val sample: Array[Seq[Float]] = emb.filter($"vec_id" < 256)
-          .orderBy($"vec_id").collect()
-          .map(r => l2normalize(r.getSeq[Float](1)))
-        val pqCb = trainPqCodebooks(sample)
-        val encodeU = udf { v: Seq[Float] => pqEncode(pqCb, l2normalize(v)) }
-        StoreLifecycle.saveStoreTable(
-          emb.withColumn("cid", assignU($"embedding"))
-            .withColumn("code", encodeU($"embedding")),
-          tbl, k, Seq("cid"), Seq("cid"))
-        // codebooks persist beside the lists so a later session reuses
-        // the store WITHOUT retraining (two corpus passes at scale)
-        StoreLifecycle.saveStoreTable(
-          centroids.toSeq.toDF("cid", "c"), cbT)
-        StoreLifecycle.saveStoreTable(
-          pqCb.zipWithIndex.flatMap { case (cents, mi) =>
-            cents.zipWithIndex.map { case (vals, c) =>
-              (mi, c, vals.toSeq) }
-          }.toSeq.toDF("mi", "cc", "vals"), pqT)
-        StoreLifecycle.markComplete(s, Seq(tbl, cbT, pqT), d)
-        StoreLifecycle.sweep(s,
-          Seq("graft_s07_lists", "graft_s07_cb", "graft_s07_pq"), fam, fp)
-        (tbl, centroids, pqCb)
-        }
-      })
-    })
   }
 
   /** Assign + PQ-encode a batch of NEW vectors against an existing
@@ -420,89 +371,28 @@ object AnnStore {
     }
   }
 
-  /** COMPACTION — the fold-the-delta-in half of the store's LSM
-    * lifecycle (st09 appends into an O(ingested) delta; probes read
-    * base ∪ delta; this periodically merges the two so the delta never
-    * grows unbounded). The merged generation is written as a NEW
-    * bucketed table (same k buckets on cid, same layout — one full
-    * shuffle-free-per-bucket rewrite of base+delta, the cost compaction
-    * pays by definition), then swapped in by metastore RENAME — readers
-    * either see the old base or the complete new one, never a partial
-    * write, and the delta is dropped only after the swap. On failure
-    * before the swap the temp generation is dropped and base/delta are
-    * untouched (crash-safe: re-run compaction). Returns the (unchanged)
-    * base table name. The base's bucket count is preserved — probes'
-    * bucket pruning and PlanSpec pins hold across generations; a
-    * long-lived store would re-train its codebook (and re-bucket) only
-    * on a full rebuild, which is a different operation by design. */
+  /** COMPACTION of the ANN delta ([[graft.analytics.StoreLifecycle.compact]])
+    * — the fold is the `distinct` union of base and delta rows. Returns
+    * the (unchanged) base table name. The base's bucket count is
+    * preserved — probes' bucket pruning and PlanSpec pins hold across
+    * generations; a long-lived store would re-train its codebook (and
+    * re-bucket) only on a full rebuild, which is a different operation
+    * by design. */
   private[graft] def compactDelta(s: SparkSession, baseTbl: String,
-      deltaTbl: String, nBuckets: Int): String =
-    // writer lease: compaction rewrites the shared base generation —
-    // never concurrently with another session's build/sweep (r12 item 5)
-    graft.analytics.StoreLifecycle.withWriterLease(s) {
-      compactDeltaLeased(s, baseTbl, deltaTbl, nBuckets)
-    }
-
-  private def compactDeltaLeased(s: SparkSession, baseTbl: String,
       deltaTbl: String, nBuckets: Int): String = {
-    import graft.analytics.{StoreLifecycle, TableSwap}
-    val gen = baseTbl + "_compacting"
-    // managed spec copy → metastore rename swap; content-addressed
-    // EXTERNAL store → FS directory swap (see compactStore's matching
-    // note — a metastore rename cannot move external data; r11 review)
-    val external = StoreLifecycle.isExternalStore(s, baseTbl)
-    s.sql(s"DROP TABLE IF EXISTS $gen")
-    try {
-      // distinct: makes a rerun after a failed post-swap delta drop
-      // idempotent (the delta's rows are already in base then — without
-      // it they would fold in twice; see compactStore's matching note)
-      val folded = s.table(baseTbl).unionByName(s.table(deltaTbl)).distinct()
-      if (external) {
-        StoreLifecycle.saveStoreTable(folded, gen,
-          nBuckets, Seq("cid"), Seq("cid"))
-        StoreLifecycle.carryMarker(s, baseTbl, gen)
-        StoreLifecycle.swapInExternal(s, baseTbl, gen,
-          nBuckets, Seq("cid"), Seq("cid"))
-      } else {
-        folded.write.bucketBy(nBuckets, "cid").sortBy("cid")
-          .saveAsTable(gen)
-        // rename-aside swap (see TableSwap for the crash-safety contract)
-        TableSwap.swapIn(s, baseTbl, gen)
-      }
-      s.sql(s"DROP TABLE $deltaTbl")
-      baseTbl
-    } catch {
-      case e: Throwable =>
-        // pre-swap failure: discard the partial generation, keep
-        // base+delta readable; re-running compaction is the recovery
-        try {
-          s.sql(s"DROP TABLE IF EXISTS $gen")
-          if (external) {
-            val p = StoreLifecycle.tablePath(s, gen)
-            p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-          }
-        } catch { case _: Throwable => () }
-        throw e
-    }
+    graft.analytics.StoreLifecycle.compact(s, baseTbl, deltaTbl,
+      nBuckets, Seq("cid"))(_.unionByName(_).distinct())
+    baseTbl
   }
 
-  /** AUTOMATIC-compaction policy for the ANN delta (r10 verdict item 4
-    * — the manual [[compactDelta]] API needed a trigger): folds the
-    * delta into a new base generation iff it has reached
-    * `maxDeltaRows`. Returns true iff a compaction ran. One delta-sized
-    * metadata count per call; with the default MaxValue mark this is
-    * the no-op the gate queries rely on (their base files are
-    * fingerprint-pinned immutable). */
+  /** AUTOMATIC-compaction policy for the ANN delta: [[compactDelta]]
+    * once the delta holds `maxDeltaRows` rows (see
+    * [[graft.analytics.StoreLifecycle.compactPastMark]]). Returns true
+    * iff a compaction ran. */
   private[graft] def maybeCompactDelta(s: SparkSession, baseTbl: String,
       deltaTbl: String, nBuckets: Int, maxDeltaRows: Long): Boolean =
-    s.catalog.tableExists(deltaTbl) &&
-      s.table(deltaTbl).count() >= maxDeltaRows && {
-        org.slf4j.LoggerFactory.getLogger("graft.sim").info(
-          s"ANN delta $deltaTbl crossed the $maxDeltaRows-row high-water " +
-            "mark; compacting into a new base generation")
-        compactDelta(s, baseTbl, deltaTbl, nBuckets)
-        true
-      }
+    graft.analytics.StoreLifecycle.compactPastMark(s, deltaTbl, maxDeltaRows)(
+      compactDelta(s, baseTbl, deltaTbl, nBuckets))
 
   /** The s08/s09 candidate probe: codes selected BEFORE the join so the
     * store scan's ReadSchema carries (vec_id, cid, code) and never the

@@ -464,38 +464,6 @@ object WarcQueries {
       |  (SELECT MAX(sz) FROM cl) AS max_component,
       |  (SELECT CAST(SUM(root) AS BIGINT) FROM cl) AS label_sum""".stripMargin
 
-  /** w08: PageRank over the domain link graph — 10 damped (d = 0.85)
-    * power-iteration rounds in FIXED-POINT integer arithmetic: ranks are
-    * scaled by 10¹² and every divide is an integer `div`, so the
-    * iteration is bit-exact on both engines — double contributions would
-    * make the last ulp depend on partial-aggregation merge order (the
-    * same determinism rule as s04's centroid sums). The quadratic
-    * cross-host link gives hosts varying in-degrees, so the stationary
-    * distribution is genuinely non-uniform. Driver loop = iteration
-    * control only; localCheckpoint bounds lineage growth across rounds.
-    * No dangling-mass term is needed: every host links to itself via
-    * /rel, so out-degree ≥ 1 everywhere.
-    *
-    * Round shape (r22, guide §2.4): ONE exchange per round — the
-    * contribution transpose (src-keyed rows re-keyed by dst), which is
-    * the only data movement PageRank fundamentally requires. `el` is
-    * hash-partitioned on src ONCE at a size-derived count and each
-    * round's output lands hash-partitioned on id at the same count (the
-    * checkpoint preserves it), so the rank join zips partitions with no
-    * exchange; AQE coalescing is suspended inside the loop so the
-    * aggregation exchange keeps that count instead of re-coalescing per
-    * round (the count is already size-derived — coalescing could only
-    * break the co-partitioning, not improve it). Map-side partial
-    * aggregation stays on the transpose, so the shuffle carries
-    * near-node-scale partial sums, not edge-scale rows.
-    *
-    * The former per-round `nodes` LEFT join is dropped as provably
-    * redundant: every node IS the dst of at least one edge — a src is
-    * always a parsed page's own host class, whose /rel self-link plants
-    * the (c, c) edge, so dsts ⊇ srcs and nodes = srcs ∪ dsts = dsts —
-    * hence the contribution aggregate already emits exactly one row per
-    * node and `sumc` is never null. Same rows, same values (oracle
-    * unchanged and re-verified). */
   /** One PageRank power-iteration round over co-partitioned inputs —
     * exposed for plan pinning and the committed plan evidence: with `el`
     * hash-partitioned on src and `ranks` hash-partitioned on id at the
@@ -552,13 +520,56 @@ object WarcQueries {
     }
   }
 
-  def w08_pagerank(spark: SparkSession, d: String): DataFrame = {
+  /** w08: PageRank over the domain link graph — 10 damped (d = 0.85)
+    * power-iteration rounds in FIXED-POINT integer arithmetic: ranks are
+    * scaled by 10¹² and every divide is an integer `div`, so the
+    * iteration is bit-exact on both engines — double contributions would
+    * make the last ulp depend on partial-aggregation merge order (the
+    * same determinism rule as s04's centroid sums). The quadratic
+    * cross-host link gives hosts varying in-degrees, so the stationary
+    * distribution is genuinely non-uniform. Driver loop = iteration
+    * control only; localCheckpoint bounds lineage growth across rounds.
+    * No dangling-mass term is needed: every host links to itself via
+    * /rel, so out-degree ≥ 1 everywhere.
+    *
+    * Round shape (r22, guide §2.4): ONE exchange per round — the
+    * contribution transpose (src-keyed rows re-keyed by dst), which is
+    * the only data movement PageRank fundamentally requires. `el` is
+    * hash-partitioned on src ONCE at a size-derived count and each
+    * round's output lands hash-partitioned on id at the same count (the
+    * checkpoint preserves it), so the rank join zips partitions with no
+    * exchange; AQE coalescing is suspended inside the loop so the
+    * aggregation exchange keeps that count instead of re-coalescing per
+    * round (the count is already size-derived — coalescing could only
+    * break the co-partitioning, not improve it). Map-side partial
+    * aggregation stays on the transpose, so the shuffle carries
+    * near-node-scale partial sums, not edge-scale rows.
+    *
+    * The former per-round `nodes` LEFT join is dropped as provably
+    * redundant: every node IS the dst of at least one edge — a src is
+    * always a parsed page's own host class, whose /rel self-link plants
+    * the (c, c) edge, so dsts ⊇ srcs and nodes = srcs ∪ dsts = dsts —
+    * hence the contribution aggregate already emits exactly one row per
+    * node and `sumc` is never null. Same rows, same values (oracle
+    * unchanged and re-verified). */
+  def w08_pagerank(spark: SparkSession, d: String): DataFrame =
+    w08Ranks(spark, hostEdges(spark, d).localCheckpoint(true))
+
+  /** w08's power iteration over a checkpointed `(src, dst)` edge list.
+    * The loop relies on dsts ⊇ srcs (see [[w08_pagerank]]) and checks
+    * it once: a src that is never a dst would silently vanish from the
+    * rank output from round 1, so it throws instead, naming how many
+    * nodes. */
+  private[graft] def w08Ranks(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
     val Scale = 1000000000000L
-    val edges = hostEdges(spark, d).localCheckpoint(true)
     val nodes = edges.select($"src".as("id"))
       .union(edges.select($"dst".as("id"))).distinct().localCheckpoint(true)
     val n = nodes.count() // iteration constant, not data movement
+    val missing = n - edges.select($"dst").distinct().count()
+    if (missing != 0)
+      throw new IllegalStateException(s"w08: $missing node(s) are a src " +
+        "but never a dst (no self-edge); PageRank would drop them")
     // Size-derived loop partition count (never a local[32] constant):
     // the loop's widest shuffle is bounded by one (dst, contrib) long
     // pair per edge (~24 B unsafe-row bytes), sized to AQE's own

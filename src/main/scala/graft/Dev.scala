@@ -499,10 +499,8 @@ object Dev {
     // running totals, join buffers) grows in KEYS (10× users), which is
     // how a real stream scales. ts rides through in whatever encoding
     // the source shipped (nanos-long or native micros timestamp) — the
-    // schema-adaptive loaders read either; the legacy conf below only
-    // matters for the nanos shape.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = spark.read.parquet(s"$srcDir/events.parquet")
+    // schema-adaptive loaders read either.
+    val ev = graft.analytics.Tables.eventsFile(spark, srcDir)
     val evOut = (0 until replicas).map { r =>
       if (r == 0) ev
       else ev.select((col("event_id") + lit(r * stride)).as("event_id"),

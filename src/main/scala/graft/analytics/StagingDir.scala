@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.SparkSession
 
 /** Scratch directories for operators that round-trip data through files
-  * (io01's jsonl interchange, st08's streaming drain, …).
+  * (io01's jsonl interchange, the streaming parquet drain, …).
   *
   * The one rule: the directory must live on the SESSION'S configured
   * filesystem, not in a driver-local `java.nio` temp dir — a local path

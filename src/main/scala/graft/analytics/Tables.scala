@@ -33,10 +33,15 @@ object Tables {
     * source; micros*1000 otherwise — identical to DuckDB `epoch_ns(ts)`
     * on the same file).
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    // must be set before the read resolves, for the nanos-as-long shape
+  def events(s: SparkSession, d: String): DataFrame = adaptEvents(eventsFile(s, d))
+
+  /** The events parquet as stored, before [[adaptEvents]] — for callers
+    * that need the file's own schema (the stream reader) or rows
+    * (Dev's corpus scaler). The one place that sets the nanos-as-long
+    * legacy conf: it must be set before the read resolves. */
+  private[graft] def eventsFile(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    adaptEvents(apply(s, d, "events"))
+    apply(s, d, "events")
   }
 
   /** Expected events columns; `ts` is checked separately by dtype. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import StreamingOps.{withStreamShuffle, drainToParquet}
@@ -29,49 +29,39 @@ object StreamStoreIngest {
     * as parquet from the executors. Micro-batching cannot change the
     * outcome (each doc is admitted against the store only, never
     * against other batch docs), so the drained rollup equals d07's
-    * batch decision exactly — same oracle. No memory-sink variant: the
-    * per-batch plan is a multi-join DAG that only the foreachBatch
-    * batch API can express (a single streaming plan would need a
-    * stream-stream join for the decision assembly). */
-  def st08_stream_store_dedup(s: SparkSession, d: String): DataFrame =
-    // drain dir on the session's FS (not driver-local — r10 review;
-    // see StagingDir for the cluster failure modes)
-    graft.analytics.StagingDir.withStagingDir(s, "graft-st08") { dir =>
-      st08_stream_store_dedup_files(s, d, dir.toString)
-    }
-
-  private[graft] def st08_stream_store_dedup_files(s: SparkSession, d: String,
-      dir: String): DataFrame = withStreamShuffle(s) {
-    val (bandT, digT) = graft.dedup.IncrementalDedup.ensureIncrementalStore(s, d)
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-    val toks = split(trim(col("text")), "\\s+")
-    val dropped = array_join(slice(toks, lit(1), size(toks) - 1), " ")
-    // planted ids derived from the observed id space, like the batch
-    // twin (IncrementalDedup.plantedBatch) and st09 — a fixed +300000
-    // collides with real ids past a 300k-doc corpus (r10 verdict item
-    // 3). The offset comes from a bounded max() over the STATIC read of
-    // the same dir (a stream can't aggregate before deriving).
-    val off = graft.dedup.IncrementalDedup.plantedOffsetFor(s, d)
-    val batchStream = stream.filter(col("doc_id") % 31 === 0)
-      .select((col("doc_id") + off).as("doc_id"), col("text"))
-      .unionByName(stream.filter(col("doc_id") % 37 === 0)
-        .select((col("doc_id") + 2L * off).as("doc_id"), dropped.as("text")))
+    * batch decision exactly — same oracle. The per-batch plan is a
+    * multi-join DAG that only the foreachBatch batch API can express (a
+    * single streaming plan would need a stream-stream join for the
+    * decision assembly), so it runs as the drain's `perBatch`. */
+  def st08_stream_store_dedup(s: SparkSession, d: String): DataFrame = {
+    import graft.dedup.IncrementalDedup
+    val (bandT, digT) = IncrementalDedup.ensureIncrementalStore(s, d)
     // the rollup is the batch operators' own (decisionRollup) — the
     // summary schema cannot drift between d10 and its streaming twin
-    val finish = (t: DataFrame) => graft.dedup.IncrementalDedup.decisionRollup(t)
-    drainToParquet(s, dir, overwritePerBatch = false,
-      fb => batchStream.writeStream.foreachBatch(
-          (b: DataFrame, id: Long) => fb(
-            graft.dedup.IncrementalDedup.storeAdmissionDecisions(s, d, b, bandT, digT), id))
-        .outputMode("append").trigger(Trigger.AvailableNow()).start(),
-      finish)
+    drainToParquet(s, "st08", OutputMode.Append(), IncrementalDedup.decisionRollup,
+        (b, write) => write(
+          IncrementalDedup.storeAdmissionDecisions(s, d, b, bandT, digT))) { _ =>
+      val docsSchema = StructType(Seq(
+        StructField("doc_id", LongType),
+        StructField("text", StringType),
+        StructField("lang", StringType),
+        StructField("source", StringType),
+        StructField("n_chars", LongType)))
+      val stream = s.readStream.schema(docsSchema)
+        .option("pathGlobFilter", "documents.parquet").parquet(d)
+      val toks = split(trim(col("text")), "\\s+")
+      val dropped = array_join(slice(toks, lit(1), size(toks) - 1), " ")
+      // planted ids derived from the observed id space, like the batch
+      // twin (IncrementalDedup.plantedBatch) and st09 — a fixed +300000
+      // collides with real ids past a 300k-doc corpus (r10 verdict item
+      // 3). The offset comes from a bounded max() over the STATIC read of
+      // the same dir (a stream can't aggregate before deriving).
+      val off = IncrementalDedup.plantedOffsetFor(s, d)
+      stream.filter(col("doc_id") % 31 === 0)
+        .select((col("doc_id") + off).as("doc_id"), col("text"))
+        .unionByName(stream.filter(col("doc_id") % 37 === 0)
+          .select((col("doc_id") + 2L * off).as("doc_id"), dropped.as("text")))
+    }
   }
 
   val st08Oracle: String = graft.dedup.IncrementalDedup.oracle("d07_incremental_dedup")
@@ -238,14 +228,7 @@ object StreamStoreIngest {
     * the tail is p01's four cool-keyed shuffles over the ADMITTED
     * subset — the recrawl filter shrinks the corpus before the
     * expensive stages, which is the point of admission-first layout. */
-  def p03_warc_stream_pipeline(s: SparkSession, d: String): DataFrame =
-    graft.analytics.StagingDir.withStagingDir(s, "graft-p03") { dir =>
-      p03_warc_stream_pipeline_files(s, d, dir.toString)
-    }
-
-  private[graft] def p03_warc_stream_pipeline_files(s: SparkSession,
-      d: String, dir: String): DataFrame = withStreamShuffle(s) {
-    import s.implicits._
+  def p03_warc_stream_pipeline(s: SparkSession, d: String): DataFrame = {
     val (bandT, digT) = graft.dedup.IncrementalDedup.ensureIncrementalStore(s, d)
     // the crawl carries NOVEL pages beside the recrawled surface — the
     // planted-batch device (st08's): token-REVERSED twins under derived
@@ -257,31 +240,10 @@ object StreamStoreIngest {
     // downstream tail are exercised. Offset derived from the observed
     // id space, never a fixed constant (r10 verdict item 3).
     val off = graft.dedup.IncrementalDedup.plantedOffsetFor(s, d)
-    StreamingOps.withStagedWarcStream(s, d, "p03") { staged =>
-      val res = graft.warc.Pipeline.urlResources(
-        graft.warc.WarcSource.fromBytes(staged))
-        .select(
-          regexp_extract(col("url"), "/page/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          col("text_content").as("text"),
-          col("hostname").as("source"))
-      // ONE pass over the parsed surface: a self-union of the streaming
-      // frame would scan — and re-run the whole WARC parse chain on —
-      // the source twice; exploding a 2-element (original, reversed)
-      // array per parsed row plants the novel twin at zero extra parse
-      // cost (lambda-free: explode/reverse, no HOFs on this lineage)
-      val toks = split(trim(col("text")), "\\s+")
-      val crawl = res
-        .select(col("doc_id"), col("source"), posexplode(array(
-          col("text"), array_join(reverse(toks), " "))).as(Seq("v", "text")))
-        .select((col("doc_id") + col("v") * off).as("doc_id"),
-          col("text"), col("source"))
-      val finish = (t: DataFrame) => {
-        val tp = graft.pipeline.TrainingPipeline
-        tp.shardedAuditOf(tp.gateVerdictOf(t), tp.resolveThresholdCap(t))
-      }
-      drainToParquet(s, dir, overwritePerBatch = false,
-        fb => crawl.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+    val tp = graft.pipeline.TrainingPipeline
+    drainToParquet(s, "p03", OutputMode.Append(),
+        t => tp.shardedAuditOf(tp.gateVerdictOf(t), tp.resolveThresholdCap(t)),
+        (b, write) => {
           // PIN the micro-batch for its four consumers (guide §1.1,
           // §2.3 — r22, profiled first): a foreachBatch frame re-runs
           // its source plan per action, and b's source plan IS the full
@@ -297,11 +259,28 @@ object StreamStoreIngest {
             // novel docs continue into the training corpus
             val dec = graft.dedup.IncrementalDedup.storeAdmissionDecisions(
               s, d, pinned.select(col("doc_id"), col("text")), bandT, digT)
-            fb(pinned.join(dec.filter(col("ex") === 0 && col("nr") === 0)
-              .select(col("doc_id")), "doc_id"), id)
+            write(pinned.join(dec.filter(col("ex") === 0 && col("nr") === 0)
+              .select(col("doc_id")), "doc_id"))
           } finally pinned.unpersist(false)
-        }.outputMode("append").trigger(Trigger.AvailableNow()).start(),
-        finish)
+        }) { dir =>
+      val res = graft.warc.Pipeline.urlResources(
+        graft.warc.WarcSource.fromBytes(StreamingOps.stagedWarcStream(s, d, dir)))
+        .select(
+          regexp_extract(col("url"), "/page/(\\d+)$", 1)
+            .cast("long").as("doc_id"),
+          col("text_content").as("text"),
+          col("hostname").as("source"))
+      // ONE pass over the parsed surface: a self-union of the streaming
+      // frame would scan — and re-run the whole WARC parse chain on —
+      // the source twice; exploding a 2-element (original, reversed)
+      // array per parsed row plants the novel twin at zero extra parse
+      // cost (lambda-free: explode/reverse, no HOFs on this lineage)
+      val toks = split(trim(col("text")), "\\s+")
+      res
+        .select(col("doc_id"), col("source"), posexplode(array(
+          col("text"), array_join(reverse(toks), " "))).as(Seq("v", "text")))
+        .select((col("doc_id") + col("v") * off).as("doc_id"),
+          col("text"), col("source"))
     }
   }
 

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.hadoop.fs.Path
 
 import graft.dedup.Contamination
 
@@ -26,17 +27,13 @@ import graft.dedup.Contamination
   */
 object StreamingOps {
 
-  private def streamEvents(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def streamEvents(s: SparkSession, d: String): DataFrame =
     // readStream requires a user-supplied schema: take the file's own
     // (footer-only read, no data scan), so whatever shape the driver
-    // regenerated is the shape the stream parses.
-    val fileSchema = s.read
-      .option("pathGlobFilter", "events.parquet").parquet(d).schema
+    // regenerated is the shape the stream parses
     graft.analytics.Tables.adaptEvents(
-      s.readStream.schema(fileSchema)
+      s.readStream.schema(graft.analytics.Tables.eventsFile(s, d).schema)
         .option("pathGlobFilter", "events.parquet").parquet(d))
-  }
 
   /** Run `body` with streaming-sized shuffle parallelism, then restore the
     * caller's ACTUAL prior value. Each shuffle partition carries an
@@ -54,108 +51,63 @@ object StreamingOps {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prior)
   }
 
-  /** Production drain (r5 verdict item 5): every st0x memory sink
-    * materializes its results on the DRIVER, which is fine for the
-    * aggregate-sized oracle path but becomes the limit at 100× key
-    * cardinality. `foreachBatch` + parquet is the production shape for
-    * complete/update-mode queries (the built-in file sink is
-    * append-only): each micro-batch lands as a distributed executor-side
-    * write — `overwrite` for complete mode (the last batch IS the final
-    * state), `append` for update mode (read-back reduces to the last
-    * update per key, exactly the memory path's reduction). The driver
-    * never holds result rows; the returned frame is read back from
-    * parquet, `finish`ed, and checkpointed off the files so the caller
-    * may delete `dir`. */
-  private[graft] def drainToParquet(s: SparkSession, dir: String,
-      overwritePerBatch: Boolean,
-      attach: ((DataFrame, Long) => Unit) => org.apache.spark.sql.streaming.StreamingQuery,
-      finish: DataFrame => DataFrame): DataFrame = {
-    // capture the batch schema so an all-empty stream still drains to
-    // the memory path's empty frame instead of crashing on a directory
-    // that no batch ever wrote (code-review finding)
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    val q = attach { (batch, _) =>
-      schema = batch.schema
-      if (overwritePerBatch)
-        batch.write.mode("overwrite").parquet(dir)
-      else {
-        // materialize ONCE before the emptiness probe: `batch.isEmpty`
-        // followed by `batch.write` would execute the per-batch plan
-        // twice — for st08 that plan is the multi-join store admission,
-        // i.e. ~2x the cost of the operator being measured. The
-        // checkpointed blocks are reference-tracked and reclaimed when
-        // `m` drops out of scope at the end of the micro-batch.
-        val m = batch.localCheckpoint(true)
-        if (!m.isEmpty) m.write.mode("append").parquet(dir)
+  /** The one way a stream's result leaves the stream. `stream` is built
+    * inside a fresh staging dir on the session's filesystem (it may stage
+    * its own source files under the dir it is handed — st05/p03) and
+    * inside the streaming shuffle width, then drained with AvailableNow
+    * through `foreachBatch` into parquet written from the EXECUTORS: the
+    * driver never holds result rows (a memory sink would collect every
+    * row there — st10/st11 emit one per corpus vector/doc). The write
+    * mode follows the output mode: complete overwrites (the last batch
+    * IS the final state), update and append append (update's read-back
+    * reduces to the last update per key in `finish`). `perBatch` maps a
+    * micro-batch to what is written (st08/p03's store admission); the
+    * default writes the batch as is.
+    *
+    * The checkpoint sits under the staging dir, so a failed query
+    * leaves nothing behind (Spark keeps its own temporary checkpoint on
+    * failure). The read-back passes the captured batch schema (no
+    * footer-inference job), and the `finish`ed frame is checkpointed off
+    * the files before the staging dir is deleted. */
+  private[graft] def drainToParquet(s: SparkSession, tag: String,
+      mode: OutputMode, finish: DataFrame => DataFrame,
+      perBatch: (DataFrame, DataFrame => Unit) => Unit = (b, write) => write(b))(
+      stream: Path => DataFrame): DataFrame =
+    graft.analytics.StagingDir.withStagingDir(s, s"graft-$tag") { root =>
+      withStreamShuffle(s) {
+        val out = new Path(root, "out").toString
+        val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
+        @volatile var schema: StructType = null
+        val write = (df: DataFrame) => {
+          schema = df.schema
+          df.write.mode(writeMode).parquet(out)
+        }
+        stream(root).writeStream
+          .option("checkpointLocation", new Path(root, "ckpt").toString)
+          .foreachBatch((b: DataFrame, _: Long) => perBatch(b, write))
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+        if (schema == null) throw new IllegalStateException(
+          s"$tag stream drained no batches — check the source wiring " +
+            "(e.g. a pathGlobFilter matching no file)")
+        finish(s.read.schema(schema).parquet(out)).localCheckpoint(true)
       }
     }
-    q.awaitTermination()
-    val outPath = new org.apache.hadoop.fs.Path(dir)
-    val dirExists = outPath
-      .getFileSystem(s.sparkContext.hadoopConfiguration).exists(outPath)
-    val raw =
-      if (dirExists) s.read.parquet(dir)
-      else if (schema != null)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else throw new IllegalStateException(
-        s"stream drained no batches and wrote nothing to $dir — " +
-          "check the source wiring (e.g. a pathGlobFilter matching no file)")
-    finish(raw).localCheckpoint(true)
-  }
-
-  /** Materialize a memory-sink-backed result and DROP the sink table:
-    * each st0x run registers a uniquely-named memory sink, so in a
-    * shared session repeated runs would accumulate driver memory
-    * forever (r3 advisory). `localCheckpoint(true)` copies the rows into
-    * reference-tracked blocks the ContextCleaner reclaims once the
-    * returned DataFrame is dropped; the sink table itself is then
-    * unregistered immediately. */
-  private def drainSink(s: SparkSession, name: String,
-      finish: DataFrame => DataFrame = identity): DataFrame = {
-    val out = finish(s.table(name)).localCheckpoint(true)
-    s.catalog.dropTempView(name)
-    out
-  }
 
   /** st01: streaming tumbling-window aggregation with a watermark,
-    * drained with AvailableNow into a memory sink (oracle path) or a
-    * foreachBatch parquet drain (production path — see
-    * [[st01_stream_window_files]]). */
+    * complete mode, drained with AvailableNow. */
   def st01_stream_window(s: SparkSession, d: String): DataFrame =
-    st01Impl(s, d, fileDrainDir = None)
-
-  /** st01 through the production parquet drain: complete-mode batches
-    * overwrite `dir`, so the final directory IS the final window state
-    * and no result row ever transits the driver. Hash-equal to the
-    * memory path (spec-pinned). */
-  private[graft] def st01_stream_window_files(s: SparkSession, d: String,
-      dir: String): DataFrame = st01Impl(s, d, fileDrainDir = Some(dir))
-
-  private def st01Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
-    val agg = streamEvents(s, d)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double")
-          .as("total_value"))
-      .select(col("window.start").as("hour"), col("event_type"),
-        col("n_events"), col("total_value"))
-    val finish = (t: DataFrame) => t.orderBy("hour", "event_type")
-    fileDrainDir match {
-      case Some(dir) =>
-        drainToParquet(s, dir, overwritePerBatch = true,
-          fb => agg.writeStream.foreachBatch(fb)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start(),
-          finish)
-      case None =>
-        val name = s"st01_sink_${System.nanoTime()}"
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, name, finish)
+    drainToParquet(s, "st01", OutputMode.Complete(),
+        _.orderBy("hour", "event_type")) { _ =>
+      streamEvents(s, d)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,2)")).cast("double")
+            .as("total_value"))
+        .select(col("window.start").as("hour"), col("event_type"),
+          col("n_events"), col("total_value"))
     }
-  }
 
   val st01Oracle: String =
     """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
@@ -177,31 +129,26 @@ object StreamingOps {
       .orderBy(col("user_id"))
   }
 
-  /** st02 as a real stream with the production parquet drain: the same
-    * 30-minute-gap session windows computed incrementally
-    * (`session_window` state merges sessions across micro-batches) in
-    * complete mode — append would need the watermark to pass each
-    * session's close, which never happens for the tail of a bounded
-    * drain, silently dropping the last ~gap of sessions. Complete-mode
-    * batches overwrite `dir` (the last batch IS the final session set,
-    * written from the executors); the per-user rollup happens on the
-    * read-back, batch-side. Hash-equal to the batch path (spec-pinned). */
-  private[graft] def st02_session_window_files(s: SparkSession, d: String,
-      dir: String): DataFrame = withStreamShuffle(s) {
-    val sessions = streamEvents(s, d)
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("n_events"))
-    val finish = (t: DataFrame) => t.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_sessions"),
-        sum(col("n_events")).as("n_events"),
-        max(col("n_events")).as("max_session_events"))
-      .orderBy(col("user_id"))
-    drainToParquet(s, dir, overwritePerBatch = true,
-      fb => sessions.writeStream.foreachBatch(fb)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start(),
-      finish)
-  }
+  /** st02 as a real stream: the same 30-minute-gap session windows
+    * computed incrementally (`session_window` state merges sessions
+    * across micro-batches) in complete mode — append would need the
+    * watermark to pass each session's close, which never happens for the
+    * tail of a bounded drain, silently dropping the last ~gap of
+    * sessions. The per-user rollup happens on the read-back, batch-side.
+    * Row-identical to the batch registry row (spec-pinned). */
+  private[graft] def st02_session_window_stream(s: SparkSession,
+      d: String): DataFrame =
+    drainToParquet(s, "st02", OutputMode.Complete(),
+        _.groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n_sessions"),
+            sum(col("n_events")).as("n_events"),
+            max(col("n_events")).as("max_session_events"))
+          .orderBy(col("user_id"))) { _ =>
+      streamEvents(s, d)
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"), col("n_events"))
+    }
 
   val st02Oracle: String =
     """WITH e AS (
@@ -230,36 +177,14 @@ object StreamingOps {
     * per type must equal the base table's. State-backed exact dedup is
     * the streaming twin of d01. */
   def st03_stream_dedup(s: SparkSession, d: String): DataFrame =
-    st03Impl(s, d, fileDrainDir = None)
-
-  /** st03 through the production parquet drain: complete-mode batches
-    * overwrite `dir` from the executors. Hash-equal to the memory path
-    * (spec-pinned). */
-  private[graft] def st03_stream_dedup_files(s: SparkSession, d: String,
-      dir: String): DataFrame = st03Impl(s, d, fileDrainDir = Some(dir))
-
-  private def st03Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
-    val ev = streamEvents(s, d)
-    val agg = ev.union(ev)
-      .dropDuplicates("event_id")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-    val finish = (t: DataFrame) => t.orderBy("event_type")
-    fileDrainDir match {
-      case Some(dir) =>
-        drainToParquet(s, dir, overwritePerBatch = true,
-          fb => agg.writeStream.foreachBatch(fb)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start(),
-          finish)
-      case None =>
-        val name = s"st03_sink_${System.nanoTime()}"
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, name, finish)
+    drainToParquet(s, "st03", OutputMode.Complete(),
+        _.orderBy("event_type")) { _ =>
+      val ev = streamEvents(s, d)
+      ev.union(ev)
+        .dropDuplicates("event_id")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
     }
-  }
 
   val st03Oracle: String =
     """SELECT event_type, COUNT(*) AS n_events
@@ -270,56 +195,28 @@ object StreamingOps {
     * time-range condition bounds the join state). Oracle = the batch
     * interval join. */
   def st04_stream_stream_join(s: SparkSession, d: String): DataFrame =
-    st04Impl(s, d, fileDrainDir = None)
-
-  /** st04 through Spark's NATIVE parquet file sink: stream-stream joins
-    * emit in Append mode, which is exactly what the built-in file sink
-    * supports — so this variant needs no foreachBatch at all: matched
-    * pairs land as exactly-once parquet via the sink's own commit log
-    * (checkpointLocation), written from the executors. The read-back
-    * aggregation is the same batch-side rollup the memory path applies.
-    * Hash-equal to the memory path (spec-pinned). */
-  private[graft] def st04_stream_stream_join_files(s: SparkSession, d: String,
-      dir: String): DataFrame = st04Impl(s, d, fileDrainDir = Some(dir))
-
-  private def st04Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
-    val ev = streamEvents(s, d)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("c_ts", "2 hours")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "2 hours")
-    // stream-stream joins emit in Append mode only: stream the matched
-    // pairs into the sink, aggregate the sink table batch-side
-    val pairs = purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") <= col("p_ts") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
-      .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
-    val finish = (t: DataFrame) => t.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_pairs"),
-        countDistinct(col("purchase_id")).as("n_purchases"))
-      .orderBy("user_id")
-    fileDrainDir match {
-      case Some(dir) =>
-        val q = pairs.writeStream.format("parquet")
-          .option("path", s"$dir/out")
-          .option("checkpointLocation", s"$dir/ckpt")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        finish(s.read.parquet(s"$dir/out")).localCheckpoint(true)
-      case None =>
-        val name = s"st04_sink_${System.nanoTime()}"
-        val q = pairs.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, name, finish)
+    // stream-stream joins emit in Append mode only: drain the matched
+    // pairs, aggregate them batch-side on the read-back
+    drainToParquet(s, "st04", OutputMode.Append(),
+        _.groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n_pairs"),
+            countDistinct(col("purchase_id")).as("n_purchases"))
+          .orderBy("user_id")) { _ =>
+      val ev = streamEvents(s, d)
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+          col("event_id").as("click_id"))
+        .withWatermark("c_ts", "2 hours")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+          col("event_id").as("purchase_id"))
+        .withWatermark("p_ts", "2 hours")
+      purchases.join(clicks,
+          col("p_user") === col("c_user") &&
+            col("c_ts") <= col("p_ts") &&
+            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
+        .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
     }
-  }
 
   val st04Oracle: String =
     """SELECT p.user_id, COUNT(*) AS n_pairs,
@@ -405,52 +302,27 @@ object StreamingOps {
     * integer-exact in double, and the long sum is order-insensitive —
     * the same determinism rule as s04/w08; a double running sum would
     * depend on batch arrival order). */
-  def st06_running_totals(s: SparkSession, d: String): DataFrame =
-    st06Impl(s, d, fileDrainDir = None)
-
-  /** st06 through the production parquet drain: update-mode batches
-    * append to `dir` (one row per touched key per batch, written from
-    * the executors), and the read-back reduces to the last update per
-    * key — the same reduction the memory path applies. Hash-equal to
-    * the memory path (spec-pinned). */
-  private[graft] def st06_running_totals_files(s: SparkSession, d: String,
-      dir: String): DataFrame = st06Impl(s, d, fileDrainDir = Some(dir))
-
-  private def st06Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
+  def st06_running_totals(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val ev = streamEvents(s, d)
-      .select($"user_id", $"value").as[(Long, Double)]
-    val totals = ev.groupByKey(_._1)
-      .mapGroupsWithState[(Long, Long), UserTotals](
-        GroupStateTimeout.NoTimeout()) { (uid, rows, state) =>
-        var (n, cents) = state.getOption.getOrElse((0L, 0L))
-        rows.foreach { case (_, v) => n += 1; cents += math.round(v * 100) }
-        state.update((n, cents))
-        UserTotals(uid, n, cents / 100.0)
-      }
+    import org.apache.spark.sql.streaming.GroupStateTimeout
     // Update mode emits one row per (user, batch); the LAST update per
     // user is the running total — dedup by max n_events per user
-    val finish = (t: DataFrame) => t.groupBy($"user_id")
-      .agg(max(struct($"n_events", $"total_value")).as("m"))
-      .select($"user_id", $"m.n_events".as("n_events"),
-        $"m.total_value".as("total_value"))
-      .orderBy($"user_id")
-    fileDrainDir match {
-      case Some(dir) =>
-        drainToParquet(s, dir, overwritePerBatch = false,
-          fb => totals.writeStream.foreachBatch(
-              (b: org.apache.spark.sql.Dataset[UserTotals], id: Long) =>
-                fb(b.toDF(), id))
-            .outputMode(OutputMode.Update()).trigger(Trigger.AvailableNow()).start(),
-          finish)
-      case None =>
-        val name = s"st06_sink_${System.nanoTime()}"
-        val q = totals.writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Update()).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, name, finish)
+    drainToParquet(s, "st06", OutputMode.Update(),
+        _.groupBy($"user_id")
+          .agg(max(struct($"n_events", $"total_value")).as("m"))
+          .select($"user_id", $"m.n_events".as("n_events"),
+            $"m.total_value".as("total_value"))
+          .orderBy($"user_id")) { _ =>
+      streamEvents(s, d)
+        .select($"user_id", $"value").as[(Long, Double)]
+        .groupByKey(_._1)
+        .mapGroupsWithState[(Long, Long), UserTotals](
+          GroupStateTimeout.NoTimeout()) { (uid, rows, state) =>
+          var (n, cents) = state.getOption.getOrElse((0L, 0L))
+          rows.foreach { case (_, v) => n += 1; cents += math.round(v * 100) }
+          state.update((n, cents))
+          UserTotals(uid, n, cents / 100.0)
+        }.toDF()
     }
   }
 
@@ -466,31 +338,26 @@ object StreamingOps {
     * a `binaryFile` file stream, and run through the SAME record parser
     * and enrichment chain the batch path uses
     * (`WarcSource.fromBytes` → `Pipeline.urlResources` — one code path,
-    * two execution modes), aggregated per hostname into a memory sink
-    * with AvailableNow. New files landing in the directory would be
-    * picked up by the next trigger; the oracle recomputes the per-host
+    * two execution modes), aggregated per hostname in complete mode and
+    * drained with AvailableNow. New files landing in the directory would
+    * be picked up by the next trigger; the oracle recomputes the per-host
     * rollup from `documents`. */
   def st05_stream_warc_ingest(s: SparkSession, d: String): DataFrame =
-    st05Impl(s, d, fileDrainDir = None)
+    drainToParquet(s, "st05", OutputMode.Complete(),
+        _.orderBy("hostname")) { dir =>
+      graft.warc.Pipeline.urlResources(
+          graft.warc.WarcSource.fromBytes(stagedWarcStream(s, d, dir)))
+        .groupBy(col("hostname"))
+        .agg(count(lit(1)).as("n_pages"),
+          sum(col("word_count").cast("long")).as("word_sum"))
+    }
 
-  /** st05 through the production parquet drain: complete-mode per-host
-    * rollups overwrite `dir` from the executors. Hash-equal to the
-    * memory path (spec-pinned). */
-  private[graft] def st05_stream_warc_ingest_files(s: SparkSession, d: String,
-      dir: String): DataFrame = st05Impl(s, d, fileDrainDir = Some(dir))
-
-  /** Stage the corpus's WARC containers to a session-FS directory (as
-    * a crawler would drop them) and hand `body` a `binaryFile` STREAM
-    * of them — the shared front half of st05 and p03 (r12).
-    *
-    * The staging dir lives on the SESSION'S filesystem (hadoop.tmp.dir
-    * under the configured defaultFS): executors write through the
-    * driver's serialized Hadoop conf, so on a cluster the staged files
-    * land on the shared FS where the stream source can list them — a
-    * driver-local java.nio temp dir only works in local mode (r9
-    * advisory, same fix as w09). Removal sits in a finally (r3
-    * advisory) and must also run when the query throws; by drain time
-    * the result is checkpointed off the staged files.
+  /** Stage the corpus's WARC containers under the drain's staging `dir`
+    * (as a crawler would drop them) and return a `binaryFile` STREAM of
+    * them — the shared front half of st05 and p03 (r12). The staging dir
+    * is on the SESSION'S filesystem, so on a cluster the staged files
+    * land on the shared FS where the stream source can list them, and
+    * [[drainToParquet]] removes them with the rest of the dir.
     *
     * Staging writes from the EXECUTORS (foreachPartition through the
     * Hadoop FS API): the r4 shape collect()ed every WARC container to
@@ -498,65 +365,34 @@ object StreamingOps {
     * collect in the repo, a bottleneck at any real sf. File names are
     * partition-deterministic and creates overwrite, so a task retry
     * rewrites its own files idempotently. */
-  private[streaming] def withStagedWarcStream[T](s: SparkSession, d: String,
-      tag: String)(body: org.apache.spark.sql.Dataset[(String, Array[Byte])] => T): T = {
+  private[streaming] def stagedWarcStream(s: SparkSession, d: String,
+      dir: Path): org.apache.spark.sql.Dataset[(String, Array[Byte])] = {
     import s.implicits._
     val hconf = s.sparkContext.hadoopConfiguration
     val serConf = new graft.warc.source.SerializableHadoopConf(hconf)
-    val warcDir = new org.apache.hadoop.fs.Path(
-      hconf.get("hadoop.tmp.dir", System.getProperty("java.io.tmpdir")),
-      s"graft-$tag-" + java.util.UUID.randomUUID())
-    val stagingFs = warcDir.getFileSystem(hconf)
-    stagingFs.mkdirs(warcDir)
-    try {
-      val dirStr = warcDir.toString
-      graft.warc.WarcQueries.warcFiles(s, d).foreachPartition {
-        (it: Iterator[(String, Array[Byte])]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var i = 0
-          it.foreach { case (_, bytes) =>
-            val p = new org.apache.hadoop.fs.Path(dirStr, f"crawl-$pid%04d-$i%03d.warc")
-            val out = p.getFileSystem(serConf.value).create(p, true)
-            try out.write(bytes) finally out.close()
-            i += 1
-          }
-      }
-      val files = s.readStream.format("binaryFile")
-        .option("pathGlobFilter", "*.warc")
-        .schema(StructType(Seq(
-          StructField("path", StringType),
-          StructField("modificationTime", TimestampType),
-          StructField("length", LongType),
-          StructField("content", BinaryType))))
-        .load(warcDir.toString)
-      body(files.select(col("path"), col("content"))
-        .as[(String, Array[Byte])])
-    } finally stagingFs.delete(warcDir, true)
-  }
-
-  private def st05Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
-    withStagedWarcStream(s, d, "st05") { staged =>
-      val records = graft.warc.WarcSource.fromBytes(staged)
-      val agg = graft.warc.Pipeline.urlResources(records)
-        .groupBy(col("hostname"))
-        .agg(count(lit(1)).as("n_pages"),
-          sum(col("word_count").cast("long")).as("word_sum"))
-      val finish = (t: DataFrame) => t.orderBy("hostname")
-      fileDrainDir match {
-        case Some(dir) =>
-          drainToParquet(s, dir, overwritePerBatch = true,
-            fb => agg.writeStream.foreachBatch(fb)
-              .outputMode("complete").trigger(Trigger.AvailableNow()).start(),
-            finish)
-        case None =>
-          val name = s"st05_sink_${System.nanoTime()}"
-          val q = agg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          drainSink(s, name, finish)
-      }
+    val warcDir = new Path(dir, "warc")
+    warcDir.getFileSystem(hconf).mkdirs(warcDir)
+    val dirStr = warcDir.toString
+    graft.warc.WarcQueries.warcFiles(s, d).foreachPartition {
+      (it: Iterator[(String, Array[Byte])]) =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        var i = 0
+        it.foreach { case (_, bytes) =>
+          val p = new Path(dirStr, f"crawl-$pid%04d-$i%03d.warc")
+          val out = p.getFileSystem(serConf.value).create(p, true)
+          try out.write(bytes) finally out.close()
+          i += 1
+        }
     }
+    s.readStream.format("binaryFile")
+      .option("pathGlobFilter", "*.warc")
+      .schema(StructType(Seq(
+        StructField("path", StringType),
+        StructField("modificationTime", TimestampType),
+        StructField("length", LongType),
+        StructField("content", BinaryType))))
+      .load(dirStr)
+      .select(col("path"), col("content")).as[(String, Array[Byte])]
   }
 
   val st05Oracle: String =
@@ -580,43 +416,21 @@ object StreamingOps {
     * aggregation is the per-(lang, verdict) rollup. Oracle = the same
     * rule in batch SQL. */
   def st07_stream_quality_gate(s: SparkSession, d: String): DataFrame =
-    st07Impl(s, d, fileDrainDir = None)
-
-  /** st07 through the production parquet drain: complete-mode batches
-    * overwrite `dir` from the executors. Hash-equal to the memory path
-    * (spec-pinned). */
-  private[graft] def st07_stream_quality_gate_files(s: SparkSession, d: String,
-      dir: String): DataFrame = st07Impl(s, d, fileDrainDir = Some(dir))
-
-  private def st07Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String]): DataFrame = withStreamShuffle(s) {
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val keepU = udf { text: String => graft.text.TextOps.gateKeep(text) }
-    val agg = s.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-      .select(col("lang"), keepU(col("text")).as("keep"))
-      .groupBy(col("lang"), col("keep"))
-      .agg(count(lit(1)).as("n_docs"))
-    val finish = (t: DataFrame) => t.orderBy("lang", "keep")
-    fileDrainDir match {
-      case Some(dir) =>
-        drainToParquet(s, dir, overwritePerBatch = true,
-          fb => agg.writeStream.foreachBatch(fb)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start(),
-          finish)
-      case None =>
-        val name = s"st07_sink_${System.nanoTime()}"
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, name, finish)
+    drainToParquet(s, "st07", OutputMode.Complete(),
+        _.orderBy("lang", "keep")) { _ =>
+      val docsSchema = StructType(Seq(
+        StructField("doc_id", LongType),
+        StructField("text", StringType),
+        StructField("lang", StringType),
+        StructField("source", StringType),
+        StructField("n_chars", LongType)))
+      val keepU = udf { text: String => graft.text.TextOps.gateKeep(text) }
+      s.readStream.schema(docsSchema)
+        .option("pathGlobFilter", "documents.parquet").parquet(d)
+        .select(col("lang"), keepU(col("text")).as("keep"))
+        .groupBy(col("lang"), col("keep"))
+        .agg(count(lit(1)).as("n_docs"))
     }
-  }
 
   val st07Oracle: String = {
     val toks = graft.text.TextOps.oracleToks("text")
@@ -674,14 +488,7 @@ object StreamingOps {
     * the whole corpus, cosFold verify, per-vector bool_or/max rollup,
     * LEFT JOIN back so never-collided vectors carry (false, −1). */
   def st10_stream_semantic_gate(s: SparkSession, d: String): DataFrame =
-    st10Impl(s, d, fileDrainDir = None, st10FixtureBench(s, d))
-
-  /** st10 through the native append-mode parquet sink (the st04
-    * pattern — per-row verdicts need no foreachBatch). Hash-equal to
-    * the memory path (spec-pinned). */
-  private[graft] def st10_stream_semantic_gate_files(s: SparkSession,
-      d: String, dir: String): DataFrame =
-    st10Impl(s, d, Some(dir), st10FixtureBench(s, d))
+    st10Against(s, d, st10FixtureBench(s, d))
 
   /** The fixture benchmark split — d21's contract (`vec_id <` BenchN),
     * one Scala-side source of truth with the batch operator. */
@@ -698,75 +505,55 @@ object StreamingOps {
     * benchmark raises with the conf named instead of OOMing; that
     * regime belongs to batch [[Contamination.d15Against]]/d21's
     * digest-join shapes. */
-  def st10Against(s: SparkSession, corpusDir: String,
+  def st10Against(s: SparkSession, d: String,
       benchVecs: DataFrame): DataFrame =
-    st10Impl(s, corpusDir, fileDrainDir = None, benchVecs)
-
-  private def st10Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String], benchVecs: DataFrame): DataFrame =
-      withStreamShuffle(s) {
-    // band geometry referenced from the batch operator's constants —
-    // st10 IS d21 as admission, so the two cannot desynchronize
-    // (r17 ADVICE; the oracle SQL still states the literals)
-    val nBands = Contamination.D21Bands; val bits = Contamination.D21Bits
-    val planes = graft.sim.SimilarityOps.md5Planes(nBands * bits, 64)
-    def bandKeys(v: Seq[Float]): Array[Long] = {
-      val sig = graft.sim.SimilarityOps.md5SignBits(v, planes)
-      Array.tabulate(nBands)(b =>
-        (b.toLong << 32) | ((sig >>> (b * bits)) & ((1L << bits) - 1)))
-    }
-    // benchmark index: a capped driver collect (32 rows on the
-    // fixture), carried into the verdict UDF like a broadcast
-    val bench: Array[(Long, Array[Float], Array[Long])] =
-      Contamination.cappedCollect(
-        benchVecs.select(col("vec_id"), col("embedding")), "st10 benchmark")
-      .map(r => {
-        val v = r.getSeq[Float](1).toArray
-        (r.getLong(0), v, bandKeys(v))
-      })
-    // "never even band-collided" marker: −2·2^32, strictly outside the
-    // quantized-cosine range [−2^32, 2^32] — a plain −1 would collide
-    // with real negative-cosine candidates (qcos < −1 exists, so a −1
-    // sentinel silently wins the max; caught by the sf0.001 oracle)
-    val NoCand = -8589934592L
-    val verdictU = udf { v: Seq[Float] =>
-      val keys = bandKeys(v)
-      var contaminated = false
-      var qmax = NoCand
-      bench.foreach { case (_, bv, bk) =>
-        if (keys.exists(k => bk.contains(k))) {
-          val cos = graft.sim.SimilarityOps.cosineArr(v.toArray, bv)
-          val q = graft.sim.SimilarityOps.qCosKey(cos)
-          if (q > qmax) qmax = q
-          if (cos >= 0.9) contaminated = true
-        }
+    drainToParquet(s, "st10", OutputMode.Append(), _.orderBy("vec_id")) { _ =>
+      // band geometry referenced from the batch operator's constants —
+      // st10 IS d21 as admission, so the two cannot desynchronize
+      // (r17 ADVICE; the oracle SQL still states the literals)
+      val nBands = Contamination.D21Bands; val bits = Contamination.D21Bits
+      val planes = graft.sim.SimilarityOps.md5Planes(nBands * bits, 64)
+      def bandKeys(v: Seq[Float]): Array[Long] = {
+        val sig = graft.sim.SimilarityOps.md5SignBits(v, planes)
+        Array.tabulate(nBands)(b =>
+          (b.toLong << 32) | ((sig >>> (b * bits)) & ((1L << bits) - 1)))
       }
-      (contaminated, qmax)
+      // benchmark index: a capped driver collect (32 rows on the
+      // fixture), carried into the verdict UDF like a broadcast
+      val bench: Array[(Long, Array[Float], Array[Long])] =
+        Contamination.cappedCollect(
+          benchVecs.select(col("vec_id"), col("embedding")), "st10 benchmark")
+        .map(r => {
+          val v = r.getSeq[Float](1).toArray
+          (r.getLong(0), v, bandKeys(v))
+        })
+      // "never even band-collided" marker: −2·2^32, strictly outside the
+      // quantized-cosine range [−2^32, 2^32] — a plain −1 would collide
+      // with real negative-cosine candidates (qcos < −1 exists, so a −1
+      // sentinel silently wins the max; caught by the sf0.001 oracle)
+      val NoCand = -8589934592L
+      val verdictU = udf { v: Seq[Float] =>
+        val keys = bandKeys(v)
+        var contaminated = false
+        var qmax = NoCand
+        bench.foreach { case (_, bv, bk) =>
+          if (keys.exists(k => bk.contains(k))) {
+            val cos = graft.sim.SimilarityOps.cosineArr(v.toArray, bv)
+            val q = graft.sim.SimilarityOps.qCosKey(cos)
+            if (q > qmax) qmax = q
+            if (cos >= 0.9) contaminated = true
+          }
+        }
+        (contaminated, qmax)
+      }
+      val embSchema = s.read
+        .option("pathGlobFilter", "embeddings.parquet").parquet(d).schema
+      s.readStream.schema(embSchema)
+        .option("pathGlobFilter", "embeddings.parquet").parquet(d)
+        .select(col("vec_id"), verdictU(col("embedding")).as("v"))
+        .select(col("vec_id"), col("v._1").as("contaminated"),
+          col("v._2").as("qcos_max"))
     }
-    val embSchema = s.read
-      .option("pathGlobFilter", "embeddings.parquet").parquet(d).schema
-    val verdicts = s.readStream.schema(embSchema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(d)
-      .select(col("vec_id"), verdictU(col("embedding")).as("v"))
-      .select(col("vec_id"), col("v._1").as("contaminated"),
-        col("v._2").as("qcos_max"))
-    val finish = (t: DataFrame) => t.orderBy("vec_id")
-    fileDrainDir match {
-      case Some(dir) =>
-        val q = verdicts.writeStream.format("parquet")
-          .option("path", s"$dir/out")
-          .option("checkpointLocation", s"$dir/ckpt")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        finish(s.read.parquet(s"$dir/out")).localCheckpoint(true)
-      case None =>
-        val name = s"st10_sink_${System.nanoTime()}"
-        val q = verdicts.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, name, finish)
-    }
-  }
 
   val st10Oracle: String = {
     import graft.sim.SimilarityOps.cosFoldSql
@@ -838,11 +625,7 @@ object StreamingOps {
     * additionally reconciles Σ flagged against d15's own n_flagged —
     * two independent implementations of the same rule. */
   def st11_stream_ngram_gate(s: SparkSession, d: String): DataFrame =
-    st11Impl(s, d, fileDrainDir = None, st11FixtureBench(s, d))
-
-  private[graft] def st11_stream_ngram_gate_files(s: SparkSession,
-      d: String, dir: String): DataFrame =
-    st11Impl(s, d, Some(dir), st11FixtureBench(s, d))
+    st11Against(s, d, st11FixtureBench(s, d))
 
   /** The fixture benchmark SUITE as one text row per item — the exact
     * d15 derivation (every 97th doc, first/last 5 tokens dropped),
@@ -877,61 +660,41 @@ object StreamingOps {
     * scale) — a corpus-sized benchmark belongs to batch
     * [[Contamination.d15Against]]'s digest-join shape, and the error
     * says so. */
-  def st11Against(s: SparkSession, corpusDir: String,
+  def st11Against(s: SparkSession, d: String,
       benchDocs: DataFrame): DataFrame =
-    st11Impl(s, corpusDir, fileDrainDir = None, benchDocs)
-
-  private def st11Impl(s: SparkSession, d: String,
-      fileDrainDir: Option[String], benchDocs: DataFrame): DataFrame =
-      withStreamShuffle(s) {
-    val N = 13
-    val docsBatch = s.read
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-    val tk = split(trim(col("text")), "\\s+")
-    val grams = expr(s"transform(sequence(1, size(tk) - ${N - 1}), " +
-      s"i -> md5(array_join(slice(tk, i, $N), ' ')))")
-    val benchSet: Set[String] = Contamination.cappedCollect(
-      benchDocs.select(tk.as("tk")).filter(size(col("tk")) >= N)
-        .select(explode(grams).as("g")).distinct(),
-      "st11 benchmark gram set")
-      .map(_.getString(0)).toSet
-    val gateU = udf { text: String =>
-      val toks = graft.dedup.DedupOps.WsPattern
-        .split(graft.dedup.DedupOps.sqlTrim(text))
-      if (toks.length < N) (0L, 0L, false)
-      else {
-        // thread-local digest + table hex (DedupOps.md5Hex): a
-        // getInstance + "%02x".format per gram dominated this hot
-        // per-token path (r17 ADVICE)
-        val gs = toks.sliding(N)
-          .map(w => graft.dedup.DedupOps.md5Hex(w.mkString(" "))).toSet
-        val hits = gs.count(benchSet)
-        (gs.size.toLong, hits.toLong, hits * 2 >= gs.size && gs.nonEmpty)
+    drainToParquet(s, "st11", OutputMode.Append(), _.orderBy("doc_id")) { _ =>
+      val N = 13
+      val docsBatch = s.read
+        .option("pathGlobFilter", "documents.parquet").parquet(d)
+      val tk = split(trim(col("text")), "\\s+")
+      val grams = expr(s"transform(sequence(1, size(tk) - ${N - 1}), " +
+        s"i -> md5(array_join(slice(tk, i, $N), ' ')))")
+      val benchSet: Set[String] = Contamination.cappedCollect(
+        benchDocs.select(tk.as("tk")).filter(size(col("tk")) >= N)
+          .select(explode(grams).as("g")).distinct(),
+        "st11 benchmark gram set")
+        .map(_.getString(0)).toSet
+      val gateU = udf { text: String =>
+        val toks = graft.dedup.DedupOps.WsPattern
+          .split(graft.dedup.DedupOps.sqlTrim(text))
+        if (toks.length < N) (0L, 0L, false)
+        else {
+          // thread-local digest + table hex (DedupOps.md5Hex): a
+          // getInstance + "%02x".format per gram dominated this hot
+          // per-token path (r17 ADVICE)
+          val gs = toks.sliding(N)
+            .map(w => graft.dedup.DedupOps.md5Hex(w.mkString(" "))).toSet
+          val hits = gs.count(benchSet)
+          (gs.size.toLong, hits.toLong, hits * 2 >= gs.size && gs.nonEmpty)
+        }
       }
+      val docsSchema = docsBatch.schema
+      s.readStream.schema(docsSchema)
+        .option("pathGlobFilter", "documents.parquet").parquet(d)
+        .select(col("doc_id"), gateU(col("text")).as("v"))
+        .select(col("doc_id"), col("v._1").as("n13"), col("v._2").as("hits"),
+          col("v._3").as("flagged"))
     }
-    val docsSchema = docsBatch.schema
-    val verdicts = s.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-      .select(col("doc_id"), gateU(col("text")).as("v"))
-      .select(col("doc_id"), col("v._1").as("n13"), col("v._2").as("hits"),
-        col("v._3").as("flagged"))
-    val finish = (t: DataFrame) => t.orderBy("doc_id")
-    fileDrainDir match {
-      case Some(dir) =>
-        val q = verdicts.writeStream.format("parquet")
-          .option("path", s"$dir/out")
-          .option("checkpointLocation", s"$dir/ckpt")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        finish(s.read.parquet(s"$dir/out")).localCheckpoint(true)
-      case None =>
-        val name = s"st11_sink_${System.nanoTime()}"
-        val q = verdicts.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, name, finish)
-    }
-  }
 
   val st11Oracle: String =
     raw"""WITH toks AS (

@@ -147,26 +147,6 @@ object WarcSource {
     df.as[WarcRecord]
   }
 
-  /** Legacy whole-file scan over binaryFile — kept for parity testing
-    * and for exotic inputs the splittable source does not claim (e.g.
-    * nonstandard extensions); `.warc` and per-record `.warc.gz` both go
-    * through [[read]]. */
-  def readWholeFiles(spark: SparkSession, glob: String): Dataset[WarcRecord] = {
-    import spark.implicits._
-    val idx = glob.lastIndexOf('/')
-    val last = if (idx >= 0) glob.substring(idx + 1) else glob
-    val reader = spark.read.format("binaryFile")
-    val loaded =
-      if (last.contains("*") && idx > 0)
-        reader.option("pathGlobFilter", last).load(glob.substring(0, idx))
-      else reader.load(glob)
-    loaded
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        splitWarc(bytes, path.substring(path.lastIndexOf('/') + 1))
-      }
-  }
-
   /** Split an already-loaded (source, bytes) dataset — used by the
     * testdata-driven queries that synthesize WARC bytes from the
     * `documents` table before exercising the real pipeline. */

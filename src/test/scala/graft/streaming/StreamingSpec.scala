@@ -69,95 +69,91 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
-  test("st01/st06 production parquet drain is row-identical to the memory drain") {
-    // r5 verdict item 5: the memory sink materializes results on the
-    // driver — fine for the oracle path, the limit at 100× key
-    // cardinality. The foreachBatch parquet drain writes every batch
-    // from the EXECUTORS (complete mode overwrites — last batch is the
-    // final state; update mode appends — read-back keeps the last
-    // update per key) and must produce exactly the memory path's rows.
+  test("stream rows: st02 twin == batch, st10/st11 bind") {
+    // every stream query leaves through StreamingOps.drainToParquet
+    // (executor-side parquet, read back off the files); these pin what
+    // the DuckDB oracle cannot: streaming sessionization against its
+    // batch registry row, and that the two decontamination gates
+    // discriminate instead of passing or flagging everything
     val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("graft-filedrain")
-    try {
-      val mem01 = StreamingOps.st01_stream_window(spark, sf).collect().toSeq
-      val file01 = StreamingOps
-        .st01_stream_window_files(spark, sf, s"$dir/st01").collect().toSeq
-      assert(mem01.nonEmpty && mem01 == file01,
-        s"st01 drains diverge: mem=${mem01.take(3)} file=${file01.take(3)}")
-      val mem06 = StreamingOps.st06_running_totals(spark, sf).collect().toSeq
-      val file06 = StreamingOps
-        .st06_running_totals_files(spark, sf, s"$dir/st06").collect().toSeq
-      assert(mem06.nonEmpty && mem06 == file06,
-        s"st06 drains diverge: mem=${mem06.take(3)} file=${file06.take(3)}")
-      // st04 appends through Spark's NATIVE file sink (no foreachBatch):
-      // append mode is the one the built-in sink supports, commit-logged
-      // via checkpointLocation
-      val mem04 = StreamingOps.st04_stream_stream_join(spark, sf).collect().toSeq
-      val file04 = StreamingOps
-        .st04_stream_stream_join_files(spark, sf, s"$dir/st04").collect().toSeq
-      assert(mem04.nonEmpty && mem04 == file04,
-        s"st04 drains diverge: mem=${mem04.take(3)} file=${file04.take(3)}")
-      // r6 verdict item 3: the remaining four ops get the same contract.
-      // st02's oracle path is the BATCH session_window; the files variant
-      // is the real incremental stream (state-merged sessions, complete
-      // mode) — equality pins streaming sessionization against batch.
-      val mem02 = StreamingOps.st02_session_window(spark, sf).collect().toSeq
-      val file02 = StreamingOps
-        .st02_session_window_files(spark, sf, s"$dir/st02").collect().toSeq
-      assert(mem02.nonEmpty && mem02 == file02,
-        s"st02 drains diverge: mem=${mem02.take(3)} file=${file02.take(3)}")
-      val mem03 = StreamingOps.st03_stream_dedup(spark, sf).collect().toSeq
-      val file03 = StreamingOps
-        .st03_stream_dedup_files(spark, sf, s"$dir/st03").collect().toSeq
-      assert(mem03.nonEmpty && mem03 == file03,
-        s"st03 drains diverge: mem=${mem03.take(3)} file=${file03.take(3)}")
-      val mem05 = StreamingOps.st05_stream_warc_ingest(spark, sf).collect().toSeq
-      val file05 = StreamingOps
-        .st05_stream_warc_ingest_files(spark, sf, s"$dir/st05").collect().toSeq
-      assert(mem05.nonEmpty && mem05 == file05,
-        s"st05 drains diverge: mem=${mem05.take(3)} file=${file05.take(3)}")
-      val mem07 = StreamingOps.st07_stream_quality_gate(spark, sf).collect().toSeq
-      val file07 = StreamingOps
-        .st07_stream_quality_gate_files(spark, sf, s"$dir/st07").collect().toSeq
-      assert(mem07.nonEmpty && mem07 == file07,
-        s"st07 drains diverge: mem=${mem07.take(3)} file=${file07.take(3)}")
-      // st10 is stateless-append like st04 — native file sink twin
-      val mem10 = StreamingOps.st10_stream_semantic_gate(spark, sf).collect().toSeq
-      val file10 = StreamingOps
-        .st10_stream_semantic_gate_files(spark, sf, s"$dir/st10").collect().toSeq
-      assert(mem10.nonEmpty && mem10 == file10,
-        s"st10 drains diverge: mem=${mem10.take(3)} file=${file10.take(3)}")
-      // st10 discrimination: the benchmark members flag themselves at
-      // cosine 1.0; nothing else crosses 0.9 on this corpus; at least
-      // one sub-threshold band collision exercises the reject path
-      val flagged = mem10.filter(_.getBoolean(1)).map(_.getLong(0))
-      assert(flagged == (0L until 32L).filter(i => mem10.exists(_.getLong(0) == i)),
-        s"flagged=$flagged")
-      assert(mem10.exists(r => !r.getBoolean(1) && r.getLong(2) > -8589934592L),
-        "no sub-threshold candidate ever scored — the verify path is vacuous")
-      // st11: same stateless-append drain contract
-      val mem11 = StreamingOps.st11_stream_ngram_gate(spark, sf).collect().toSeq
-      val file11 = StreamingOps
-        .st11_stream_ngram_gate_files(spark, sf, s"$dir/st11").collect().toSeq
-      assert(mem11.nonEmpty && mem11 == file11,
-        s"st11 drains diverge: mem=${mem11.take(3)} file=${file11.take(3)}")
-      // reconciliation: the stream gate's flag rule (integer 2·hits ≥
-      // n13) must agree with batch d15's n_flagged (double ≥ 0.5) —
-      // two independent implementations of one rule
-      val flagged11 = mem11.count(_.getBoolean(3)).toLong
-      val d15flagged = graft.dedup.Contamination.d15_ngram_overlap(spark, sf)
-        .collect()(0).getAs[Long]("n_flagged")
-      assert(flagged11 == d15flagged,
-        s"st11 flagged $flagged11 but d15 reports $d15flagged")
-      assert(flagged11 > 0 && flagged11 < mem11.size,
-        "the gate is vacuous on this corpus — it flags nothing or everything")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally walk.close()
+    Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
+        "st01" -> (StreamingOps.st01_stream_window _),
+        "st03" -> (StreamingOps.st03_stream_dedup _),
+        "st04" -> (StreamingOps.st04_stream_stream_join _),
+        "st05" -> (StreamingOps.st05_stream_warc_ingest _),
+        "st06" -> (StreamingOps.st06_running_totals _),
+        "st07" -> (StreamingOps.st07_stream_quality_gate _))
+      .foreach { case (name, q) =>
+        assert(!q(spark, sf).isEmpty, s"$name drained no rows")
+      }
+    // st02's registry row is the BATCH session_window; the stream twin
+    // is the real incremental stream (state-merged sessions, complete
+    // mode) — equality pins streaming sessionization against batch
+    val batch02 = StreamingOps.st02_session_window(spark, sf).collect().toSeq
+    val stream02 = StreamingOps.st02_session_window_stream(spark, sf).collect().toSeq
+    assert(batch02.nonEmpty && batch02 == stream02,
+      s"st02 stream diverges from batch: batch=${batch02.take(3)} stream=${stream02.take(3)}")
+    // st10 discrimination: the benchmark members flag themselves at
+    // cosine 1.0; nothing else crosses 0.9 on this corpus; at least
+    // one sub-threshold band collision exercises the reject path
+    val rows10 = StreamingOps.st10_stream_semantic_gate(spark, sf).collect().toSeq
+    assert(rows10.nonEmpty)
+    val flagged = rows10.filter(_.getBoolean(1)).map(_.getLong(0))
+    assert(flagged == (0L until 32L).filter(i => rows10.exists(_.getLong(0) == i)),
+      s"flagged=$flagged")
+    assert(rows10.exists(r => !r.getBoolean(1) && r.getLong(2) > -8589934592L),
+      "no sub-threshold candidate ever scored — the verify path is vacuous")
+    // reconciliation: the stream gate's flag rule (integer 2·hits ≥
+    // n13) must agree with batch d15's n_flagged (double ≥ 0.5) —
+    // two independent implementations of one rule
+    val rows11 = StreamingOps.st11_stream_ngram_gate(spark, sf).collect().toSeq
+    assert(rows11.nonEmpty)
+    val flagged11 = rows11.count(_.getBoolean(3)).toLong
+    val d15flagged = graft.dedup.Contamination.d15_ngram_overlap(spark, sf)
+      .collect()(0).getAs[Long]("n_flagged")
+    assert(flagged11 == d15flagged,
+      s"st11 flagged $flagged11 but d15 reports $d15flagged")
+    assert(flagged11 > 0 && flagged11 < rows11.size,
+      "the gate is vacuous on this corpus — it flags nothing or everything")
+  }
+
+  test("drain failure restores shuffle width, leaves no dir") {
+    // a batch that throws must surface, restore the caller's shuffle
+    // width and delete the drain's staging dir — checkpoint included
+    // (Spark's own temporary checkpoint survives a failed query)
+    import org.apache.spark.sql.functions.{col, udf}
+    val s = spark
+    val tag = s"failspec${System.nanoTime()}"
+    val hconf = s.sparkContext.hadoopConfiguration
+    val tmp = new org.apache.hadoop.fs.Path(
+      hconf.get("hadoop.tmp.dir", System.getProperty("java.io.tmpdir")))
+    val fs = tmp.getFileSystem(hconf)
+    def leftovers = fs.listStatus(tmp).map(_.getPath.getName)
+      .filter(_.contains(tag)).toSeq
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("planted batch failure")
+      id
     }
+    s.conf.set("spark.sql.shuffle.partitions", "5")
+    try {
+      val e = intercept[Exception] {
+        StreamingOps.drainToParquet(s, tag,
+            org.apache.spark.sql.streaming.OutputMode.Append(), identity) { dir =>
+          // the staging dir exists while the stream is built
+          assert(fs.exists(dir) && leftovers.nonEmpty)
+          s.readStream.schema(s.read.parquet(
+              "/root/testdata/sf0.001/documents.parquet").schema)
+            .option("pathGlobFilter", "documents.parquet")
+            .parquet("/root/testdata/sf0.001")
+            .select(boom(col("doc_id")).as("doc_id"))
+        }
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("planted batch failure")),
+        s"the batch's error did not propagate: $e")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "5")
+      assert(leftovers.isEmpty, s"drain left $leftovers behind")
+    } finally s.conf.set("spark.sql.shuffle.partitions", "2")
   }
 
   test("st0x queries restore the caller's shuffle-partitions value") {

@@ -150,16 +150,6 @@ object Dev {
             .filter($"containment" >= 0.8 && $"jaccard" < 0.6)
             .orderBy($"id_a", $"id_b")
         }),
-        // w08 ROUND-BODY reconstructions (r22 one-exchange-per-round
-        // change): the shipped operator checkpoints every round, so the
-        // registry plan is a LogicalRDD scan + sort; these capture ONE
-        // round's composed plan — r21 shape (nodes left join,
-        // un-co-partitioned inputs) vs r22 shape (co-partitioned zip
-        // join, single transpose exchange, no nodes join).
-        "w08_pagerank_r21round" -> ((sp, sf) =>
-          graft.warc.WarcQueries.w08RoundForPlan(sp, sf, r21Shape = true)),
-        "w08_pagerank_r22round" -> ((sp, sf) =>
-          graft.warc.WarcQueries.w08RoundForPlan(sp, sf, r21Shape = false)),
         // r20-shape reconstruction for the before-plan capture
         "d22_containment_r20" -> ((sp, sf) => {
           import sp.implicits._

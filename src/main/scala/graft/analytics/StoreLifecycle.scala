@@ -598,6 +598,9 @@ object StoreLifecycle {
     })
   }
 
+  /** The session conf behind UnionExec's output-partitioning claim. */
+  private[graft] val UnionClaim = "spark.sql.unionOutputPartitioning"
+
   /** COMPACTION — fold a store's O(ingested) `delta` into a new base
     * generation and swap it in under `base`'s name, the fold-the-delta-in
     * half of the LSM lifecycle both stores share (appends land in the
@@ -608,13 +611,14 @@ object StoreLifecycle {
     * The new generation `<base>_compacting` (any stale one a crash left
     * behind is dropped first) is `fold(base, delta)` in the base's
     * layout — `nBuckets` on `bucketCols`, sorted by them, so probes keep
-    * their bucket pruning across generations. It is planned with
-    * `spark.sql.unionOutputPartitioning` off: over two identically
-    * bucketed scans Spark's UnionExec reports the children's hash
-    * partitioning but concatenates their partitions, so a fold's
-    * `distinct` planned on that claim never sees a base row and its
-    * delta twin together (observed: a re-run over a re-planted ANN delta
-    * doubled the rows). The swap kind follows the observed table type:
+    * their bucket pruning across generations. It throws on a session
+    * whose [[UnionClaim]] is on: over two identically bucketed scans
+    * Spark's UnionExec reports the children's hash partitioning but
+    * concatenates their partitions, so a fold's `distinct` planned on
+    * that claim never sees a base row and its delta twin together
+    * (observed: a re-run over a re-planted ANN delta doubled the rows).
+    * `GraftSession` turns the claim off session-wide. The swap kind
+    * follows the observed table type:
     *  - EXTERNAL content-addressed store (every production store): the
     *    generation is written at its deterministic path, stamped with
     *    the base's corpus marker and swapped by moving DIRECTORIES
@@ -632,25 +636,21 @@ object StoreLifecycle {
   private[graft] def compact(s: SparkSession, base: String, delta: String,
       nBuckets: Int, bucketCols: Seq[String])(
       fold: (DataFrame, DataFrame) => DataFrame): Unit = withWriterLease(s) {
+    if (s.conf.get(UnionClaim) != "false") throw new IllegalStateException(
+      s"store compaction needs $UnionClaim=false (GraftSession sets it): " +
+        "with the union partitioning claim on, a fold's distinct never " +
+        "sees a base row and its delta twin together")
     if (s.catalog.tableExists(delta)) {
       val gen = base + "_compacting"
       val external = isExternalStore(s, base)
       s.sql(s"DROP TABLE IF EXISTS $gen")
       try {
-        val unionKey = "spark.sql.unionOutputPartitioning"
-        val prior = s.conf.getOption(unionKey)
-        s.conf.set(unionKey, "false")
-        try {
-          val folded = fold(s.table(base), s.table(delta))
-          if (external)
-            saveStoreTable(folded, gen, nBuckets, bucketCols, bucketCols)
-          else
-            folded.write.bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-              .sortBy(bucketCols.head, bucketCols.tail: _*).saveAsTable(gen)
-        } finally prior match {
-          case Some(v) => s.conf.set(unionKey, v)
-          case None => s.conf.unset(unionKey)
-        }
+        val folded = fold(s.table(base), s.table(delta))
+        if (external)
+          saveStoreTable(folded, gen, nBuckets, bucketCols, bucketCols)
+        else
+          folded.write.bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+            .sortBy(bucketCols.head, bucketCols.tail: _*).saveAsTable(gen)
         if (external) {
           carryMarker(s, base, gen)
           swapInExternal(s, base, gen, nBuckets, bucketCols, bucketCols)

@@ -37,12 +37,11 @@ object Tables {
 
   /** The events parquet as stored, before [[adaptEvents]] — for callers
     * that need the file's own schema (the stream reader) or rows
-    * (Dev's corpus scaler). The one place that sets the nanos-as-long
-    * legacy conf: it must be set before the read resolves. */
-  private[graft] def eventsFile(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    * (Dev's corpus scaler). A TIMESTAMP(NANOS) `ts` reads as a long
+    * under the nanos-as-long legacy conf, which `GraftSession` sets
+    * session-wide. */
+  private[graft] def eventsFile(s: SparkSession, d: String): DataFrame =
     apply(s, d, "events")
-  }
 
   /** Expected events columns; `ts` is checked separately by dtype. */
   private val eventsCols = Seq("event_id", "ts", "user_id", "event_type",

@@ -136,23 +136,12 @@ object AnnStore {
       .select(col("vec_id"), col("embedding"), col("cid"), col("code"))
   }
 
-  /** Run `body` with auto-bucketed-scan OFF (save/restore): the planner's
-    * heuristic drops bucketed reading when no join exploits the
-    * clustering — which also drops BUCKET PRUNING, the thing the s07
-    * probe is built on (a broadcast probe join never "exploits"
-    * partitioning, so the heuristic would re-read all k buckets). */
-  private[graft] def withBucketedScan[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prior = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prior)
-  }
-
   /** The probe plan PlanSpec pins: inverted lists filtered to the named
     * clusters (bucket-pruned scan — only nprobe of k buckets are READ;
-    * plan under [[withBucketedScan]]) joined to the broadcast query
-    * set. No Exchange anywhere: the store side is a pruned co-located
-    * scan, the query side is broadcast-sized by construction. */
+    * `GraftSession` keeps auto-bucketed-scan off) joined to the
+    * broadcast query set. No Exchange anywhere: the store side is a
+    * pruned co-located scan, the query side is broadcast-sized by
+    * construction. */
   private[graft] def storeProbe(s: SparkSession, tbl: String,
       queries: DataFrame, probedCids: Seq[Int]): DataFrame =
     s.table(tbl).filter(col("cid").isin(probedCids: _*))
@@ -185,11 +174,7 @@ object AnnStore {
     val probedCids = queries.select($"cid").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     val total = emb.count()
-    // annRecall is eager (withCache checkpoints), so the bucketed-scan
-    // override covers the probe's actual execution
-    withBucketedScan(s) {
-      annRecall(s, d, storeProbe(s, tbl, queries, probedCids), total)
-    }
+    annRecall(s, d, storeProbe(s, tbl, queries, probedCids), total)
   }
 
   /** s08: IVF-PQ — the s07 inverted-list store probed over its PQ CODES
@@ -226,17 +211,15 @@ object AnnStore {
       .collect().map(_.getInt(0)).toSeq.sorted
     val total = emb.count()
     val topk = udaf(new TopKCosine(5))
-    withBucketedScan(s) {
-      val approx = s08ProbePlan(s, Seq(tbl), queries, probedCids)
-        .filter($"vec_id" =!= $"query_id")
-        .withColumn("score", adcU($"q_v", $"code"))
-        .groupBy($"query_id")
-        .agg(topk($"score", $"vec_id").as("nbrs"), count(lit(1)).as("n_scanned"))
-      annRecallRollup(s, d, approx, total)
-        .select($"recall_at_5", $"scan_fraction", $"n_queries",
-          lit(PqM.toLong).as("code_bytes_per_vector"),
-          lit(256L).as("raw_bytes_per_vector"))
-    }
+    val approx = s08ProbePlan(s, Seq(tbl), queries, probedCids)
+      .filter($"vec_id" =!= $"query_id")
+      .withColumn("score", adcU($"q_v", $"code"))
+      .groupBy($"query_id")
+      .agg(topk($"score", $"vec_id").as("nbrs"), count(lit(1)).as("n_scanned"))
+    annRecallRollup(s, d, approx, total)
+      .select($"recall_at_5", $"scan_fraction", $"n_queries",
+        lit(PqM.toLong).as("code_bytes_per_vector"),
+        lit(256L).as("raw_bytes_per_vector"))
   }
 
   /** s09: IVF-PQ with EXACT RE-RANK — the full production ANN read path:
@@ -274,32 +257,30 @@ object AnnStore {
     val total = emb.count()
     val topkR = udaf(new TopKCosine(rerank))
     val topk5 = udaf(new TopKCosine(5))
-    withBucketedScan(s) {
-      // stage 1 — codes-only nomination (the exact s08 probe plan)
-      val adcTop = s08ProbePlan(s, Seq(tbl), queries, probedCids)
-        .filter($"vec_id" =!= $"query_id")
-        .withColumn("score", adcU($"q_v", $"code"))
-        .groupBy($"query_id")
-        .agg(topkR($"score", $"vec_id").as("cands"), count(lit(1)).as("n_scanned"))
-        .localCheckpoint(true) // finalist-sized; feeds id-collect + re-rank
-      val finalistIds = adcTop.select(explode($"cands").as("vec_id"))
-        .distinct().collect().map(_.getLong(0)) // bounded: ≤ rerank×|queries|
-      // stage 2 — exact re-rank over the finalists' raw vectors only
-      val raw = s.table(tbl).select($"vec_id", $"embedding")
-        .filter($"vec_id".isin(finalistIds.toIndexedSeq.map(Long.box): _*))
-      val qv = queries.select($"query_id", $"q_v").distinct()
-      val exactTop = adcTop.select($"query_id", explode($"cands").as("vec_id"))
-        .join(raw, "vec_id")
-        .join(broadcast(qv), Seq("query_id"))
-        .withColumn("cos", graft.functions.GraftFunctions.cosine_sim($"q_v", $"embedding"))
-        .groupBy($"query_id").agg(topk5($"cos", $"vec_id").as("nbrs"))
-      annRecallRollup(s, d,
-        exactTop.join(adcTop.select($"query_id", $"n_scanned"), Seq("query_id")),
-        total)
-        .select($"recall_at_5", $"scan_fraction", $"n_queries",
-          lit(rerank.toLong).as("rerank_depth"),
-          lit(PqM.toLong).as("code_bytes_per_vector"))
-    }
+    // stage 1 — codes-only nomination (the exact s08 probe plan)
+    val adcTop = s08ProbePlan(s, Seq(tbl), queries, probedCids)
+      .filter($"vec_id" =!= $"query_id")
+      .withColumn("score", adcU($"q_v", $"code"))
+      .groupBy($"query_id")
+      .agg(topkR($"score", $"vec_id").as("cands"), count(lit(1)).as("n_scanned"))
+      .localCheckpoint(true) // finalist-sized; feeds id-collect + re-rank
+    val finalistIds = adcTop.select(explode($"cands").as("vec_id"))
+      .distinct().collect().map(_.getLong(0)) // bounded: ≤ rerank×|queries|
+    // stage 2 — exact re-rank over the finalists' raw vectors only
+    val raw = s.table(tbl).select($"vec_id", $"embedding")
+      .filter($"vec_id".isin(finalistIds.toIndexedSeq.map(Long.box): _*))
+    val qv = queries.select($"query_id", $"q_v").distinct()
+    val exactTop = adcTop.select($"query_id", explode($"cands").as("vec_id"))
+      .join(raw, "vec_id")
+      .join(broadcast(qv), Seq("query_id"))
+      .withColumn("cos", graft.functions.GraftFunctions.cosine_sim($"q_v", $"embedding"))
+      .groupBy($"query_id").agg(topk5($"cos", $"vec_id").as("nbrs"))
+    annRecallRollup(s, d,
+      exactTop.join(adcTop.select($"query_id", $"n_scanned"), Seq("query_id")),
+      total)
+      .select($"recall_at_5", $"scan_fraction", $"n_queries",
+        lit(rerank.toLong).as("rerank_depth"),
+        lit(PqM.toLong).as("code_bytes_per_vector"))
   }
 
   /** SERVICE-PRIMITIVE ANN search (r6 stretch): the s07/s08/s09 gate
@@ -346,29 +327,27 @@ object AnnStore {
       .collect().map(_.getInt(0)).toSeq.sorted
     val topkR = udaf(new TopKCosine(rerank))
     val topkOut = udaf(new TopKCosineScored(topK))
-    withBucketedScan(s) {
-      val adcTop = s08ProbePlan(s, tbls,
-          queries.select($"query_id", $"q_v", $"cid"), probedCids)
-        .withColumn("score", adcU($"q_v", $"code"))
-        .groupBy($"query_id")
-        .agg(topkR($"score", $"vec_id").as("cands"))
-        .localCheckpoint(true) // finalist-sized; feeds id-collect + re-rank
-      val finalistIds = adcTop.select(explode($"cands").as("vec_id"))
-        .distinct().collect().map(_.getLong(0)) // bounded: ≤ rerank×|queries|
-      val raw = tbls.map(t => s.table(t).select($"vec_id", $"embedding"))
-        .reduce(_.unionByName(_))
-        .filter($"vec_id".isin(finalistIds.toIndexedSeq.map(Long.box): _*))
-      val qv = queries.select($"query_id", $"q_emb").distinct()
-      adcTop.select($"query_id", explode($"cands").as("vec_id"))
-        .join(raw, "vec_id")
-        .join(broadcast(qv), Seq("query_id"))
-        .withColumn("cos", graft.functions.GraftFunctions.cosine_sim($"q_emb", $"embedding"))
-        .groupBy($"query_id").agg(topkOut($"cos", $"vec_id").as("nbrs"))
-        .select($"query_id", posexplode($"nbrs").as(Seq("pos", "nbr")))
-        .select($"query_id", ($"pos" + 1).as("rank"),
-          $"nbr._2".as("neighbor_id"), $"nbr._1".as("cos"))
-        .orderBy($"query_id", $"rank")
-    }
+    val adcTop = s08ProbePlan(s, tbls,
+        queries.select($"query_id", $"q_v", $"cid"), probedCids)
+      .withColumn("score", adcU($"q_v", $"code"))
+      .groupBy($"query_id")
+      .agg(topkR($"score", $"vec_id").as("cands"))
+      .localCheckpoint(true) // finalist-sized; feeds id-collect + re-rank
+    val finalistIds = adcTop.select(explode($"cands").as("vec_id"))
+      .distinct().collect().map(_.getLong(0)) // bounded: ≤ rerank×|queries|
+    val raw = tbls.map(t => s.table(t).select($"vec_id", $"embedding"))
+      .reduce(_.unionByName(_))
+      .filter($"vec_id".isin(finalistIds.toIndexedSeq.map(Long.box): _*))
+    val qv = queries.select($"query_id", $"q_emb").distinct()
+    adcTop.select($"query_id", explode($"cands").as("vec_id"))
+      .join(raw, "vec_id")
+      .join(broadcast(qv), Seq("query_id"))
+      .withColumn("cos", graft.functions.GraftFunctions.cosine_sim($"q_emb", $"embedding"))
+      .groupBy($"query_id").agg(topkOut($"cos", $"vec_id").as("nbrs"))
+      .select($"query_id", posexplode($"nbrs").as(Seq("pos", "nbr")))
+      .select($"query_id", ($"pos" + 1).as("rank"),
+        $"nbr._2".as("neighbor_id"), $"nbr._1".as("cos"))
+      .orderBy($"query_id", $"rank")
   }
 
   /** COMPACTION of the ANN delta ([[graft.analytics.StoreLifecycle.compact]])

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
-import StreamingOps.{withStreamShuffle, drainToParquet}
+import graft.GraftSession
+import StreamingOps.{StreamShuffle, drainToParquet}
 
 /** The STREAMING STORE-INGEST twins (st08/st09), split out of
   * StreamingOps (r9 verdict item 4: per-family files, unchanged query
@@ -136,7 +137,7 @@ object StreamStoreIngest {
   private[graft] def st09Impl(s: SparkSession, d: String,
       compactAtDeltaRows: Long, baseOverride: Option[String] = None)
       : DataFrame =
-    withStreamShuffle(s) {
+    GraftSession.withConf(s, StreamShuffle) {
       import s.implicits._
       import graft.sim.AnnStore
       val (shared, cb, pqCb) = AnnStore.ensureAnnStore(s, d)

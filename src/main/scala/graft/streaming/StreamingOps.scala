@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.Path
 
+import graft.GraftSession
 import graft.dedup.Contamination
 
 /** Structured Streaming surface over the `events` table.
@@ -35,26 +36,19 @@ object StreamingOps {
       s.readStream.schema(graft.analytics.Tables.eventsFile(s, d).schema)
         .option("pathGlobFilter", "events.parquet").parquet(d))
 
-  /** Run `body` with streaming-sized shuffle parallelism, then restore the
-    * caller's ACTUAL prior value. Each shuffle partition carries an
+  /** Streaming-sized shuffle parallelism, set in scope by
+    * `GraftSession.withConf`. Each shuffle partition carries an
     * HDFS-backed state store whose per-batch checkpoint I/O dominates
     * these small stateful queries; 8 stores is plenty for the testdata
     * volumes (a production stream would size this to its key
     * cardinality). Streaming plans capture the value at `start()`, so the
-    * override must span query construction through `awaitTermination`.
-    * The restore is save/restore, not a reset to the GraftSession
-    * default — the r4 shape clobbered any caller-set value in a shared
-    * session. */
-  private[streaming] def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
-    val prior = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prior)
-  }
+    * scope must span query construction through `awaitTermination`. */
+  private[streaming] val StreamShuffle = "spark.sql.shuffle.partitions" -> "8"
 
   /** The one way a stream's result leaves the stream. `stream` is built
     * inside a fresh staging dir on the session's filesystem (it may stage
     * its own source files under the dir it is handed — st05/p03) and
-    * inside the streaming shuffle width, then drained with AvailableNow
+    * inside the [[StreamShuffle]] width, then drained with AvailableNow
     * through `foreachBatch` into parquet written from the EXECUTORS: the
     * driver never holds result rows (a memory sink would collect every
     * row there — st10/st11 emit one per corpus vector/doc). The write
@@ -74,7 +68,7 @@ object StreamingOps {
       perBatch: (DataFrame, DataFrame => Unit) => Unit = (b, write) => write(b))(
       stream: Path => DataFrame): DataFrame =
     graft.analytics.StagingDir.withStagingDir(s, s"graft-$tag") { root =>
-      withStreamShuffle(s) {
+      GraftSession.withConf(s, StreamShuffle) {
         val out = new Path(root, "out").toString
         val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
         @volatile var schema: StructType = null

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.analytics.Tables
 import graft.rake.Rake
 
@@ -465,11 +466,11 @@ object WarcQueries {
       |  (SELECT CAST(SUM(root) AS BIGINT) FROM cl) AS label_sum""".stripMargin
 
   /** One PageRank power-iteration round over co-partitioned inputs —
-    * exposed for plan pinning and the committed plan evidence: with `el`
-    * hash-partitioned on src and `ranks` hash-partitioned on id at the
-    * SAME count (both checkpointed, partitioning preserved by
-    * LogicalRDD), the physical plan must contain exactly ONE exchange:
-    * the dst-keyed contribution transpose. */
+    * exposed for plan pinning: with `el` hash-partitioned on src and
+    * `ranks` hash-partitioned on id at the SAME count (both
+    * checkpointed, partitioning preserved by LogicalRDD), the physical
+    * plan must contain exactly ONE exchange: the dst-keyed contribution
+    * transpose. */
   private[graft] def w08Round(el: DataFrame, ranks: DataFrame,
       base: Long): DataFrame =
     el.join(ranks.select(col("id").as("src"), col("rank").as("r")), "src")
@@ -477,48 +478,6 @@ object WarcQueries {
         expr("(85 * r) div (100 * outdeg)").as("c"))
       .groupBy(col("id")).agg(sum(col("c")).as("sumc"))
       .select(col("id"), (lit(base) + col("sumc")).as("rank"))
-
-  /** Dev-only plan-capture reconstruction of ONE w08 round (committed
-    * plan evidence — the shipped operator checkpoints eagerly, so its
-    * registry plan prints as a bare LogicalRDD scan + sort). `r21Shape`
-    * rebuilds the pre-r22 round body (un-co-partitioned inputs + the
-    * per-round `nodes` left join) over the same checkpointed frames.
-    * The r22 branch leaves the loop's session confs SET so the lazy
-    * explain that follows plans under exactly the planner inputs the
-    * real loop sees (Dev sessions are discarded — nothing to restore). */
-  private[graft] def w08RoundForPlan(spark: SparkSession, d: String,
-      r21Shape: Boolean): DataFrame = {
-    import spark.implicits._
-    val Scale = 1000000000000L
-    val edges = hostEdges(spark, d).localCheckpoint(true)
-    val nodes = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct().localCheckpoint(true)
-    val n = nodes.count()
-    val base = (15L * Scale) / (100L * n)
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-    if (r21Shape) {
-      val el = edges.join(deg, "src").localCheckpoint(true)
-      val ranks = nodes.select($"id", lit(Scale / n).as("rank"))
-      val contrib = el
-        .join(ranks.select($"id".as("src"), $"rank".as("r")), "src")
-        .select($"dst".as("id"), expr("(85 * r) div (100 * outdeg)").as("c"))
-        .groupBy($"id").agg(sum($"c").as("sumc"))
-      nodes.join(contrib, Seq("id"), "left")
-        .select($"id", (lit(base) + coalesce($"sumc", lit(0L))).as("rank"))
-    } else {
-      val nEdges = edges.count()
-      val advisory = spark.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-      val parts = math.max(1L, (nEdges * 24L + advisory - 1) / advisory).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val el = edges.join(deg, "src")
-        .repartition(parts, $"src").localCheckpoint(true)
-      val ranks = nodes.select($"id", lit(Scale / n).as("rank"))
-        .repartition(parts, $"id").localCheckpoint(true)
-      w08Round(el, ranks, base)
-    }
-  }
 
   /** w08: PageRank over the domain link graph — 10 damped (d = 0.85)
     * power-iteration rounds in FIXED-POINT integer arithmetic: ranks are
@@ -581,34 +540,26 @@ object WarcQueries {
     val parts = math.max(1L, (nEdges * 24L + advisory - 1) / advisory).toInt
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
     val base = (15L * Scale) / (100L * n)
-    // AQE is suspended for the loop (save/restore, the withStreamShuffle
-    // idiom): an AdaptiveSparkPlanExec root reports UnknownPartitioning
-    // to Dataset.localCheckpoint, so the checkpointed LogicalRDD would
+    // AQE is suspended for the loop (one scoped withConf): an
+    // AdaptiveSparkPlanExec root reports UnknownPartitioning to
+    // Dataset.localCheckpoint, so the checkpointed LogicalRDD would
     // LOSE the hash partitioning and every round would re-shuffle both
     // join sides (measured: 3 exchanges/round instead of 1; PlanSpec
     // pins the zip). Nothing is given up: the loop's shuffles are
     // already size-pinned to `parts`, so runtime coalescing has nothing
     // to coalesce, and AQE cannot split aggregation skew anyway.
-    // The overrides are session-global: this assumes no other query
-    // plans on the same session while the loop runs (queries run serially).
-    val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val finalRanks =
-      try {
-        val el = edges.join(deg, "src")
-          .repartition(parts, $"src").localCheckpoint(true)
-        var ranks = nodes.select($"id", lit(Scale / n).as("rank"))
-          .repartition(parts, $"id").localCheckpoint(true)
-        for (_ <- 1 to 10) {
-          ranks = w08Round(el, ranks, base).localCheckpoint(true)
-        }
-        ranks
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-        spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
+    val finalRanks = GraftSession.withConf(spark,
+        "spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.adaptive.enabled" -> "false") {
+      val el = edges.join(deg, "src")
+        .repartition(parts, $"src").localCheckpoint(true)
+      var ranks = nodes.select($"id", lit(Scale / n).as("rank"))
+        .repartition(parts, $"id").localCheckpoint(true)
+      for (_ <- 1 to 10) {
+        ranks = w08Round(el, ranks, base).localCheckpoint(true)
       }
+      ranks
+    }
     finalRanks.orderBy($"id")
   }
 

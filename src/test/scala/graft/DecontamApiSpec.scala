@@ -26,10 +26,9 @@ class DecontamApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tmp(name: String) = s"/tmp/graft_decontam_api_$name"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
+    spark = GraftSession.builder("decontam-api-spec").master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("decontam-api-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -15,10 +15,9 @@ class DedupGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
+    spark = GraftSession.builder("dedup-guard-spec").master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("dedup-guard-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -17,10 +17,9 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
+    spark = GraftSession.builder("pipeline-ops-spec").master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("pipeline-ops-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -32,6 +32,49 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def physical(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Keyed operators — aggregates and shuffled joins that require a
+    * distribution of a child — that read a `UnionExec` with no exchange
+    * between them, i.e. planned on UnionExec's output-partitioning
+    * claim, which this Spark build gets wrong (see GraftSession).
+    * Partial aggregates require nothing and are not counted. Adaptive
+    * plans, cached plans and subqueries are walked too. */
+  private def keyedOverUnion(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec, TableCacheQueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.ShuffledJoin
+    import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+    // the plans a node hides from `children`
+    def inner(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case t: TableCacheQueryStageExec => Seq(t.plan)
+      case i: InMemoryTableScanExec => Seq(i.relation.cachedPlan)
+      case _ => p.children
+    }
+    def reachesUnion(p: SparkPlan): Boolean = p match {
+      case _: Exchange => false
+      case _: TableCacheQueryStageExec => inner(p).exists(reachesUnion)
+      case _: QueryStageExec => false // a materialized exchange
+      case _: UnionExec => true
+      case _ => inner(p).exists(reachesUnion)
+    }
+    def walk(p: SparkPlan): Seq[String] = {
+      val here = p match {
+        case _: BaseAggregateExec | _: ShuffledJoin =>
+          p.requiredChildDistribution.zip(p.children).collect {
+            case (d, c) if d != UnspecifiedDistribution && reachesUnion(c) =>
+              p.nodeName
+          }
+        case _ => Nil
+      }
+      here ++ inner(p).flatMap(walk) ++ p.subqueries.flatMap(walk)
+    }
+    walk(plan)
+  }
+
   /** The 10×-scaled cert corpus (`graft.Dev gen-sf`) carries only
     * documents/embeddings/events — TPC-H-table pins CANCEL (not fail)
     * when re-run against it via GRAFT_PLANSPEC_SF. */
@@ -176,16 +219,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // root reports UnknownPartitioning to Dataset.localCheckpoint, so
     // the checkpointed LogicalRDD loses the hash partitioning and every
     // round re-shuffles both join sides (measured: 3 exchanges/round).
-    val priorBc = sp.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val priorAqe = sp.conf.get("spark.sql.adaptive.enabled")
-    sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sp.conf.set("spark.sql.adaptive.enabled", "false")
-    val el = Seq((1L, 2L, 2L), (1L, 1L, 2L), (2L, 1L, 1L))
-      .toDF("src", "dst", "outdeg")
-      .repartition(parts, $"src").localCheckpoint(true)
-    val ranks = Seq((1L, 1000L), (2L, 2000L)).toDF("id", "rank")
-      .repartition(parts, $"id").localCheckpoint(true)
-    try {
+    GraftSession.withConf(sp, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
+      val el = Seq((1L, 2L, 2L), (1L, 1L, 2L), (2L, 1L, 1L))
+        .toDF("src", "dst", "outdeg")
+        .repartition(parts, $"src").localCheckpoint(true)
+      val ranks = Seq((1L, 1000L), (2L, 2000L)).toDF("id", "rank")
+        .repartition(parts, $"id").localCheckpoint(true)
       val df = graft.warc.WarcQueries.w08Round(el, ranks, 7L)
       val root = df.queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -211,9 +251,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       // = 425→id2, 425+1700→id1, plus base 7
       val out = df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(out == Map(1L -> 2132L, 2L -> 432L))
-    } finally {
-      sp.conf.set("spark.sql.autoBroadcastJoinThreshold", priorBc)
-      sp.conf.set("spark.sql.adaptive.enabled", priorAqe)
     }
   }
 
@@ -227,6 +264,44 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val after = (sp.conf.get("spark.sql.shuffle.partitions"),
       sp.conf.get("spark.sql.adaptive.enabled"))
     assert(after == before, s"loop leaked session confs: $before -> $after")
+  }
+
+  test("withConf: restores set keys, unsets unset ones, on throw and nested; " +
+      "compact refuses the union claim") {
+    val sp = spark
+    val shuffle = "spark.sql.shuffle.partitions"
+    val probe = "spark.graft.test.withConfProbe"
+    val before = sp.conf.get(shuffle)
+    assert(sp.conf.getOption(probe).isEmpty)
+    GraftSession.withConf(sp, shuffle -> "7", probe -> "a") {
+      assert(sp.conf.get(shuffle) == "7" && sp.conf.get(probe) == "a")
+      GraftSession.withConf(sp, probe -> "b") {
+        assert(sp.conf.get(probe) == "b")
+      }
+      assert(sp.conf.get(probe) == "a", "inner scope must restore the outer value")
+    }
+    assert(sp.conf.get(shuffle) == before, "a set key must get its prior value back")
+    assert(sp.conf.getOption(probe).isEmpty, "an unset key must be unset again")
+    val thrown = intercept[IllegalStateException] {
+      GraftSession.withConf(sp, shuffle -> "9", probe -> "c") {
+        throw new IllegalStateException("planted")
+      }
+    }
+    assert(thrown.getMessage == "planted")
+    assert(sp.conf.get(shuffle) == before && sp.conf.getOption(probe).isEmpty,
+      "a throwing body must still restore")
+    // a caller-built session with UnionExec's partitioning claim on must
+    // not reach a compaction fold (wrong rows, see StoreLifecycle.compact)
+    val key = graft.analytics.StoreLifecycle.UnionClaim
+    assert(sp.conf.get(key) == "false", "GraftSession must turn the union claim off")
+    val refused = intercept[IllegalStateException] {
+      GraftSession.withConf(sp, key -> "true") {
+        graft.analytics.StoreLifecycle.compact(sp, "graft_no_base", "graft_no_delta",
+          4, Seq("k"))((b, d) => b.unionByName(d).distinct())
+      }
+    }
+    assert(refused.getMessage.contains(key), refused.getMessage)
+    assert(sp.conf.get(key) == "false")
   }
 
   test("t05 repetition: built-in expressions only, no UDF in the plan") {
@@ -353,18 +428,16 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         $"embedding".as("q_emb"),
         org.apache.spark.sql.functions.explode(
           org.apache.spark.sql.functions.lit(probed.toArray)).as("cid"))
-    graft.sim.AnnStore.withBucketedScan(sp) {
-      val df = graft.sim.AnnStore.storeProbe(sp, tbl, q0, probed)
-      val plan = physical(df)
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-      assert(sel.isDefined, s"no bucket pruning in:\n$plan")
-      assert(sel.get.group(1).toInt < sel.get.group(2).toInt,
-        s"probe read every bucket:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning") &&
-        !plan.contains("Exchange rangepartitioning"),
-        s"shuffle crept into the probe:\n$plan")
-      assert(df.count() > 0)
-    }
+    val df = graft.sim.AnnStore.storeProbe(sp, tbl, q0, probed)
+    val plan = physical(df)
+    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
+    assert(sel.isDefined, s"no bucket pruning in:\n$plan")
+    assert(sel.get.group(1).toInt < sel.get.group(2).toInt,
+      s"probe read every bucket:\n$plan")
+    assert(!plan.contains("Exchange hashpartitioning") &&
+      !plan.contains("Exchange rangepartitioning"),
+      s"shuffle crept into the probe:\n$plan")
+    assert(df.count() > 0)
   }
 
   test("s08 IVF-PQ probe: bucket-pruned scan over codes, raw embedding never read") {
@@ -382,23 +455,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         $"embedding".as("q_v"),
         org.apache.spark.sql.functions.explode(
           org.apache.spark.sql.functions.lit(probed.toArray)).as("cid"))
-    graft.sim.AnnStore.withBucketedScan(sp) {
-      val df = graft.sim.AnnStore.s08ProbePlan(sp, Seq(tbl), q0, probed)
-      val plan = physical(df)
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
-      assert(sel.isDefined, s"no bucket pruning in:\n$plan")
-      assert(sel.get.group(1).toInt < sel.get.group(2).toInt,
-        s"probe read every bucket:\n$plan")
-      val storeScan = plan.linesIterator
-        .find(l => l.contains("FileScan") && l.contains(tbl))
-      assert(storeScan.isDefined, s"no store scan in:\n$plan")
-      assert(!storeScan.get.replace("q_emb", "").contains("embedding"),
-        s"probe scan reads the raw embedding column:\n${storeScan.get}")
-      assert(!plan.contains("Exchange hashpartitioning") &&
-        !plan.contains("Exchange rangepartitioning"),
-        s"shuffle crept into the probe:\n$plan")
-      assert(df.count() > 0)
-    }
+    val df = graft.sim.AnnStore.s08ProbePlan(sp, Seq(tbl), q0, probed)
+    val plan = physical(df)
+    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
+    assert(sel.isDefined, s"no bucket pruning in:\n$plan")
+    assert(sel.get.group(1).toInt < sel.get.group(2).toInt,
+      s"probe read every bucket:\n$plan")
+    val storeScan = plan.linesIterator
+      .find(l => l.contains("FileScan") && l.contains(tbl))
+    assert(storeScan.isDefined, s"no store scan in:\n$plan")
+    assert(!storeScan.get.replace("q_emb", "").contains("embedding"),
+      s"probe scan reads the raw embedding column:\n${storeScan.get}")
+    assert(!plan.contains("Exchange hashpartitioning") &&
+      !plan.contains("Exchange rangepartitioning"),
+      s"shuffle crept into the probe:\n$plan")
+    assert(df.count() > 0)
   }
 
   test("q32 range join: equi-join on (user, bucket) — no nested-loop plan") {
@@ -669,7 +740,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // shapes are pinned in StreamingSpec; sweeping them here would
     // re-run every drain per suite run for a window-free scan plan
     val skipped = (1 to 9).map(i => f"st$i%02d_").toSet + "p03_"
+    // the union check must be able to fail: a grouping over a union of
+    // two identically hash-partitioned children skips its exchange only
+    // when the claim is on
+    val sp = spark
+    import sp.implicits._
+    val claimed = () => keyedOverUnion(sp.range(64).repartition(4, $"id")
+      .union(sp.range(64).repartition(4, $"id")).groupBy($"id").count()
+      .queryExecution.executedPlan)
+    assert(GraftSession.withConf(sp,
+      graft.analytics.StoreLifecycle.UnionClaim -> "true")(claimed()).nonEmpty,
+      "union check blind to a grouping planned on the claim")
+    assert(claimed().isEmpty)
     val offenders = scala.collection.mutable.Map[String, Int]()
+    val unionOffenders = scala.collection.mutable.Map[String, Seq[String]]()
+    val eager = scala.collection.mutable.Set[String]()
     // log-capture channel: a root-logger appender filtering on the
     // WindowExec warning text, attributing events to the query whose
     // construction is in flight (volatile: executor tasks run on other
@@ -706,6 +791,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
               case w: WindowExec if w.partitionSpec.isEmpty => 1 }.sum }.sum
           val hits = logicalHits + cachedHits
           if (hits > 0) offenders(name) = hits
+          val overUnion = keyedOverUnion(df.queryExecution.executedPlan)
+          if (overUnion.nonEmpty) unionOffenders(name) = overUnion
+          if (!lp.exists {
+              case _: org.apache.spark.sql.execution.datasources.LogicalRelation |
+                  _: InMemoryRelation => true
+              case _ => false
+            }) eager += name
         }
       current = "post-sweep"
     } finally {
@@ -716,6 +808,39 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     warned.forEach((n, c) =>
       if (n != "startup" && n != "post-sweep")
         offenders(n) = offenders.getOrElse(n, 0) + c)
+    // union claim: no keyed operator (aggregate or shuffled join) may
+    // read a UnionExec with no exchange between them — GraftSession
+    // turns the claim off, so every such path must carry its exchange
+    assert(unionOffenders.isEmpty,
+      s"keyed operator(s) planned on UnionExec's partitioning claim: " +
+        unionOffenders.toSeq.sortBy(_._1).map { case (n, ops) =>
+          s"$n(${ops.mkString(",")})" }.mkString(" "))
+    // what the union check cannot see: queries whose returned frame reads
+    // no file, table or cached relation — every union and keyed operator
+    // in them ran eagerly behind a localCheckpoint (or collect) during
+    // construction, so their plans are gone by the time the sweep looks.
+    // The streaming drains skipped above are in the same position.
+    val eagerExpected = Set(
+      "d02_minhash_lsh", "d03_simhash", "d04_ngram_jaccard",
+      "d06_dedup_clusters", "d08_signature_store", "d09_minhash_estimate",
+      "d10_store_incremental", "d11_line_dedup", "d12_span_dedup",
+      "d13_span_removal", "d14_bloom_dedup", "d15_ngram_overlap",
+      "d22_containment", "d24_unified_dedup", "io01_jsonl_roundtrip",
+      "m04_image_neardup", "m05_frame_neardup", "m06_audio_neardup",
+      "p06_decontaminated_split", "s02_embedding_neardup",
+      "s03_ann_lsh_recall", "s04_ann_ivf", "s05_ann_pq",
+      "s06_semantic_dedup", "s06a_assign_checksums", "s06b_pair_audit",
+      "s06x_fold_canary", "s07_ann_store", "s08_ann_ivfpq",
+      "s09_ann_ivfpq_rerank", "s10_knn_graph", "s11_coreset_select",
+      "s11b_coreset_cluster", "s12_ann_search_heldout",
+      "s13_ann_random_projection", "st10_stream_semantic_gate",
+      "st11_stream_ngram_gate", "t11_bpe_vocab", "t13_quality_model",
+      "t14_bpe_encode", "t17_lm_perplexity", "t18_budget_select",
+      "t20_unigram_lm", "w07_link_graph", "w08_pagerank",
+      "w09_warcgz_pipeline")
+    assert(eager.toSet == eagerExpected,
+      s"fully eager queries changed: new ${(eager.toSet -- eagerExpected).toSeq.sorted}, " +
+        s"gone ${(eagerExpected -- eager.toSet).toSeq.sorted} — update the list")
     val undocumented = offenders.keySet -- allowed.keySet
     assert(undocumented.isEmpty,
       s"NEW unpartitioned window(s) outside the documented bounded " +

@@ -18,10 +18,9 @@ class StoreCompactionPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
+    spark = GraftSession.builder("compaction-policy-spec").master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("compaction-policy-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()

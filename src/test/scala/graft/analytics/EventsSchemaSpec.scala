@@ -9,6 +9,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+
 /** The driver regenerates /root/testdata between rounds and events.ts has
   * already shipped as both parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
   * (the r8→r9 flip broke 9 queries and silently corrupted 2 streaming
@@ -21,11 +23,9 @@ class EventsSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
+    spark = GraftSession.builder("events-schema-spec").master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("events-schema-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
 

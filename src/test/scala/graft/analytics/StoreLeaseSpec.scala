@@ -7,6 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+
 /** r12 lifecycle hardening:
   *  - the writer LEASE that turns the documented single-writer-per-
   *    warehouse assumption into an enforced contract (a second writer
@@ -24,10 +26,9 @@ class StoreLeaseSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   private def newSession(): SparkSession = {
-    val sp = SparkSession.builder().master("local[4]")
+    val sp = GraftSession.builder("store-lease-spec").master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("store-lease-spec").getOrCreate()
+      .getOrCreate()
     sp.sparkContext.setLogLevel("WARN")
     sp
   }

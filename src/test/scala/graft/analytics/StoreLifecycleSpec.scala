@@ -7,6 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+
 /** Cross-session store lifecycle (r10 verdict item 2): a persisted
   * store generation must be REUSED by a later session — not rebuilt
   * under a fresh name with the old one abandoned — and superseded /
@@ -27,10 +29,9 @@ class StoreLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
+    spark = GraftSession.builder("store-lifecycle-spec").master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("store-lifecycle-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     corpus = Files.createTempDirectory("graft-lifecycle-corpus")
     copyCorpus(corpus, "embeddings", "documents")

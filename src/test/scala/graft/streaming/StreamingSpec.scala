@@ -8,6 +8,8 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+
 import StreamingOps.{Event, SessionOut}
 
 /** Drives the flatMapGroupsWithState sessionizer through a real
@@ -18,10 +20,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
+    spark = GraftSession.builder("streaming-spec").master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("streaming-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
 

@@ -7,6 +7,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
 import graft.rake.{Rake, Stopwords}
 
 /** Generators for the text kernels' equivalence properties: pieces glued
@@ -124,10 +125,9 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val texts: Seq[String] = KernelGen.samples(3000)
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
+    spark = GraftSession.builder("kernel-spec").master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("kernel-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()

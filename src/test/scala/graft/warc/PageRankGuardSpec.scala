@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+
 /** w08's loop drops the per-round `nodes` join on the invariant
   * dsts ⊇ srcs (every parsed page plants a self-edge). A graph that
   * breaks it must fail loudly, never return a shrunken rank table. */
@@ -12,10 +14,9 @@ class PageRankGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
+    spark = GraftSession.builder("pagerank-guard-spec").master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("pagerank-guard-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()

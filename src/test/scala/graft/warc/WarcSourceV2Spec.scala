@@ -7,6 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+
 /** Drives the splittable WARC DataSourceV2 with byte-range splits far
   * smaller than the file, asserting exactly-once record recovery against
   * the trusted single-pass splitter. */
@@ -15,10 +17,9 @@ class WarcSourceV2Spec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
+    spark = GraftSession.builder("warc-v2-spec").master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("warc-v2-spec").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -45,6 +45,16 @@ import org.apache.spark.sql.SparkSession
   *    before a read resolves, and `Tables.adaptEvents` turns the long
   *    back into the (`ts`, `ts_nanos`) contract.
   *  - UTC session time zone, graft SQL extensions, Kryo, no UI.
+  *
+  * Concurrency decision: a query runs its Spark actions one after the
+  * other, except where [[concurrently]] overlaps actions that do not
+  * depend on each other (the release's pair engines, its writes, its
+  * reconciliation reads). At small sizes most stages run one task, so
+  * a serial chain leaves cores idle between jobs. The width is the
+  * number of bodies at the call site, on the default FIFO scheduler: no
+  * conf key, environment variable or scheduler pool. Session confs are
+  * global to the session, so [[withConf]] refuses to run while a
+  * concurrent block is in flight on it.
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -95,8 +105,14 @@ object GraftSession {
     * as it was: a key that held a value gets it again, a key that was
     * unset is unset again — also when `body` throws. Nested scopes
     * unwind innermost first. The overrides are session-global while
-    * `body` runs: queries on one session run serially. */
+    * `body` runs, so every action on the session would see them: this
+    * throws, naming the first key, while a [[concurrently]] block is in
+    * flight on `s` (inside one of its bodies too). */
   def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    if (kvs.nonEmpty && concurrentBlocks.synchronized(concurrentBlocks.containsKey(s)))
+      throw new IllegalStateException(
+        s"withConf(${kvs.head._1}): a concurrently block is in flight on this " +
+          "session; a session conf set now would reach its other actions")
     val prior = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
     kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
@@ -105,4 +121,55 @@ object GraftSession {
       case (k, None) => s.conf.unset(k)
     }
   }
+
+  /** Concurrent blocks in flight per session; a session with none has no
+    * entry. Weak keys: a dropped session does not stay reachable. */
+  private val concurrentBlocks = new java.util.WeakHashMap[SparkSession, Integer]()
+
+  private def enterConcurrent(s: SparkSession, delta: Int): Unit =
+    concurrentBlocks.synchronized {
+      val n = Option(concurrentBlocks.get(s)).fold(0)(_.intValue) + delta
+      if (n == 0) concurrentBlocks.remove(s) else concurrentBlocks.put(s, n)
+    }
+
+  /** Daemon threads for [[concurrently]]'s other bodies, built on first
+    * use. Cached, so the width is what the call sites ask for, and a
+    * body may itself call [[concurrently]] without waiting on a slot. */
+  private lazy val pool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"graft-concurrently-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  /** Run independent Spark actions side by side and return their results
+    * in argument order. The first body runs on the calling thread; the
+    * others run on a daemon pool through
+    * `SQLExecution.withThreadLocalCaptured`, so each keeps the caller's
+    * active session and local properties (job group, job description).
+    * Waits for EVERY body, then rethrows the first failure in argument
+    * order: no job of the block outlives the call. The bodies must not
+    * depend on each other's side effects. */
+  def concurrently[T](s: SparkSession)(bodies: (() => T)*): Seq[T] = {
+    val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    enterConcurrent(s, 1)
+    try {
+      val others = bodies.drop(1).map(b =>
+        org.apache.spark.sql.execution.SQLExecution
+          .withThreadLocalCaptured(classic, pool)(b()))
+      val results = bodies.headOption.map(b => attempt(b())).toSeq ++
+        others.map(f => attempt(f.join()))
+      results.map {
+        case Right(v) => v
+        case Left(e: java.util.concurrent.CompletionException)
+            if e.getCause != null => throw e.getCause
+        case Left(e) => throw e
+      }
+    } finally enterConcurrent(s, -1)
+  }
+
+  private def attempt[T](body: => T): Either[Throwable, T] =
+    try Right(body) catch { case e: Throwable => Left(e) }
 }

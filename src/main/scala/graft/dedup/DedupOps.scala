@@ -5,6 +5,7 @@ import scala.util.hashing.MurmurHash3
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.analytics.Tables
 
@@ -870,53 +871,137 @@ object DedupOps {
       .crossJoin(normHits.agg(count(lit(1)).as("n_norm_contaminated")))
   }
 
-  /** Bound on the wait for a CC round's observed convergence count.
-    * The metric arrives through the listener bus right after the round's
-    * checkpoint action, normally within milliseconds; a count that never
-    * arrives must fail the loop, not hang it. */
+  /** Bound on the wait for an observed CC count (the edge count, a
+    * round's convergence count). The metric arrives through the listener
+    * bus right after the checkpoint action it rides, normally within
+    * milliseconds; a count that never arrives must fail the call, not
+    * hang it. */
   private val ObservedWait = scala.concurrent.duration.Duration(120, "s")
 
-  /** The round's `changed` count from its [[org.apache.spark.sql.Observation]],
-    * waited on with a bound: no count means no convergence decision, so
-    * a missing one throws naming the round. */
-  private[graft] def observedChanged(obs: org.apache.spark.sql.Observation, round: Int,
-      wait: scala.concurrent.duration.Duration = ObservedWait): Long =
-    try scala.concurrent.Await.result(obs.future, wait).getAs[Long]("changed")
+  /** The long metric `name` of `obs`, waited on with a bound: a missing
+    * count throws naming `what`, never guesses. */
+  private def observedLong(obs: org.apache.spark.sql.Observation, name: String,
+      what: String, wait: scala.concurrent.duration.Duration): Long =
+    try scala.concurrent.Await.result(obs.future, wait).getAs[Long](name)
     catch {
       case _: java.util.concurrent.TimeoutException =>
         throw new IllegalStateException(
-          s"connectedComponents round $round: convergence count not observed " +
-            s"within $wait after the round's checkpoint — refusing to " +
-            "guess whether labels converged")
+          s"connectedComponents $what not observed within $wait after its " +
+            "checkpoint — refusing to guess")
     }
 
-  /** d06: dedup CLUSTERING — the step that turns pair emission (d02/d04)
-    * into an actionable keep/drop decision: connected components over the
-    * confirmed near-dup pairs (consumed from the session's
-    * [[ensureVerifiedPairs]] artifact — built on first use, reused by
-    * d16), one keeper (min id) per component. The driver loop runs one
-    * action per round to test convergence — the standard shape for
-    * iterative algorithms (this is iteration control, not data
-    * movement; each round's data work is two shuffle joins).
-    * Oracle: DuckDB recursive CTE computing the same components. */
-  /** Connected components over an undirected pair list `(id_a, id_b)` →
-    * `(id, label)` with label = the component's min id.
+  /** The round's `changed` count: no count means no convergence
+    * decision, so a missing one throws naming the round. */
+  private[graft] def observedChanged(obs: org.apache.spark.sql.Observation, round: Int,
+      wait: scala.concurrent.duration.Duration = ObservedWait): Long =
+    observedLong(obs, "changed", s"round $round: convergence count", wait)
+
+  /** Symmetric edge rows per contraction task. One task's union-find
+    * holds every node of its rows in memory (at most two map entries
+    * per row), so this bounds a task's map; the partition count it
+    * derives is capped at `spark.sql.shuffle.partitions`. */
+  private val CcEdgesPerTask = 1L << 20
+
+  /** Connected components over an undirected pair list `(id_a, id_b)` of
+    * integral ids → `(id, label)` with label = the component's min id,
+    * eagerly checkpointed, `id` and `label` of the ids' (widened) type.
     *
-    * Each round is (1) min-label exchange — every node adopts the
-    * smallest label among itself and its neighbors — followed by
-    * (2) one pointer-jumping hop — `label ← label(label)` — which
-    * SHORT-CIRCUITS label chains: a plain exchange-only loop needs
-    * O(diameter) rounds (a 25-hop path would exceed maxRounds=20 and,
-    * before this fix, exit SILENTLY with wrong labels), while the added
-    * hop at least doubles propagation distance per round, giving
-    * O(log diameter) rounds — the same doubling large-star/small-star
-    * achieves. The hop is safe: a node's label is always the id of some
-    * node in its own component (labels only ever move along edges), so
-    * `label(label)` stays in-component and is monotonically ≤.
-    * If the round cap is STILL hit while labels are changing, this
-    * throws — wrong cluster labels must never leave silently (same
-    * no-silent-truncation contract as the LSH bucket guard). */
-  private[graft] def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
+    * Contract first. The symmetric edges are checkpointed once; the
+    * checkpoint action also observes their count (no extra job), and
+    * the edge partition count is derived from it: ⌈edges /
+    * [[CcEdgesPerTask]]⌉, capped at `shuffle.partitions`. One
+    * `mapPartitions` pass runs min-root union-find inside each partition
+    * (edges hashed on `id_a`, or coalesced when the count is 1, which
+    * moves nothing) and emits `(node, local min)`. At one partition that
+    * IS the answer — every edge was in the one union-find — so it is
+    * returned with no confirming round: two jobs.
+    *
+    * Above one partition the local minima only contract the graph (each
+    * partition's component is a star on its min), so the min-label
+    * rounds below run on the contracted `(node, local min)` edges, which
+    * connect exactly what the input connects. Each round is (1) min-label
+    * exchange — every node adopts the smallest label among itself and
+    * its neighbors — then (2) root hooking — every node whose old label
+    * was r adopts the least label any node labelled r reached — then
+    * (3) one pointer-jumping hop — `label ← label(label)`. Exchange alone
+    * needs O(diameter) rounds; exchange + hop only doubles along label
+    * chains whose ids increase, and a path with shuffled ids took
+    * O(length) rounds (a 100-node one 34–70 rounds, over the cap). The
+    * hook merges whole label trees, Shiloach–Vishkin style: measured
+    * 7–12 rounds for shuffled-id paths of 50–3000 nodes. Every step is
+    * safe: a node's label is always the id of some node in its own
+    * component (labels only ever move along edges or within a label
+    * tree), so each stays in-component and monotonically ≤.
+    * Convergence is observed on each round's checkpoint action under a
+    * bounded wait. If the round cap is STILL hit while labels are
+    * changing, this throws — wrong cluster labels must never leave
+    * silently (same no-silent-truncation contract as the LSH bucket
+    * guard).
+    *
+    * A null id connects nothing: it is one `(null, null)` row, as in
+    * the rounds. `edgePartitions` forces the partition count (a test
+    * seam for the multi-partition path). */
+  private[graft] def connectedComponents(pairs: DataFrame, maxRounds: Int = 20,
+      edgePartitions: Option[Int] = None): DataFrame = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    val sized = new org.apache.spark.sql.Observation()
+    val edges = pairs
+      .unionByName(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
+      .observe(sized, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    val idType = edges.schema("id_a").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"connectedComponents: id_a/id_b must be integral, got $idType")
+    val parts = edgePartitions.getOrElse {
+      val n = observedLong(sized, "n", "edge count", ObservedWait)
+      math.min((n + CcEdgesPerTask - 1) / CcEdgesPerTask,
+        s.conf.get("spark.sql.shuffle.partitions").toLong).max(1L).toInt
+    }
+    val placed =
+      if (parts == 1) edges.coalesce(1) else edges.repartition(parts, col("id_a"))
+    val contracted = placed
+      .select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .as[(Option[Long], Option[Long])]
+      .mapPartitions(localMinRoots)
+      .toDF("id_a", "id_b")
+    def typed(labels: DataFrame): DataFrame =
+      labels.select(col("id").cast(idType), col("label").cast(idType))
+    if (parts == 1) typed(contracted.toDF("id", "label")).localCheckpoint(true)
+    else typed(minLabelRounds(contracted, maxRounds))
+  }
+
+  /** Min-root union-find over one partition's edge rows: every node seen
+    * maps to the least id it is connected to through these rows. A row
+    * with a null end connects nothing; the partition then also emits
+    * one `(None, None)`. */
+  private def localMinRoots(rows: Iterator[(Option[Long], Option[Long])])
+      : Iterator[(Option[Long], Option[Long])] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    var sawNull = false
+    rows.foreach {
+      case (Some(a), Some(b)) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      case (a, b) =>
+        sawNull = true
+        a.foreach(find); b.foreach(find)
+    }
+    val roots = parent.keys.toArray.map(x => (Option(x), Option(find(x))))
+    roots.iterator ++ (if (sawNull) Iterator((None, None)) else Iterator.empty)
+  }
+
+  /** The min-label + root-hook + pointer-jump rounds of
+    * [[connectedComponents]] over an undirected pair list `(id_a, id_b)`
+    * of longs → `(id, label)`. */
+  private def minLabelRounds(pairs: DataFrame, maxRounds: Int): DataFrame = {
     val edges = pairs
       .unionByName(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .localCheckpoint(true)
@@ -930,9 +1015,13 @@ object DedupOps {
           .withColumnRenamed("label", "nbr_label"), "id_b")
         .groupBy(col("id_a").as("id")).agg(min(col("nbr_label")).as("nbr_label"))
       val exchanged = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
-          (col("nbr_label") < col("label")).as("chg"))
+        .select(col("id"), col("label").as("old"),
+          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
+      // root hooking: every node of an old label's tree takes the least
+      // label any node of that tree reached, so trees merge whole
+      // instead of one hop per round at their edges
+      val hooked = exchanged.withColumn("label", least(col("label"),
+        min(col("label")).over(Window.partitionBy(col("old")))))
       // pointer-jumping: label ← label's own current label (min-kept);
       // self-labeled roots join to themselves, so the left join always hits
       //
@@ -941,16 +1030,16 @@ object DedupOps {
       // already an action over every row, so a separate filter(chg)
       // .count() job per round only re-scanned the checkpointed blocks
       // to compute a number the checkpoint pass had already seen.
-      // count(when(chg, 1)) ≡ the former filter-count (null/false chg
-      // rows excluded) and `count` is never null even on an empty frame.
+      // Labels only decrease, so a changed label is one below its old
+      // value; count(when(label < old, 1)) skips the null id's null
+      // compare, and `count` is never null even on an empty frame.
       val obs = new org.apache.spark.sql.Observation()
-      val next = exchanged
+      val next = hooked
         .join(labels.select(col("id").as("label"), col("label").as("ll")),
           Seq("label"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("ll"), col("label"))).as("label"),
-          (col("chg") || col("ll") < col("label")).as("chg"))
-        .observe(obs, count(when(col("chg"), lit(1))).as("changed"))
+        .select(col("id"), col("old"),
+          least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
+        .observe(obs, count(when(col("label") < col("old"), lit(1))).as("changed"))
         .localCheckpoint(true)
       rounds += 1
       changed = observedChanged(obs, rounds)
@@ -964,6 +1053,12 @@ object DedupOps {
     labels
   }
 
+  /** d06: dedup CLUSTERING — the step that turns pair emission (d02/d04)
+    * into an actionable keep/drop decision: connected components over the
+    * confirmed near-dup pairs (consumed from the session's
+    * [[ensureVerifiedPairs]] artifact — built on first use, reused by
+    * d16), one keeper (min id) per component.
+    * Oracle: DuckDB recursive CTE computing the same components. */
   def d06_dedup_clusters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val pairs = ensureVerifiedPairs(s, d).select($"id_a", $"id_b")

@@ -164,7 +164,9 @@ object TrainingPipeline {
     *
     * Scale shape: both pair engines are the certified guarded chains
     * (banded LSH buckets / df-capped prefix × index, longs-only
-    * shuffles), CC is O(log diameter) rounds over confirmed-pair mass,
+    * shuffles), run concurrently ([[graft.GraftSession.concurrently]]);
+    * CC is one union-find pass while the pair mass fits one task, else
+    * min-label rounds over the contracted graph,
     * the keeper is one map-side-combinable struct-max aggregate, and
     * the caller's keep/drop is one doc_id anti-join of the corpus. */
   private[graft] def unifiedClusters(gated: DataFrame): DataFrame = {
@@ -172,15 +174,16 @@ object TrainingPipeline {
     import s.implicits._
     import graft.dedup.DedupOps
     val docs = gated.select($"doc_id", $"text")
-    val nd = DedupOps.withCache(
-        docs.withColumn("sig", DedupOps.sigWithHashesU($"text"))) { sigd =>
-      DedupOps.withCache(DedupOps.scoredOf(sigd)) { scored =>
-        DedupOps.confirmedPairsOf(sigd, scored)
-      }
-    }
-    val ct = DedupOps.containmentPairsOf(docs).select($"id_a", $"id_b")
-    val labels = DedupOps.connectedComponents(
-        nd.select($"id_a", $"id_b").unionByName(ct))
+    // the two engines share only the gated input: run them side by side
+    val Seq(nd, ct) = graft.GraftSession.concurrently(s)(
+      () => DedupOps.withCache(
+          docs.withColumn("sig", DedupOps.sigWithHashesU($"text"))) { sigd =>
+        DedupOps.withCache(DedupOps.scoredOf(sigd)) { scored =>
+          DedupOps.confirmedPairsOf(sigd, scored)
+        }
+      }.select($"id_a", $"id_b"),
+      () => DedupOps.containmentPairsOf(docs).select($"id_a", $"id_b"))
+    val labels = DedupOps.connectedComponents(nd.unionByName(ct))
       .withColumnRenamed("id", "doc_id")
     val members = labels.join(gated.select($"doc_id", $"n_tok"), "doc_id")
     val keepers = members.groupBy($"label")
@@ -765,7 +768,13 @@ object TrainingPipeline {
     * decontaminated variant, d15's linear gram-digest join; the
     * reconciliation itself reads the written files once each and
     * collects only BOUNDED aggregates (8 shards / ≤5 dispositions /
-    * ≤8 check rows). */
+    * ≤8 check rows). Independent actions overlap
+    * ([[graft.GraftSession.concurrently]]): the unified decision's two
+    * pair engines; then three branches — the shards write, the
+    * provenance write followed by the card write, and the recomputed
+    * audit; then every reconciliation read at once. Each stage runs
+    * one task or a few at these sizes, so a serial chain of them leaves
+    * cores idle; the plans are unchanged. */
   def releaseDrill(s: SparkSession, docs: DataFrame, outDir: String,
       maxRecordsPerFile: Long = 50000L): DataFrame =
     releaseDrillImpl(s, docs, benchDocs = None, outDir, maxRecordsPerFile)
@@ -824,36 +833,54 @@ object TrainingPipeline {
     // + CC); unifiedClusters is already eagerly checkpointed
     val clusters =
       if (unifiedDedup) Some(unifiedClusters(gatedFrom(verdict))) else None
+    // Each artifact below is a lazy val, forced by one of the two
+    // concurrently blocks: (1)–(3) run as three branches, then every
+    // reconciliation read at once.
     // (1) shards — returned frame is the from-disk audit already
-    val diskAudit = materializeShardsOf(verdict, useThreshold,
+    lazy val diskAudit = materializeShardsOf(verdict, useThreshold,
       s"$outDir/shards", maxRecordsPerFile, clusters)
     // (2) provenance, widened with n_tok (+ lang when present);
     // contaminated docs appear with their own disposition, tail fields
     // sentinel-(-1) like every other pre-tail drop
-    val provTail = provenanceOf(verdict, useThreshold, withTok = true,
-      clusters = clusters)
-    val prov = flagged match {
-      case Some(f) =>
-        val contaminated = core.join(f, "doc_id")
-          .select($"doc_id", lit("contaminated").as("disposition"),
-            lit("none").as("gate_reason"), lit(-1L).as("keeper_id"),
-            lit(-1L).as("cap_draw"), lit(-1L).as("shard"),
-            lit(-1L).as("shard_rank"),
-            size(graft.text.TextOps.whitespaceTokens($"text"))
-              .cast("long").as("n_tok"))
-        provTail.unionByName(contaminated)
-      case None => provTail
+    lazy val provDisk = {
+      val provTail = provenanceOf(verdict, useThreshold, withTok = true,
+        clusters = clusters)
+      val prov = flagged match {
+        case Some(f) =>
+          val contaminated = core.join(f, "doc_id")
+            .select($"doc_id", lit("contaminated").as("disposition"),
+              lit("none").as("gate_reason"), lit(-1L).as("keeper_id"),
+              lit(-1L).as("cap_draw"), lit(-1L).as("shard"),
+              lit(-1L).as("shard_rank"),
+              size(graft.text.TextOps.whitespaceTokens($"text"))
+                .cast("long").as("n_tok"))
+          provTail.unionByName(contaminated)
+        case None => provTail
+      }
+      val provOut =
+        if (docs.columns.contains("lang"))
+          prov.join(docs.select($"doc_id", $"lang"), "doc_id")
+        else prov
+      provOut.write.mode("overwrite").parquet(s"$outDir/provenance")
+      s.read.parquet(s"$outDir/provenance")
     }
-    val provOut =
-      if (docs.columns.contains("lang"))
-        prov.join(docs.select($"doc_id", $"lang"), "doc_id")
-      else prov
-    provOut.write.mode("overwrite").parquet(s"$outDir/provenance")
-    val provDisk = s.read.parquet(s"$outDir/provenance")
     // (3) card FROM the written provenance
-    cardRollupOf(provDisk).write.mode("overwrite").parquet(s"$outDir/card")
-    val cardDisk = s.read.parquet(s"$outDir/card")
-    val shardsDisk = s.read.parquet(s"$outDir/shards")
+    lazy val cardDisk = {
+      cardRollupOf(provDisk).write.mode("overwrite").parquet(s"$outDir/card")
+      s.read.parquet(s"$outDir/card")
+    }
+    // rendered in the [[AuditCols]] order EXPLICITLY — Dev's baseline
+    // parsing indexes these fields by that shared constant, so a column
+    // added to the audit frame cannot silently shift what gets parsed
+    def renderAudit(a: DataFrame): String =
+      a.orderBy("shard").select(AuditCols.map(col): _*)
+        .collect().map(r => r.mkString("/")).mkString(",")
+    lazy val recomputedAudit =
+      renderAudit(shardedAuditOf(verdict, useThreshold, clusters))
+    graft.GraftSession.concurrently(s)(
+      () => diskAudit, () => cardDisk, () => recomputedAudit)
+
+    lazy val shardsDisk = s.read.parquet(s"$outDir/shards")
       .withColumn("shard", $"shard".cast("long"))
     // bounded per-key (n_docs, n_tokens) maps rendered as sorted strings
     def render(rows: Array[(String, Long, Long)]): String =
@@ -862,50 +889,50 @@ object TrainingPipeline {
       render(df.groupBy(key.cast("string").as("k"))
         .agg(count(lit(1)).as("d"), sum(tok).as("t"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
-    val shardFiles = keyMass(shardsDisk, $"shard", $"n_tok")
-    val shardProv = keyMass(provDisk.filter($"disposition" === "kept"),
+    lazy val shardFiles = keyMass(shardsDisk, $"shard", $"n_tok")
+    lazy val shardProv = keyMass(provDisk.filter($"disposition" === "kept"),
       $"shard", $"n_tok")
-    val shardCard = render(cardDisk.filter($"section" === "shard")
+    lazy val shardCard = render(cardDisk.filter($"section" === "shard")
       .collect().map(r => (r.getAs[String]("key"),
         r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"))))
-    val dispCard = cardDisk.filter($"section" === "disposition")
+    lazy val dispCard = cardDisk.filter($"section" === "disposition")
       .collect().map(r => (r.getAs[String]("key"),
         r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens")))
-    val nInput = core.count()
-    val nProv = provDisk.count()
-    val keptCard = dispCard.filter(_._1 == "kept")
-      .map(e => (e._2, e._3)).headOption.getOrElse((0L, 0L))
-    val shardTotals = shardsDisk
+    lazy val nInput = core.count()
+    lazy val nProv = provDisk.count()
+    lazy val shardTotals = shardsDisk
       .agg(count(lit(1)).as("d"), coalesce(sum($"n_tok"), lit(0L)).as("t"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).head
-    // rendered in the [[AuditCols]] order EXPLICITLY — Dev's baseline
-    // parsing indexes these fields by that shared constant, so a column
-    // added to the audit frame cannot silently shift what gets parsed
-    def renderAudit(a: DataFrame): String =
-      a.orderBy("shard").select(AuditCols.map(col): _*)
-        .collect().map(r => r.mkString("/")).mkString(",")
-    val decontamChecks = flagged.toSeq.flatMap { f =>
-      // reconciled FROM THE WRITTEN FILE, against the recomputed flag
-      // decision; liveness: a benchmark flagging nothing certifies
-      // nothing, so zero contaminated mass FAILS the drill
-      val nContamDisk =
-        provDisk.filter($"disposition" === "contaminated").count()
-      Seq(
-        ("contaminated_mass_reconciles_from_disk",
-          nContamDisk.toString, f.count().toString),
-        ("contamination_is_live", (nContamDisk > 0).toString, "true"))
-    }
+    lazy val renderedDiskAudit = renderAudit(diskAudit)
+    // reconciled FROM THE WRITTEN FILE, against the recomputed flag
+    // decision; liveness: a benchmark flagging nothing certifies
+    // nothing, so zero contaminated mass FAILS the drill
+    lazy val nContamDisk =
+      provDisk.filter($"disposition" === "contaminated").count()
+    lazy val nFlagged = flagged.fold(0L)(_.count())
     // the unified drill's liveness pin, FROM THE WRITTEN provenance (the
     // decontam drill's device): a unified stage that dropped nothing
     // would reconcile vacuously — on the chain fixture the exact stage
     // drops 0 (no byte copies), so nonzero here is exactly the unified
     // decision firing
+    lazy val nDup = provDisk.filter($"disposition" === "duplicate").count()
+    graft.GraftSession.concurrently(s)(Seq[() => Any](
+      () => shardFiles, () => shardProv, () => shardCard, () => dispCard,
+      () => nInput, () => nProv, () => shardTotals, () => renderedDiskAudit) ++
+      (if (flagged.isDefined) Seq(() => nContamDisk, () => nFlagged) else Nil) ++
+      (if (unifiedDedup) Seq(() => nDup) else Nil): _*)
+
+    val keptCard = dispCard.filter(_._1 == "kept")
+      .map(e => (e._2, e._3)).headOption.getOrElse((0L, 0L))
+    val decontamChecks = flagged.toSeq.flatMap { _ =>
+      Seq(
+        ("contaminated_mass_reconciles_from_disk",
+          nContamDisk.toString, nFlagged.toString),
+        ("contamination_is_live", (nContamDisk > 0).toString, "true"))
+    }
     val unifiedChecks =
       if (!unifiedDedup) Nil
-      else {
-        val nDup = provDisk.filter($"disposition" === "duplicate").count()
-        Seq(("unified_dedup_is_live", (nDup > 0).toString, "true"))
-      }
+      else Seq(("unified_dedup_is_live", (nDup > 0).toString, "true"))
     val checks = Seq(
       ("shard_files_eq_provenance_kept", shardFiles, shardProv),
       ("shard_files_eq_card_shard_section", shardFiles, shardCard),
@@ -915,9 +942,7 @@ object TrainingPipeline {
       ("card_kept_mass_eq_shard_files",
         s"${keptCard._1}/${keptCard._2}",
         s"${shardTotals._1}/${shardTotals._2}"),
-      ("disk_audit_eq_recomputed_audit",
-        renderAudit(diskAudit),
-        renderAudit(shardedAuditOf(verdict, useThreshold, clusters)))) ++
+      ("disk_audit_eq_recomputed_audit", renderedDiskAudit, recomputedAudit)) ++
       decontamChecks ++ unifiedChecks
     checks.toDF("check", "lhs", "rhs")
       .withColumn("pass", $"lhs" === $"rhs")

@@ -1182,22 +1182,20 @@ class DedupGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     // with the pointer-jumping hop propagation distance at least doubles
     // per round, so this must converge (and never throw the new
     // non-convergence guard) well inside the default cap
+    // — on the one-partition contraction and on the forced rounds
     val pairs = (0L until 100L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = DedupOps.connectedComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(labels.size == 101)
-    assert(labels.values.forall(_ == 0L), "every chain node must label to min id 0")
+    for (parts <- Seq(None, Some(3))) {
+      val labels = DedupOps.connectedComponents(pairs, edgePartitions = parts)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(labels.size == 101)
+      assert(labels.values.forall(_ == 0L), "every chain node must label to min id 0")
+    }
   }
 
-  test("connected components: convergence count rides the checkpoint " +
-      "action — no separate count action per round") {
-    // r22 optimization (guide §5, driver job floor): the per-round
-    // convergence test is an observe metric collected by the eager
-    // localCheckpoint's own action; a separate filter(chg).count() job
-    // per round must stay gone. Pinned via the action-name profile (job
-    // counts are AQE-stage-dependent and noisy; action names are not).
+  /** Spark action names (QueryExecutionListener `funcName`) of `body`,
+    * counted once the listener bus has settled. */
+  private def actionProfile(body: => Unit): Map[String, Int] = {
     val sp = spark
-    import sp.implicits._
     val counts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -1210,8 +1208,7 @@ class DedupGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     sp.listenerManager.register(l)
     try {
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
-      DedupOps.connectedComponents(pairs)
+      body
       // listener dispatch is async — poll until the profile stabilizes
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       var prev = -1
@@ -1223,11 +1220,107 @@ class DedupGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
         cur = total
       }
     } finally sp.listenerManager.unregister(l)
-    val checkpoints = counts.getOrDefault("checkpoint", 0) +
-      counts.getOrDefault("localCheckpoint", 0)
-    assert(counts.getOrDefault("count", 0) == 0,
-      s"separate convergence-count action crept back: $counts")
-    assert(checkpoints >= 3, s"unexpected action profile: $counts")
+    import scala.jdk.CollectionConverters._
+    counts.asScala.toMap
+  }
+
+  test("connected components: convergence count rides the checkpoint " +
+      "action — no separate count action per round") {
+    // r22 optimization (guide §5, driver job floor): the edge count that
+    // sizes the contraction and the per-round convergence test are
+    // observe metrics collected by the eager localCheckpoints' own
+    // actions; a separate count() job must never creep back. Pinned via
+    // the action-name profile (job counts are AQE-stage-dependent and
+    // noisy; action names are not).
+    val sp = spark
+    import sp.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
+    // one partition: the edge checkpoint, then the union-find checkpoint
+    // — exact, so no round runs
+    val one = actionProfile(DedupOps.connectedComponents(pairs))
+    assert(one == Map("localCheckpoint" -> 2), s"unexpected action profile: $one")
+    // forced multi-partition: edges, contracted edges and initial labels
+    // (3), then one checkpoint per round — the first round always moves
+    // a non-min label, so a confirming round follows it (≥ 2 rounds)
+    val multi = actionProfile(
+      DedupOps.connectedComponents(pairs, edgePartitions = Some(3)))
+    assert(multi.keySet == Set("localCheckpoint"), s"unexpected action profile: $multi")
+    assert(multi("localCheckpoint") >= 5, s"unexpected action profile: $multi")
+  }
+
+  /** Driver-side min-id union-find: the reference CC labels. */
+  private def referenceLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  /** A seeded graph of disjoint families over shuffled ids: a long chain
+    * (min id mid-chain), a star (hub not the min), isolated pairs, plus
+    * duplicate (some reversed) edges and self-loops, one of them on an
+    * otherwise unconnected node. */
+  private def randomGraph(seed: Int, idBase: Long): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((0L until 600L).toVector).map(_ * 7 + idBase)
+    val chainLen = 150 + rnd.nextInt(150)
+    val chain = ids.take(chainLen)
+    val star = ids.slice(chainLen, chainLen + 40)
+    val pairNodes = ids.slice(chainLen + 40, chainLen + 80)
+    val lone = ids(chainLen + 80)
+    val base = chain.sliding(2).map(w => (w(0), w(1))).toSeq ++
+      star.tail.map(l => (star.head, l)) ++
+      pairNodes.grouped(2).map(p => (p(0), p(1))).toSeq
+    val dups = base.filter(_ => rnd.nextInt(10) == 0)
+      .map { case (a, b) => if (rnd.nextBoolean()) (b, a) else (a, b) }
+    val loops = (rnd.shuffle(base.map(_._1)).take(8) :+ lone).map(x => (x, x))
+    rnd.shuffle(base ++ dups ++ loops).map { case (a, b) =>
+      if (rnd.nextBoolean()) (b, a) else (a, b) }
+  }
+
+  test("connected components: seeded random graphs match a driver-side " +
+      "union-find, one partition and forced multi-partition, int and long ids") {
+    val sp = spark
+    import sp.implicits._
+    for ((seed, longIds) <- Seq((1, true), (2, false), (3, true))) {
+      val edges = randomGraph(seed, if (longIds) 1L << 40 else 0L)
+      val expect = referenceLabels(edges)
+      val pairs = {
+        val df = edges.toDF("id_a", "id_b")
+        if (longIds) df
+        else df.select($"id_a".cast("int").as("id_a"), $"id_b".cast("int").as("id_b"))
+      }
+      for (parts <- Seq(None, Some(3))) {
+        val cc = DedupOps.connectedComponents(pairs, edgePartitions = parts)
+        val idType = if (longIds) "bigint" else "int"
+        assert(cc.schema.map(f => f.name -> f.dataType.simpleString) ==
+          Seq("id" -> idType, "label" -> idType), s"seed $seed $parts: ${cc.schema}")
+        val got = cc.collect().map(r =>
+          (r.get(0).asInstanceOf[Number].longValue, r.get(1).asInstanceOf[Number].longValue))
+        assert(got.length == expect.size, s"seed $seed $parts: one row per node")
+        assert(got.toMap == expect, s"seed $seed $parts: labels differ")
+      }
+    }
+  }
+
+  test("connected components: a null id connects nothing and is one " +
+      "(null, null) row on both paths") {
+    val sp = spark
+    import sp.implicits._
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (5L, null))
+      .toDF("id_a", "id_b")
+    for (parts <- Seq(None, Some(3))) {
+      val got = DedupOps.connectedComponents(pairs, edgePartitions = parts).collect()
+        .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+      assert(got == Set((Some(1L), Some(1L)), (Some(2L), Some(1L)),
+        (Some(5L), Some(5L)), (None, None)), s"$parts: $got")
+    }
   }
 
   test("connected components: an unobserved convergence count fails the " +

@@ -326,13 +326,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.bucketBy(8, "k").sortBy("k").saveAsTable("graft_bkt_b")
     // force the shuffle-join path: a broadcast would also be exchange-ish
     // and wouldn't demonstrate co-location
-    sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(sp, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = sp.table("graft_bkt_a").join(sp.table("graft_bkt_b"), "k")
       val plan = physical(j)
       assert(!plan.contains("Exchange"), s"bucketed join shuffled:\n$plan")
       assert(j.count() > 0)
-    } finally sp.conf.set("spark.sql.autoBroadcastJoinThreshold", (1 << 20).toString)
+    }
   }
 
   test("d02/d04: verify margin runs the native overlap kernel in-plan") {
@@ -371,8 +370,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     sp.sql("DROP TABLE IF EXISTS graft_sigstore_spec")
     val docs = graft.analytics.Tables.documents(sp, sf).select($"doc_id", $"text")
     graft.dedup.IncrementalDedup.writeSignatureStore(sp, docs, "graft_sigstore_spec")
-    sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try GraftSession.withConf(sp, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val newBands = docs.filter($"doc_id" % 31 === 0)
         .select(($"doc_id" + 300000L).as("id_b"),
           posexplode(graft.dedup.DedupOps.minhashBandsU($"text"))
@@ -385,10 +383,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(plan.contains("Bucketed: true") || plan.contains("SelectedBucketsCount"),
         s"store scan lost its bucketing:\n$plan")
       assert(j.count() > 0)
-    } finally {
-      sp.conf.set("spark.sql.autoBroadcastJoinThreshold", (1 << 20).toString)
-      sp.sql("DROP TABLE IF EXISTS graft_sigstore_spec")
-    }
+    } finally sp.sql("DROP TABLE IF EXISTS graft_sigstore_spec")
   }
 
   test("d10 composed ingest: store probes read co-located, corpus never re-signed") {

@@ -1498,54 +1498,55 @@ object Dev {
     spark.catalog.clearCache()
   }
 
-  /** Drive the real job surface: documents → .warc files on disk →
-    * Pipeline.run (binaryFile scan → enrich → Avro sink) → read the Avro
-    * containers back with the plain Avro reader (cross-impl check à la
-    * reference test.py). */
-  def warcE2e(spark: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val warcDir = Files.createTempDirectory("graft-warc")
-    graft.warc.WarcQueries.warcFiles(spark, sfDir).collect()
-      .zipWithIndex.foreach { case ((_, bytes), i) =>
-        Files.write(warcDir.resolve(f"dta-report00-$i%02d.warc"), bytes)
+  /** Drive the real job surface: documents → `.warc` archives staged
+    * from the executors ([[graft.warc.WarcQueries.stageArchives]]) under
+    * a [[graft.analytics.StagingDir]] → Pipeline.run (splittable `warc`
+    * DataSourceV2 scan → enrich → Avro sink) → read the Avro containers
+    * back with the plain Avro reader (cross-impl check à la reference
+    * test.py). Everything lives under the staging dir, deleted on exit. */
+  def warcE2e(spark: SparkSession, sfDir: String): Unit =
+    graft.analytics.StagingDir.withStagingDir(spark, "graft-warc-e2e") { dir =>
+      import org.apache.hadoop.fs.Path
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val warcDir = new Path(dir, "warc")
+      graft.warc.WarcQueries.stageArchives(spark, sfDir, warcDir, gzip = false)
+      println(s"[dev] staged warcs to $warcDir")
+      val outDir = new Path(dir, "out").toString
+      val qDir = new Path(dir, "quarantine").toString
+      graft.warc.Pipeline.run(spark, s"$warcDir/*.warc", outDir, "avro", Some(qDir))
+      println(s"[dev] quarantined=${spark.read.parquet(qDir).count()} (corrupt gzip records)")
+      val t0 = System.nanoTime()
+      graft.warc.Pipeline.run(spark, s"$warcDir/*.warc", outDir, "avro")
+      println(f"[dev] idempotent re-run took ${(System.nanoTime() - t0) / 1e9}%.3fs (should skip)")
+      // literal wildcard path through the V2 source (glob expansion branch)
+      val globCount = spark.read.format("warc").load(s"$warcDir/*.warc").count()
+      println(s"[dev] literal-glob load records=$globCount")
+      // failed-attempt restart: partial dir without _SUCCESS must be rebuilt
+      fs.delete(new Path(outDir, "_SUCCESS"), false)
+      graft.warc.Pipeline.run(spark, s"$warcDir/*.warc", outDir, "avro")
+      println(s"[dev] restart-after-partial ok=" + fs.exists(new Path(outDir, "_SUCCESS")))
+      // type checking of the native expressions
+      try {
+        spark.sql("SELECT cosine_sim(1.0, 2.0)").collect()
+        println("[dev] type-check FAILED TO REJECT")
+      } catch {
+        case e: org.apache.spark.sql.AnalysisException =>
+          println(s"[dev] type-check rejected scalar args: ${e.getMessage.take(80)}")
       }
-    println(s"[dev] wrote warcs to $warcDir")
-    val outDir = warcDir.resolve("out").toString
-    val qDir = warcDir.resolve("quarantine").toString
-    graft.warc.Pipeline.run(spark, s"$warcDir/*.warc", outDir, "avro", Some(qDir))
-    println(s"[dev] quarantined=${spark.read.parquet(qDir).count()} (corrupt gzip records)")
-    val t0 = System.nanoTime()
-    graft.warc.Pipeline.run(spark, s"$warcDir/*.warc", outDir, "avro")
-    println(f"[dev] idempotent re-run took ${(System.nanoTime() - t0) / 1e9}%.3fs (should skip)")
-    // literal wildcard path through the V2 source (glob expansion branch)
-    val globCount = spark.read.format("warc").load(s"$warcDir/*.warc").count()
-    println(s"[dev] literal-glob load records=$globCount")
-    // failed-attempt restart: partial dir without _SUCCESS must be rebuilt
-    Files.delete(java.nio.file.Paths.get(outDir, "_SUCCESS"))
-    graft.warc.Pipeline.run(spark, s"$warcDir/*.warc", outDir, "avro")
-    println(s"[dev] restart-after-partial ok=" +
-      Files.exists(java.nio.file.Paths.get(outDir, "_SUCCESS")))
-    // type checking of the native expressions
-    try {
-      spark.sql("SELECT cosine_sim(1.0, 2.0)").collect()
-      println("[dev] type-check FAILED TO REJECT")
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        println(s"[dev] type-check rejected scalar args: ${e.getMessage.take(80)}")
+      val files = fs.listStatus(new Path(outDir)).map(_.getPath)
+        .filter(_.getName.endsWith(".avro"))
+      var n = 0L
+      var fields = -1
+      files.foreach { f =>
+        val r = new org.apache.avro.file.DataFileStream(fs.open(f),
+          new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]())
+        fields = r.getSchema.getFields.size
+        var sample: org.apache.avro.generic.GenericRecord = null
+        while (r.hasNext) { sample = r.next(); n += 1 }
+        if (sample != null && n <= 1000)
+          println(s"[dev] sample url=${sample.get("url")} wc=${sample.get("word_count")} kw=${sample.get("keywords").asInstanceOf[java.util.Map[_, _]].size()}")
+        r.close()
+      }
+      println(s"[dev] avro files=${files.length} records=$n schemaFields=$fields")
     }
-    val files = new java.io.File(outDir).listFiles().filter(_.getName.endsWith(".avro"))
-    var n = 0L
-    var fields = -1
-    files.foreach { f =>
-      val r = new org.apache.avro.file.DataFileReader(f,
-        new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]())
-      fields = r.getSchema.getFields.size
-      var sample: org.apache.avro.generic.GenericRecord = null
-      while (r.hasNext) { sample = r.next(); n += 1 }
-      if (sample != null && n <= 1000)
-        println(s"[dev] sample url=${sample.get("url")} wc=${sample.get("word_count")} kw=${sample.get("keywords").asInstanceOf[java.util.Map[_, _]].size()}")
-      r.close()
-    }
-    println(s"[dev] avro files=${files.length} records=$n schemaFields=$fields")
-  }
 }

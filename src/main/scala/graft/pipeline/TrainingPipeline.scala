@@ -1188,7 +1188,7 @@ object TrainingPipeline {
   private[graft] def warcCorpus(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     graft.warc.Pipeline.urlResources(
-        graft.warc.WarcSource.fromBytes(graft.warc.WarcQueries.warcFiles(s, d)))
+        graft.warc.WarcSource.fromBytes(graft.warc.WarcQueries.warcFiles(s, d, gzip = false)))
       .select(
         regexp_extract($"url", "/page/(\\d+)$", 1).cast("long").as("doc_id"),
         $"text_content".as("text"),

@@ -351,33 +351,14 @@ object StreamingOps {
     * them — the shared front half of st05 and p03 (r12). The staging dir
     * is on the SESSION'S filesystem, so on a cluster the staged files
     * land on the shared FS where the stream source can list them, and
-    * [[drainToParquet]] removes them with the rest of the dir.
-    *
-    * Staging writes from the EXECUTORS (foreachPartition through the
-    * Hadoop FS API): the r4 shape collect()ed every WARC container to
-    * the driver and wrote them there — the one corpus-sized driver
-    * collect in the repo, a bottleneck at any real sf. File names are
-    * partition-deterministic and creates overwrite, so a task retry
-    * rewrites its own files idempotently. */
+    * [[drainToParquet]] removes them with the rest of the dir. The files
+    * are written from the executors by the one archive stager,
+    * [[graft.warc.WarcQueries.stageArchives]]. */
   private[streaming] def stagedWarcStream(s: SparkSession, d: String,
       dir: Path): org.apache.spark.sql.Dataset[(String, Array[Byte])] = {
     import s.implicits._
-    val hconf = s.sparkContext.hadoopConfiguration
-    val serConf = new graft.warc.source.SerializableHadoopConf(hconf)
     val warcDir = new Path(dir, "warc")
-    warcDir.getFileSystem(hconf).mkdirs(warcDir)
-    val dirStr = warcDir.toString
-    graft.warc.WarcQueries.warcFiles(s, d).foreachPartition {
-      (it: Iterator[(String, Array[Byte])]) =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var i = 0
-        it.foreach { case (_, bytes) =>
-          val p = new Path(dirStr, f"crawl-$pid%04d-$i%03d.warc")
-          val out = p.getFileSystem(serConf.value).create(p, true)
-          try out.write(bytes) finally out.close()
-          i += 1
-        }
-    }
+    graft.warc.WarcQueries.stageArchives(s, d, warcDir, gzip = false)
     s.readStream.format("binaryFile")
       .option("pathGlobFilter", "*.warc")
       .schema(StructType(Seq(
@@ -385,7 +366,7 @@ object StreamingOps {
         StructField("modificationTime", TimestampType),
         StructField("length", LongType),
         StructField("content", BinaryType))))
-      .load(dirStr)
+      .load(warcDir.toString)
       .select(col("path"), col("content")).as[(String, Array[Byte])]
   }
 

@@ -87,8 +87,14 @@ object WarcQueries {
 
   /** documents → multi-record WARC containers (one per partition), each
     * prefixed with a `warcinfo` record (filtered by F1) and a corrupt-gzip
-    * record (dropped by S5) so the error-containment paths run. */
-  def warcFiles(spark: SparkSession, d: String): Dataset[(String, Array[Byte])] = {
+    * record (dropped by S5) so the error-containment paths run. The ONE
+    * synthesizer of corpus archives: batch queries split its bytes in
+    * memory ([[WarcSource.fromBytes]]), [[stageArchives]] writes them as
+    * files. With `gzip` every record is its own gzip member (the Common
+    * Crawl layout) and a corrupt MEMBER is planted after the corrupt-body
+    * record, so the `.warc.gz` reader's sentinel-and-resync path runs too. */
+  def warcFiles(spark: SparkSession, d: String,
+      gzip: Boolean): Dataset[(String, Array[Byte])] = {
     import spark.implicits._
     Tables.documents(spark, d)
       .select("doc_id", "text", "lang", "n_chars")
@@ -98,10 +104,16 @@ object WarcQueries {
       .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         val out = new java.io.ByteArrayOutputStream()
-        out.write(WarcSource.toWireFormat("warcinfo", "",
+        def emit(rec: Array[Byte]): Unit =
+          out.write(if (gzip) WarcSource.gzip(rec) else rec)
+        emit(WarcSource.toWireFormat("warcinfo", "",
           0, "software: graft".getBytes(StandardCharsets.UTF_8)))
-        out.write(WarcSource.toWireFormat("response",
+        emit(WarcSource.toWireFormat("response",
           "https://corrupt.example.gov.au/", 10, Array[Byte](0x1f, 0x7b, 1, 2)))
+        // corrupt MEMBER: valid gzip header, garbage deflate stream — the
+        // reader must surface a sentinel and resync, never fail
+        if (gzip) out.write(Array[Byte](0x1f.toByte, 0x8b.toByte, 0x08, 0,
+          1, 2, 3, 4, 0, 3, 7, 7, 7, 7, 7, 7))
         var n = 0
         it.foreach { case (id, text, lang, nChars) =>
           val url = s"https://docs${hostClass(id)}.example.gov.au/page/$id"
@@ -109,19 +121,50 @@ object WarcQueries {
             payloadFor(id, text, lang).getBytes(StandardCharsets.UTF_8))
           // deterministic WARC-Date spanning three crawl days — the K3
           // DAY-partitioning axis, oracle-checked via w01's crawl_day
-          out.write(WarcSource.toWireFormat("response", url, nChars, body,
+          emit(WarcSource.toWireFormat("response", url, nChars, body,
             warcDate = s"2019-07-0${1 + id % 3}T00:00:00Z"))
           n += 1
         }
         if (n == 0) Iterator.empty
-        else Iterator(("synth.warc", out.toByteArray))
+        else Iterator((if (gzip) "synth.warc.gz" else "synth.warc", out.toByteArray))
       }
   }
 
+  /** Write [[warcFiles]]' containers as `crawl-<partition>.warc[.gz]`
+    * files under `dir` (as a crawler would drop them) — the one archive
+    * stager, for w09, the WARC streams (st05, p03) and `Dev warc-e2e`.
+    * `dir` belongs to the caller (a [[graft.analytics.StagingDir]] on the
+    * session's filesystem), who must materialize whatever reads the files
+    * before deleting it. Writes happen on the EXECUTORS through the
+    * Hadoop FS API — no corpus-sized driver collect; file names are
+    * partition-deterministic and creates overwrite, so a retried task
+    * re-stages the same files. */
+  private[graft] def stageArchives(spark: SparkSession, d: String,
+      dir: org.apache.hadoop.fs.Path, gzip: Boolean): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val serConf = new graft.warc.source.SerializableHadoopConf(hconf)
+    dir.getFileSystem(hconf).mkdirs(dir)
+    val dirStr = dir.toString
+    val ext = if (gzip) "warc.gz" else "warc"
+    warcFiles(spark, d, gzip).foreachPartition {
+      (it: Iterator[(String, Array[Byte])]) =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        it.foreach { case (_, bytes) =>
+          val p = new org.apache.hadoop.fs.Path(dirStr, f"crawl-$pid%04d.$ext")
+          val os = p.getFileSystem(serConf.value).create(p, true)
+          try os.write(bytes) finally os.close()
+        }
+    }
+  }
+
   /** w01: full pipeline end-to-end; every column oracle-recomputable. */
-  def w01_warc_pipeline(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    Pipeline.urlResources(WarcSource.fromBytes(warcFiles(spark, d)))
+  def w01_warc_pipeline(spark: SparkSession, d: String): DataFrame =
+    w01Columns(Pipeline.urlResources(WarcSource.fromBytes(warcFiles(spark, d, gzip = false))))
+
+  /** w01's (and w09's) oracle-comparable projection of `url_resource`. */
+  private def w01Columns(urls: DataFrame): DataFrame = {
+    import urls.sparkSession.implicits._
+    urls
       .select(
         $"url", $"hostname", $"domain_name",
         $"size_bytes".cast("long").as("size_bytes"),
@@ -412,7 +455,7 @@ object WarcQueries {
   def hostEdges(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val hostRe = "https://docs(\\d+)\\.example\\.gov\\.au/.*"
-    Pipeline.urlResources(WarcSource.fromBytes(warcFiles(spark, d)))
+    Pipeline.urlResources(WarcSource.fromBytes(warcFiles(spark, d, gzip = false)))
       .select(regexp_extract($"url", hostRe, 1).cast("long").as("src"),
         explode($"links").as("lnk"))
       .select($"src", regexp_extract($"lnk", hostRe, 1).cast("long").as("dst"))
@@ -594,7 +637,7 @@ object WarcQueries {
 
   /** w09: the w01 chain through PER-RECORD-GZIPPED archives and the
     * splittable `.warc.gz` reader — the Common Crawl ingestion shape.
-    * The same synthesized records are staged from the EXECUTORS as real
+    * The same synthesized records are staged by [[stageArchives]] as real
     * multi-member `.warc.gz` files (one gzip member per record, plus a
     * planted corrupt member and the w01 corrupt-gzip-BODY record so both
     * containment paths run), then read back through
@@ -606,83 +649,20 @@ object WarcQueries {
     * The result is eagerly materialized (localCheckpoint) so the staging
     * dir can be deleted before returning — the driver holds only the
     * aggregate-sized output, never the archives. */
-  def w09_warcgz_pipeline(spark: SparkSession, d: String): DataFrame = {
-    import spark.implicits._
-    // stage on the SESSION'S filesystem (executors write through the
-    // driver's serialized Hadoop conf, same as the warc reader): with a
-    // shared defaultFS the staged archives are visible to every
-    // executor AND the subsequent read — a driver-local java.nio temp
-    // dir only works when executors share the driver's disk (r9
-    // advisory). In local mode this resolves to the local FS, same
-    // behavior as before.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val serConf = new graft.warc.source.SerializableHadoopConf(hconf)
-    val dirPath = new org.apache.hadoop.fs.Path(
-      hconf.get("hadoop.tmp.dir", System.getProperty("java.io.tmpdir")),
-      "graft-w09-" + java.util.UUID.randomUUID())
-    val stagingFs = dirPath.getFileSystem(hconf)
-    stagingFs.mkdirs(dirPath)
-    try {
-      val dirStr = dirPath.toString
-      // executor-side staging (the st05 rule: no corpus-sized driver
-      // collect); file names are partition-deterministic, creates
-      // overwrite, so task retries restage idempotently
-      Tables.documents(spark, d)
-        .select("doc_id", "text", "lang", "n_chars")
-        .as[(Long, String, String, Long)]
-        .repartition(spark.sparkContext.defaultParallelism)
-        .foreachPartition { (it: Iterator[(Long, String, String, Long)]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val out = new java.io.ByteArrayOutputStream()
-          out.write(WarcSource.gzip(WarcSource.toWireFormat("warcinfo", "",
-            0, "software: graft".getBytes(StandardCharsets.UTF_8))))
-          // corrupt gzip BODY inside a well-formed member (S5 drop path)
-          out.write(WarcSource.gzip(WarcSource.toWireFormat("response",
-            "https://corrupt.example.gov.au/", 10, Array[Byte](0x1f, 0x7b, 1, 2))))
-          // corrupt MEMBER: valid gzip header, garbage deflate stream —
-          // the reader must surface a sentinel and resync, never fail
-          out.write(Array[Byte](0x1f.toByte, 0x8b.toByte, 0x08, 0,
-            1, 2, 3, 4, 0, 3, 7, 7, 7, 7, 7, 7))
-          var n = 0
-          it.foreach { case (id, text, lang, nChars) =>
-            val url = s"https://docs${hostClass(id)}.example.gov.au/page/$id"
-            val body = WarcSource.gzip(
-              payloadFor(id, text, lang).getBytes(StandardCharsets.UTF_8))
-            out.write(WarcSource.gzip(
-              WarcSource.toWireFormat("response", url, nChars, body,
-                warcDate = s"2019-07-0${1 + id % 3}T00:00:00Z")))
-            n += 1
-          }
-          if (n > 0) {
-            val p = new org.apache.hadoop.fs.Path(dirStr, f"crawl-$pid%04d.warc.gz")
-            val os = p.getFileSystem(serConf.value).create(p, true)
-            try os.write(out.toByteArray) finally os.close()
-          }
-        }
+  def w09_warcgz_pipeline(spark: SparkSession, d: String): DataFrame =
+    graft.analytics.StagingDir.withStagingDir(spark, "graft-w09") { dir =>
+      import spark.implicits._
+      stageArchives(spark, d, dir, gzip = true)
       val recs = spark.read.format("warc")
         .option("pathGlobFilter", "*.warc.gz")
         // far below archive size ⇒ several splits per file, most landing
         // mid-member (the sync + validation path, continuously gated)
         .option("maxPartitionBytes", (32 * 1024).toString)
-        .load(dirStr)
+        .load(dir.toString)
         .as[WarcRecord]
-      Pipeline.urlResources(recs)
-        .select(
-          $"url", $"hostname", $"domain_name",
-          $"size_bytes".cast("long").as("size_bytes"),
-          $"load_time", $"title", $"text_content", $"headings_text",
-          $"word_count".cast("long").as("word_count"),
-          array_join($"links", "|").as("links_joined"),
-          array_join($"resource_urls", "|").as("resources_joined"),
-          element_at($"meta_tags", "lang").as("meta_lang"),
-          element_at($"headers", "X-Request-Id").as("header_request_id"),
-          array_join($"google_analytics", "|").as("ga_joined"),
-          array_join($"google_analytics_config", "|").as("ga_config_joined"),
-          $"html_errors", $"crawl_day".cast("string").as("crawl_day"))
-        .orderBy($"url")
-        .localCheckpoint(true) // materialize before the staging dir dies
-    } finally stagingFs.delete(dirPath, true)
-  }
+      // materialize before the staging dir dies
+      w01Columns(Pipeline.urlResources(recs)).localCheckpoint(true)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "w09_warcgz_pipeline" -> (w09_warcgz_pipeline _),

@@ -1,10 +1,12 @@
 package graft.warc
 
-import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, InputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+import graft.warc.source.{WarcByteReader, WarcGrammar}
 
 /** WARC container reading (SURVEY.md §2.1 S1/S5).
   *
@@ -15,16 +17,21 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * `.warc.gz` archives on validated gzip-member boundaries — task
   * memory stays O(record) and parallelism is O(bytes), not O(files),
   * at both encodings (the reference's stride-sharding, SURVEY §2.6 D4,
-  * dissolves into this). This object holds the shared record grammar
-  * (the single-pass splitter the readers and tests both trust) and the
-  * per-record gzip codec.
+  * dissolves into this). The ISO 28500 record grammar lives in ONE
+  * module, [[graft.warc.source.WarcGrammar]] over the one byte reader
+  * [[graft.warc.source.WarcByteReader]]: both partition readers parse
+  * through it, and so does this object's [[splitWarc]] — the unsplit
+  * entry the in-memory path and the tests use, so the readers and the
+  * tests trust the same code. This object also holds the per-record
+  * gzip codec and the wire-format writer.
   *
   * Record grammar (ISO 28500): `WARC/<ver>\r\n` + `Key: Value` header
   * lines + `\r\n` blank + `Content-Length` body bytes + `\r\n\r\n`.
   * Header keys are case-insensitive (reference `CaseString`) — normalized
-  * to lowercase here. A malformed record yields the reference's sentinel
-  * `version == "0"` record (`src/main.rs:1-20`) so the downstream F1
-  * filter drops it instead of failing the task.
+  * to lowercase, a repeated key keeping its last value. A malformed
+  * record yields the reference's sentinel `version == "0"` record
+  * (`src/main.rs:1-20`) so the downstream F1 filter drops it instead of
+  * failing the task.
   */
 object WarcSource {
 
@@ -33,102 +40,19 @@ object WarcSource {
     * parses anything this size anyway). */
   val MaxBodyBytes: Long = 1L << 30
 
-  /** Streaming split of one WARC container into records. */
+  /** Streaming split of one unsplit WARC container into records, through
+    * the shared grammar ([[graft.warc.source.WarcGrammar]]); the array is
+    * read in place. */
   def splitWarc(bytes: Array[Byte], source: String): Iterator[WarcRecord] =
-    splitWarc(new ByteArrayInputStream(bytes), source)
+    split(WarcByteReader.of(bytes, bytes.length), source)
 
-  def splitWarc(in0: InputStream, source: String): Iterator[WarcRecord] = {
-    val in = new BufferedInputStream(in0, 1 << 16)
+  def splitWarc(in: InputStream, source: String): Iterator[WarcRecord] =
+    split(new WarcByteReader(in), source)
 
-    // Reads one CRLF- (or LF-) terminated line decoded as UTF-8 (ISO
-    // 28500 headers may carry UTF-8, e.g. IRIs in WARC-Target-URI);
-    // null at EOF.
-    def readLine(): String = {
-      val bos = new ByteArrayOutputStream(64)
-      var c = in.read()
-      if (c < 0) return null
-      while (c >= 0 && c != '\n') { bos.write(c); c = in.read() }
-      val s = new String(bos.toByteArray, StandardCharsets.UTF_8)
-      if (s.nonEmpty && s.charAt(s.length - 1) == '\r') s.substring(0, s.length - 1) else s
-    }
-
-    def skipFully(n: Long): Boolean = {
-      var left = n
-      while (left > 0) {
-        val r = in.skip(left)
-        if (r <= 0) { if (in.read() < 0) return false else left -= 1 }
-        else left -= r
-      }
-      true
-    }
-
-    def readFully(n: Int): Array[Byte] = {
-      val buf = new Array[Byte](n)
-      var off = 0
-      while (off < n) {
-        val r = in.read(buf, off, n - off)
-        if (r < 0) return java.util.Arrays.copyOf(buf, off)
-        off += r
-      }
-      buf
-    }
-
-    val sentinel = WarcRecord("0", Map.empty, Array.emptyByteArray, source)
-
-    new Iterator[WarcRecord] {
-      private var nextRec: WarcRecord = null
-      private var done = false
-
-      private def advance(): Unit = {
-        if (done) return
-        // seek the next WARC/ magic line (skips inter-record blank lines)
-        var line = readLine()
-        while (line != null && !line.startsWith("WARC/")) line = readLine()
-        if (line == null) { done = true; return }
-        val version = line.substring(5)
-        var headers = Map.newBuilder[String, String]
-        var contentLength = -1L
-        var h = readLine()
-        var bad = false
-        while (h != null && h.nonEmpty) {
-          val i = h.indexOf(':')
-          if (i > 0) {
-            val k = h.substring(0, i).trim.toLowerCase
-            val v = h.substring(i + 1).trim
-            headers += (k -> v)
-            if (k == "content-length")
-              contentLength = try v.toLong catch { case _: NumberFormatException => bad = true; -1L }
-          }
-          h = readLine()
-        }
-        if (h == null || bad || contentLength < 0) {
-          nextRec = sentinel
-          if (h == null) done = true
-          return
-        }
-        if (contentLength > MaxBodyBytes) {
-          // legal 64-bit lengths beyond what fits a JVM array: keep the
-          // headers, skip the body in-stream, emit with empty content
-          // (downstream F3 skips parsing oversized records anyway)
-          if (!skipFully(contentLength)) done = true
-          nextRec = WarcRecord(version, headers.result(), Array.emptyByteArray, source)
-          return
-        }
-        val body = readFully(contentLength.toInt)
-        nextRec =
-          if (body.length < contentLength) { done = true; sentinel }
-          else WarcRecord(version, headers.result(), body, source)
-      }
-
-      def hasNext: Boolean = {
-        if (nextRec == null && !done) advance()
-        nextRec != null
-      }
-      def next(): WarcRecord = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = nextRec; nextRec = null; r
-      }
-    }
+  private def split(r: WarcByteReader, source: String): Iterator[WarcRecord] = {
+    val g = new WarcGrammar
+    g.records(r)(g.record(source),
+      WarcRecord("0", Map.empty, Array.emptyByteArray, source))
   }
 
   /** S1 scan: glob of `.warc` files → Dataset[WarcRecord], through the

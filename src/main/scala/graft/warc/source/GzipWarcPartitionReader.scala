@@ -4,8 +4,6 @@ import java.util.zip.{CRC32, DataFormatException, Inflater}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -52,45 +50,13 @@ class GzipWarcPartitionReader(part: WarcInputPartition,
     hadoopConf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val fs = new Path(part.file).getFileSystem(hadoopConf)
-  private val in = fs.open(new Path(part.file))
+  private val in = new WarcByteReader(
+    new Path(part.file).getFileSystem(hadoopConf).open(new Path(part.file)))
   private val endExclusive = part.start + part.length
   private val sourceName =
-    part.file.substring(part.file.lastIndexOf('/') + 1)
-
-  // ---- counting buffered forward reader (seekable) ----
-  private val buf = new Array[Byte](1 << 16)
-  private var bufLen = 0
-  private var bufPos = 0
-  private var pos: Long = 0L // absolute offset of next byte to return
-
-  private def fill(): Boolean = {
-    if (bufPos < bufLen) return true
-    bufLen = in.read(buf, 0, buf.length)
-    bufPos = 0
-    bufLen > 0
-  }
-  private def readByte(): Int = {
-    if (!fill()) -1
-    else { val b = buf(bufPos) & 0xff; bufPos += 1; pos += 1; b }
-  }
-  /** Reposition WITHOUT discarding the read buffer when the target is
-    * inside the buffered window — the common case here is tiny
-    * backward/forward hops within one member (trailer fetch after the
-    * inflater's read-ahead, magic+1 rescans, next-member starts), and a
-    * naive seek would re-read 64 KiB and pay a positioned read per hop
-    * (per RECORD at ~1 KB members; on object stores a seek can reopen
-    * the connection). Only a target outside the window touches the FS. */
-  private def seekTo(target: Long): Unit = {
-    val bufAbsStart = pos - bufPos
-    if (target >= bufAbsStart && target <= bufAbsStart + bufLen) {
-      bufPos = (target - bufAbsStart).toInt
-      pos = target
-    } else {
-      in.seek(target)
-      pos = target; bufLen = 0; bufPos = 0
-    }
-  }
+    UTF8String.fromString(part.file.substring(part.file.lastIndexOf('/') + 1))
+  private val grammar = new WarcGrammar
+  import in.{readByte, seekTo}
 
   // ---- gzip member scan + decode ----
   private final val M0 = 0x1f
@@ -104,7 +70,7 @@ class GzipWarcPartitionReader(part: WarcInputPartition,
     var b = readByte()
     while (b >= 0) {
       if (b == M0) {
-        val p0 = pos - 1
+        val p0 = in.position - 1
         if (readByte() == M1 && readByte() == M2) return p0
         // overlap-safe: resume right after the candidate's first byte
         seekTo(p0 + 1)
@@ -114,88 +80,81 @@ class GzipWarcPartitionReader(part: WarcInputPartition,
     -1L
   }
 
+  // inflate state, reused member after member
+  private val inflater = new Inflater(true)
+  private val outChunk = new Array[Byte](1 << 16)
+  private val payload = new GzipWarcPartitionReader.Payload
+  private val crc = new CRC32
+
   /** Decode ONE gzip member whose magic starts at `memberStart` (stream
-    * anywhere; seeks itself). Returns (payload, nextMemberStart) or null
-    * if the member is malformed (bad header, inflate error, trailer
-    * mismatch, or payload over MaxBodyBytes). On success the stream is
-    * positioned at `nextMemberStart`. */
-  private def readMember(memberStart: Long): (Array[Byte], Long) = {
+    * anywhere; seeks itself) into `payload`. False if the member is
+    * malformed (bad header, inflate error, trailer mismatch, or payload
+    * over MaxBodyBytes); on success the stream is positioned at the next
+    * member's start. */
+  private def readMember(memberStart: Long): Boolean = {
     seekTo(memberStart)
-    if (readByte() != M0 || readByte() != M1 || readByte() != M2) return null
+    if (readByte() != M0 || readByte() != M1 || readByte() != M2) return false
     val flg = readByte()
-    if (flg < 0 || (flg & 0xe0) != 0) return null // reserved bits must be 0
+    if (flg < 0 || (flg & 0xe0) != 0) return false // reserved bits must be 0
     // MTIME(4) XFL(1) OS(1)
     var i = 0
-    while (i < 6) { if (readByte() < 0) return null; i += 1 }
+    while (i < 6) { if (readByte() < 0) return false; i += 1 }
     if ((flg & 0x04) != 0) { // FEXTRA: 2-byte little-endian length + data
       val lo = readByte(); val hi = readByte()
-      if (lo < 0 || hi < 0) return null
+      if (lo < 0 || hi < 0) return false
       var left = lo | (hi << 8)
-      while (left > 0) { if (readByte() < 0) return null; left -= 1 }
+      while (left > 0) { if (readByte() < 0) return false; left -= 1 }
     }
     if ((flg & 0x08) != 0) { // FNAME: zero-terminated
       var b = readByte()
       while (b > 0) b = readByte()
-      if (b < 0) return null
+      if (b < 0) return false
     }
     if ((flg & 0x10) != 0) { // FCOMMENT: zero-terminated
       var b = readByte()
       while (b > 0) b = readByte()
-      if (b < 0) return null
+      if (b < 0) return false
     }
     if ((flg & 0x02) != 0) { // FHCRC: 2-byte header CRC (unchecked, skipped)
-      if (readByte() < 0 || readByte() < 0) return null
+      if (readByte() < 0 || readByte() < 0) return false
     }
-    // raw deflate stream: feed the inflater from the shared buffer and
+    // raw deflate stream: feed the inflater from the shared window and
     // track exactly how many compressed bytes it consumes, so the
     // trailer (and the next member) can be located without read-ahead
     // loss
-    val inflater = new Inflater(true)
-    val outChunk = new Array[Byte](1 << 16)
-    val outBuf = new java.io.ByteArrayOutputStream(1 << 16)
-    val crc = new CRC32
-    try {
-      var eof = false
-      while (!inflater.finished()) {
-        if (inflater.needsInput()) {
-          if (!fill()) { eof = true }
-          else {
-            val n = bufLen - bufPos
-            inflater.setInput(buf, bufPos, n)
-            bufPos += n; pos += n
-          }
-        }
-        if (eof && inflater.needsInput()) return null // truncated member
-        val written =
-          try inflater.inflate(outChunk)
-          catch { case _: DataFormatException => return null }
-        if (inflater.needsDictionary()) return null // never valid in gzip
-        if (written > 0) {
-          if (outBuf.size().toLong + written > graft.warc.WarcSource.MaxBodyBytes)
-            return null // containment: never materialize a monster member
-          outBuf.write(outChunk, 0, written)
-          crc.update(outChunk, 0, written)
-        } else if (eof && written == 0 && !inflater.finished()) return null
-      }
-      // un-consume the input bytes the inflater buffered past stream end
-      seekTo(pos - inflater.getRemaining)
-      // trailer: CRC32 + ISIZE, little-endian
-      var trailer = 0L
-      i = 0
-      while (i < 4) {
-        val b = readByte(); if (b < 0) return null
-        trailer |= b.toLong << (8 * i); i += 1
-      }
-      if (trailer != crc.getValue) return null
-      var isize = 0L
-      i = 0
-      while (i < 4) {
-        val b = readByte(); if (b < 0) return null
-        isize |= b.toLong << (8 * i); i += 1
-      }
-      if (isize != (outBuf.size().toLong & 0xffffffffL)) return null
-      (outBuf.toByteArray, pos)
-    } finally inflater.end()
+    inflater.reset(); payload.reset(); crc.reset()
+    var eof = false
+    while (!inflater.finished()) {
+      if (inflater.needsInput() && !in.feed(inflater)) eof = true
+      if (eof && inflater.needsInput()) return false // truncated member
+      val written =
+        try inflater.inflate(outChunk)
+        catch { case _: DataFormatException => return false }
+      if (inflater.needsDictionary()) return false // never valid in gzip
+      if (written > 0) {
+        if (payload.size().toLong + written > graft.warc.WarcSource.MaxBodyBytes)
+          return false // containment: never materialize a monster member
+        payload.write(outChunk, 0, written)
+        crc.update(outChunk, 0, written)
+      } else if (eof && written == 0 && !inflater.finished()) return false
+    }
+    // un-consume the input bytes the inflater buffered past stream end
+    seekTo(in.position - inflater.getRemaining)
+    // trailer: CRC32 + ISIZE, little-endian
+    var trailer = 0L
+    i = 0
+    while (i < 4) {
+      val b = readByte(); if (b < 0) return false
+      trailer |= b.toLong << (8 * i); i += 1
+    }
+    if (trailer != crc.getValue) return false
+    var isize = 0L
+    i = 0
+    while (i < 4) {
+      val b = readByte(); if (b < 0) return false
+      isize |= b.toLong << (8 * i); i += 1
+    }
+    isize == (payload.size().toLong & 0xffffffffL)
   }
 
   // position of the next member to decode; -1 = none. A split starting
@@ -221,8 +180,7 @@ class GzipWarcPartitionReader(part: WarcInputPartition,
       if (pending.hasNext) { current = pending.next(); return true }
       if (nextMemberStart < 0 || nextMemberStart >= endExclusive) return false
       val memberStart = nextMemberStart
-      val decoded = readMember(memberStart)
-      if (decoded == null) {
+      if (!readMember(memberStart)) {
         // malformed candidate. Tentative/resyncing: silent rescan (almost
         // always a false magic inside compressed data). Established: a
         // genuinely corrupt member — surface the sentinel for quarantine,
@@ -231,13 +189,12 @@ class GzipWarcPartitionReader(part: WarcInputPartition,
         nextMemberStart = syncToMagic()
         if (!tentative && !resyncing) {
           resyncing = true
-          current = sentinelRow(); return true
+          current = WarcGrammar.sentinelRow(sourceName); return true
         }
       } else {
-        val (payload, memberEnd) = decoded
-        val isWarc = payload.length >= 5 &&
-          payload(0) == 'W' && payload(1) == 'A' && payload(2) == 'R' &&
-          payload(3) == 'C' && payload(4) == '/'
+        val p = payload.bytes; val n = payload.size
+        val isWarc = n >= 5 &&
+          p(0) == 'W' && p(1) == 'A' && p(2) == 'R' && p(3) == 'C' && p(4) == '/'
         if ((tentative || resyncing) && !isWarc) {
           // inflated cleanly but is not a record start: not a per-record
           // WARC member boundary — keep scanning
@@ -246,33 +203,26 @@ class GzipWarcPartitionReader(part: WarcInputPartition,
         } else {
           tentative = false
           resyncing = false
-          nextMemberStart = memberEnd
-          // a member normally holds exactly one record, but the splitter
+          nextMemberStart = in.position
+          // a member normally holds exactly one record, but the grammar
           // tolerates several (and emits the sentinel for malformed
-          // payload bytes — same containment as the plain reader)
-          pending = graft.warc.WarcSource
-            .splitWarc(payload, sourceName)
-            .map(r => row(r.version, r.header, r.content))
+          // payload bytes — same containment as the plain reader); rows
+          // copy their bodies out before the next member reuses `payload`
+          pending = grammar.records(WarcByteReader.of(p, n))(
+            grammar.row(sourceName), WarcGrammar.sentinelRow(sourceName))
         }
       }
     }
     false
   }
 
-  private def row(version: String, header: Map[String, String],
-      body: Array[Byte]): InternalRow = {
-    val keys = header.keysIterator.map(k => UTF8String.fromString(k): Any).toArray
-    val vals = header.valuesIterator.map(v => UTF8String.fromString(v): Any).toArray
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(version),
-      new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals)),
-      body,
-      UTF8String.fromString(sourceName)))
-  }
-
-  private def sentinelRow(): InternalRow =
-    row("0", Map.empty, Array.emptyByteArray)
-
   override def get(): InternalRow = current
-  override def close(): Unit = in.close()
+  override def close(): Unit = { inflater.end(); in.close() }
+}
+
+private object GzipWarcPartitionReader {
+  /** The inflated member, read in place by the grammar. */
+  final class Payload extends java.io.ByteArrayOutputStream(1 << 16) {
+    def bytes: Array[Byte] = buf
+  }
 }

@@ -2,15 +2,14 @@ package graft.warc.source
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-range WARC record reader (see [[WarcDataSource]] for the split
-  * ownership rule). Streams records — one record in memory at a time;
-  * forward-only reads (the boundary sync consumes the magic rather than
-  * seeking back, so the 64 KiB read buffer is never invalidated).
+  * ownership rule). Streams records — one record in memory at a time —
+  * through the shared [[WarcGrammar]]; this class adds only what a
+  * byte-range split needs around it: ownership, the tentative first
+  * record and its terminator check, and the rewind past a false magic.
   *
   * Caveat shared with every offset-splittable record format: a split
   * seeking into the middle of a binary body could false-sync on magic
@@ -27,97 +26,22 @@ class WarcPartitionReader(part: WarcInputPartition,
     hadoopConf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val fs = new Path(part.file).getFileSystem(hadoopConf)
-  private val in = fs.open(new Path(part.file))
+  private val in = new WarcByteReader(
+    new Path(part.file).getFileSystem(hadoopConf).open(new Path(part.file)))
   private val endExclusive = part.start + part.length
   private val sourceName =
-    part.file.substring(part.file.lastIndexOf('/') + 1)
-
-  // ---- counting buffered forward reader ----
-  private val buf = new Array[Byte](1 << 16)
-  private var bufLen = 0
-  private var bufPos = 0
-  private var pos: Long = 0L // absolute offset of next byte to return
-
-  private def fill(): Boolean = {
-    if (bufPos < bufLen) return true
-    bufLen = in.read(buf, 0, buf.length)
-    bufPos = 0
-    bufLen > 0
-  }
-  private def readByte(): Int = {
-    if (!fill()) -1
-    else { val b = buf(bufPos) & 0xff; bufPos += 1; pos += 1; b }
-  }
-  private def seekTo(target: Long): Unit = {
-    in.seek(target)
-    pos = target; bufLen = 0; bufPos = 0
-  }
-  // UTF-8 decode (ISO 28500 headers may carry IRIs etc.)
-  private def readLine(): String = {
-    val bos = new java.io.ByteArrayOutputStream(64)
-    var c = readByte()
-    if (c < 0) return null
-    while (c >= 0 && c != '\n') { bos.write(c); c = readByte() }
-    val s = new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    if (s.nonEmpty && s.charAt(s.length - 1) == '\r') s.substring(0, s.length - 1)
-    else s
-  }
-
-  private def skipFully(n: Long): Boolean = {
-    var left = n
-    while (left > 0) {
-      val chunk = math.min(left, (bufLen - bufPos).toLong)
-      if (chunk > 0) { bufPos += chunk.toInt; pos += chunk; left -= chunk }
-      else if (!fill()) return false
-    }
-    true
-  }
-  private def readFully(n: Int): Array[Byte] = {
-    val out = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      if (!fill()) return java.util.Arrays.copyOf(out, off)
-      val take = math.min(n - off, bufLen - bufPos)
-      System.arraycopy(buf, bufPos, out, off, take)
-      bufPos += take; pos += take; off += take
-    }
-    out
-  }
-
-  // ---- boundary sync ----
-  private val Magic = "WARC/".getBytes
-  /** Scan forward until a line-initial `WARC/` has been CONSUMED.
-    * Returns the magic's absolute start offset, or -1 at EOF. */
-  private def syncToBoundary(requireNewline: Boolean): Long = {
-    var atLineStart = !requireNewline
-    var m = 0
-    var magicStart = -1L
-    while (true) {
-      val b = readByte()
-      if (b < 0) return -1L
-      if (m > 0 && b == Magic(m)) {
-        m += 1
-        if (m == Magic.length) return magicStart
-      } else {
-        val wasLineStart = atLineStart
-        atLineStart = b == '\n'
-        if (wasLineStart && b == 'W') { m = 1; magicStart = pos - 1 }
-        else m = 0
-      }
-    }
-    -1L
-  }
+    UTF8String.fromString(part.file.substring(part.file.lastIndexOf('/') + 1))
+  private val grammar = new WarcGrammar
+  import WarcGrammar._
 
   /** Tentative-record terminator check. A record accepted from a mid-
     * split sync must END like a WARC record: its body followed by only
-    * CR/LF padding (the spec's two CRLFs; ≤8 bytes tolerated) and then
-    * EOF or a line-initial `WARC/` magic. Returns the next magic's start
-    * offset (magic consumed), -1 for EOF-accept, -2 for reject. Without
-    * this, a body that EMBEDS a plausible WARC header block (crawls
-    * serving .warc files, HTML quoting WARC headers) would be trusted
-    * and its Content-Length skip could jump real records owned by this
-    * split. */
+    * CR/LF padding and then EOF or a line-initial `WARC/` magic. Returns
+    * the next magic's start offset (magic consumed), -1 for EOF-accept,
+    * -2 for reject. Without this, a body that EMBEDS a plausible WARC
+    * header block (crawls serving .warc files, HTML quoting WARC
+    * headers) would be trusted and its Content-Length skip could jump
+    * real records owned by this split. */
   private def validateTerminator(): Long = {
     // CR/LF padding is unbounded: a writer emitting extra blank lines
     // between records is out-of-spec but must not get its boundary
@@ -125,13 +49,13 @@ class WarcPartitionReader(part: WarcInputPartition,
     // magic still IS a record boundary
     var sawNewline = false
     while (true) {
-      val b = readByte()
+      val b = in.readByte()
       if (b < 0) return -1L
       if (b == 'W' && sawNewline) {
-        val start = pos - 1
+        val start = in.position - 1
         var m = 1
         while (m < Magic.length) {
-          if (readByte() != Magic(m)) return -2L
+          if (in.readByte() != Magic(m)) return -2L
           m += 1
         }
         return start
@@ -145,129 +69,49 @@ class WarcPartitionReader(part: WarcInputPartition,
   // stream is positioned just AFTER a consumed magic whose start offset
   // is `nextMagicStart`; -1 when no further magic exists
   private var nextMagicStart: Long = {
-    if (part.start > 0) seekTo(part.start - 1)
-    syncToBoundary(requireNewline = part.start > 0)
+    if (part.start > 0) in.seekTo(part.start - 1)
+    syncToMagic(in, requireNewline = part.start > 0)
   }
   // the first record after a mid-file seek is TENTATIVE: a false sync on
   // magic bytes inside a record body must not be trusted to skip
   // Content-Length bytes (it could jump real records). A tentative
-  // record missing the mandatory WARC-Type header is rejected and the
-  // scan resumes right after its magic.
+  // record missing the mandatory WARC-Type header, with an untrusted
+  // length, or whose length runs past EOF or misses a record terminator
+  // is rejected, and the scan resumes right after its magic.
   private var tentative = part.start > 0
   private var current: InternalRow = _
-  private var done = false
 
   override def next(): Boolean = {
-    while (true) {
-      if (done || nextMagicStart < 0 || nextMagicStart >= endExclusive) {
-        done = true; return false
-      }
+    while (nextMagicStart >= 0 && nextMagicStart < endExclusive) {
       val magicStart = nextMagicStart // rewind point for tentative rejects
-      val version = readLine() // remainder of the "WARC/<ver>" line
-      if (version == null) { done = true; return false }
-      var contentLength = -1L
-      var hasWarcType = false
-      val keys = Vector.newBuilder[Any]
-      val vals = Vector.newBuilder[Any]
-      var h = readLine()
-      var bad = false
-      while (h != null && h.nonEmpty) {
-        val i = h.indexOf(':')
-        if (i > 0) {
-          val k = h.substring(0, i).trim.toLowerCase
-          val v = h.substring(i + 1).trim
-          keys += UTF8String.fromString(k)
-          vals += UTF8String.fromString(v)
-          if (k == "warc-type") hasWarcType = true
-          if (k == "content-length")
-            contentLength =
-              try v.toLong catch { case _: NumberFormatException => bad = true; -1L }
-        }
-        h = readLine()
+      val outcome = grammar.parse(in, requireType = tentative)
+      if (outcome == EofInHeaders) {
+        current = sentinelRow(sourceName); nextMagicStart = -1L; return true
       }
-      if (h == null) { current = sentinelRow(); nextMagicStart = -1L; return true }
-      if (bad || contentLength < 0 || (tentative && !hasWarcType)) {
-        // malformed (or rejected tentative) pseudo-record: do NOT trust
-        // its length; rescan. Tentative rejects rewind to just after the
-        // false magic (the header scan may have consumed a real magic)
-        // and emit nothing; non-tentative malformed records surface as
-        // sentinels for the quarantine path.
-        if (tentative) seekTo(magicStart + Magic.length)
-        nextMagicStart = syncToBoundary(requireNewline = false)
-        if (!tentative) { current = sentinelRow(); return true }
-      } else if (contentLength > graft.warc.WarcSource.MaxBodyBytes) {
-        if (!skipFully(contentLength)) {
-          if (tentative) {
-            // claimed length runs past EOF: false sync — rewind and rescan
-            // (real records may sit between the false magic and EOF)
-            seekTo(magicStart + Magic.length)
-            nextMagicStart = syncToBoundary(requireNewline = false)
-          } else {
-            current = sentinelRow(); nextMagicStart = -1L; return true
-          }
-        } else if (tentative) {
-          val v = validateTerminator()
-          if (v == -2L) {
-            // pseudo-record: its claimed length does not land on a record
-            // end — rescan from just after the false magic
-            seekTo(magicStart + Magic.length)
-            nextMagicStart = syncToBoundary(requireNewline = false)
-          } else {
-            current = row(version, keys.result(), vals.result(), Array.emptyByteArray)
-            tentative = false
-            nextMagicStart = v
-            return true
-          }
-        } else {
-          current = row(version, keys.result(), vals.result(), Array.emptyByteArray)
-          nextMagicStart = syncToBoundary(requireNewline = false)
-          return true
-        }
+      if (!tentative) {
+        // malformed records surface as sentinels for the quarantine path
+        // and the scan resumes past their headers; a short body ends it
+        current = if (outcome == Record) grammar.row(sourceName) else sentinelRow(sourceName)
+        nextMagicStart =
+          if (outcome == ShortBody) -1L else syncToMagic(in, requireNewline = false)
+        return true
+      }
+      val v = if (outcome == Record) validateTerminator() else -2L
+      if (v == -2L) {
+        // rejected tentative pseudo-record: emit nothing and rescan from
+        // just past the false magic (the header scan may have consumed a
+        // real magic)
+        in.seekTo(magicStart + Magic.length)
+        nextMagicStart = syncToMagic(in, requireNewline = false)
       } else {
-        val body = readFully(contentLength.toInt)
-        if (body.length < contentLength) {
-          if (tentative) {
-            // claimed length runs past EOF: false sync — rescan (there may
-            // be real records between the false magic and EOF)
-            seekTo(magicStart + Magic.length)
-            nextMagicStart = syncToBoundary(requireNewline = false)
-          } else {
-            current = sentinelRow()
-            nextMagicStart = -1L
-            return true
-          }
-        } else if (tentative) {
-          val v = validateTerminator()
-          if (v == -2L) {
-            seekTo(magicStart + Magic.length)
-            nextMagicStart = syncToBoundary(requireNewline = false)
-          } else {
-            current = row(version, keys.result(), vals.result(), body)
-            tentative = false
-            nextMagicStart = v
-            return true
-          }
-        } else {
-          current = row(version, keys.result(), vals.result(), body)
-          nextMagicStart = syncToBoundary(requireNewline = false)
-          return true
-        }
+        current = grammar.row(sourceName)
+        tentative = false
+        nextMagicStart = v
+        return true
       }
     }
     false
   }
-
-  private def row(version: String, keys: Vector[Any], vals: Vector[Any],
-      body: Array[Byte]): InternalRow =
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(version),
-      new ArrayBasedMapData(new GenericArrayData(keys.toArray),
-        new GenericArrayData(vals.toArray)),
-      body,
-      UTF8String.fromString(sourceName)))
-
-  private def sentinelRow(): InternalRow =
-    row("0", Vector.empty, Vector.empty, Array.emptyByteArray)
 
   override def get(): InternalRow = current
   override def close(): Unit = in.close()

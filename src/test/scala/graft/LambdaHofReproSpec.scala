@@ -61,7 +61,7 @@ class LambdaHofReproSpec extends AnyFunSuite with BeforeAndAfterAll {
     // parse → gunzip → envelope split → HTML parse UDF → text_content
     def docs() = graft.warc.Pipeline.urlResources(
       graft.warc.WarcSource.fromBytes(
-        graft.warc.WarcQueries.warcFiles(spark, sf)))
+        graft.warc.WarcQueries.warcFiles(spark, sf, gzip = false)))
       .select(regexp_extract($"url", "/page/(\\d+)$", 1).cast("long").as("doc_id"),
         $"text_content".as("text"))
     val toks = graft.text.TextOps.whitespaceTokens($"text")
@@ -104,7 +104,7 @@ class LambdaHofReproSpec extends AnyFunSuite with BeforeAndAfterAll {
     import sp.implicits._
     val docs = graft.warc.Pipeline.urlResources(
       graft.warc.WarcSource.fromBytes(
-        graft.warc.WarcQueries.warcFiles(spark, sf)))
+        graft.warc.WarcQueries.warcFiles(spark, sf, gzip = false)))
       .select(regexp_extract($"url", "/page/(\\d+)$", 1).cast("long").as("doc_id"),
         $"text_content".as("text"))
       .withColumn("doc_md5", md5($"text"))

@@ -104,7 +104,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("w01 pipeline: no shuffle before the final ordering") {
     val df = graft.warc.Pipeline.urlResources(
       graft.warc.WarcSource.fromBytes(
-        graft.warc.WarcQueries.warcFiles(spark, sf)))
+        graft.warc.WarcQueries.warcFiles(spark, sf, gzip = false)))
     val plan = physical(df)
     // the enrichment plan itself is narrow: the only exchange allowed is
     // the test-harness repartition that synthesizes the WARC bytes
@@ -117,7 +117,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // kernel UDFs of the other fields must not be evaluated for it
     val unused = Seq("rake_keywords", "ga_tracker_ids", "ga_config_calls", "count_words")
     val full = physical(graft.warc.Pipeline.urlResources(
-      graft.warc.WarcSource.fromBytes(graft.warc.WarcQueries.warcFiles(spark, sf))))
+      graft.warc.WarcSource.fromBytes(graft.warc.WarcQueries.warcFiles(spark, sf, gzip = false))))
     unused.foreach(u => assert(full.contains(s"$u("), s"$u not named in:\n$full"))
     val plan = physical(graft.pipeline.TrainingPipeline.warcCorpus(spark, sf))
     assert(plan.contains("collapse_ws("), s"text kernel missing:\n$plan")

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{element_at, size}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -414,6 +415,38 @@ class WarcSourceV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.filter($"version" === "0").count() == 0)
   }
 
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+
+  /** Write `records` as one plain container `<name>.warc` under
+    * `dir/plain` and as one per-record-gzipped `<name>.warc.gz` under
+    * `dir/gz`; returns (plain bytes, plain dir, gz dir). */
+  private def writeBoth(name: String, records: Seq[Array[Byte]]) = {
+    val dir = Files.createTempDirectory("warcv2both")
+    val plain = Files.createDirectory(dir.resolve("plain"))
+    val gz = Files.createDirectory(dir.resolve("gz"))
+    val bytes = records.reduce(_ ++ _)
+    Files.write(plain.resolve(s"$name.warc"), bytes)
+    Files.write(gz.resolve(s"$name.warc.gz"), records.map(WarcSource.gzip).reduce(_ ++ _))
+    (bytes, plain.toString, gz.toString)
+  }
+
+  private def readWarc(dir: String, maxPartitionBytes: Long = 128L << 20) =
+    spark.read.format("warc")
+      .option("maxPartitionBytes", maxPartitionBytes.toString).load(dir)
+      .as(org.apache.spark.sql.Encoders.product[WarcRecord])
+
+  /** Non-sentinel records as a sorted multiset of (version, header,
+    * content) — header order and sentinel counts left out. */
+  private def multiset(recs: Seq[WarcRecord]): Seq[String] =
+    recs.filter(_.version != "0").map { r =>
+      s"${r.version}|${r.header.toSeq.sorted}|" +
+        java.util.Base64.getEncoder.encodeToString(r.content)
+    }.sorted
+
+  /** Split-dependent sentinel counts are excluded: a malformed record
+    * that a mid-file split meets first is a tentative reject (no
+    * sentinel), so sentinels may add rows, never remove them, and only
+    * the non-sentinel records must agree. */
   test("single-split read matches whole-file read") {
     val dir = Files.createTempDirectory("warcv2b")
     Files.write(dir.resolve("one.warc"), makeWarc(20))
@@ -430,5 +463,77 @@ class WarcSourceV2Spec extends AnyFunSuite with BeforeAndAfterAll {
       .filter($"version" =!= "0").count()
     assert(wholeReal == 21 && splitReal == 21)
     assert(whole >= 21 && split >= 21) // sentinels may add rows, never remove
+
+    // three-way agreement on (version, header, content): the plain
+    // reader (whole file and small splits), the gzip reader over the same
+    // records one member each, and splitWarc — over planted malformed
+    // records (non-numeric Content-Length, a header line without a colon,
+    // a UTF-8 IRI, LF-only lines, and a truncated body at the end)
+    val body = "planted body\r\nno magic at any line start\r\n"
+    val planted = Seq(
+      utf8("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://ex.gov.au/badlen\r\n" +
+        s"Content-Length: 12x\r\n\r\n$body\r\n\r\n"),
+      utf8("WARC/1.0\r\nWARC-Type: response\r\nthis header line has no colon\r\n" +
+        "WARC-Target-URI: https://ex.gov.au/nocolon\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n$body\r\n\r\n"),
+      utf8("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://ex.gov.au/ü/日本\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n$body\r\n\r\n"),
+      utf8("WARC/1.0\nWARC-Type: response\nWARC-Target-URI: https://ex.gov.au/lf\n" +
+        s"Content-Length: ${body.length}\n\n$body\n\n"))
+    val truncated = utf8("WARC/1.0\r\nWARC-Type: response\r\n" +
+      "WARC-Target-URI: https://ex.gov.au/trunc\r\nContent-Length: 500\r\n\r\ncut short")
+    val normal = (0 until 24).map { i =>
+      val b = if (i % 3 == 0) WarcSource.gzip(utf8("doc " + i + " " + ("x" * (i * 13))))
+        else utf8("plain body " + i + " " + ("y" * (i * 17)))
+      WarcSource.toWireFormat("response", s"https://ex.gov.au/p/$i", b.length, b)
+    }
+    val records = normal.take(8) ++ planted.take(2) ++ normal.slice(8, 16) ++
+      planted.drop(2) ++ normal.drop(16) :+ truncated
+    val (bytes, plainDir, gzDir) = writeBoth("planted", records)
+    val expected = multiset(WarcSource.splitWarc(bytes, "planted.warc").toSeq)
+    assert(expected.size == 24 + 3) // badlen and the truncated record are sentinels
+    assert(expected.exists(_.contains("(warc-target-uri,https://ex.gov.au/ü/日本)")))
+    assert(expected.exists(_.contains("(warc-target-uri,https://ex.gov.au/lf)")))
+    assert(!expected.exists(_.contains("no colon")))
+    for ((what, got) <- Seq(
+        "plain whole file" -> readWarc(plainDir),
+        "plain 512 B splits" -> readWarc(plainDir, 512),
+        "gzip members" -> readWarc(gzDir),
+        "gzip 512 B splits" -> readWarc(gzDir, 512)))
+      assert(multiset(got.collect().toSeq) == expected, what)
+  }
+
+  test("a repeated header keeps one entry with its last value on every read path") {
+    // WARC-Concurrent-To may legally repeat (ISO 28500); the reference's
+    // HashMap keeps the last value. A second WARC-Target-URI must not
+    // give the same record a different url on plain and gzipped archives
+    val http = WarcSource.gzip(utf8("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
+      "<html><head><title>dup</title></head><body><p>dup body</p></body></html>"))
+    val dup = utf8("WARC/1.0\r\nWARC-Type: response\r\n" +
+      "WARC-Target-URI: https://ex.gov.au/first\r\nWARC-Concurrent-To: <urn:uuid:a>\r\n" +
+      "WARC-Target-URI: https://ex.gov.au/second\r\nWARC-Concurrent-To: <urn:uuid:b>\r\n" +
+      s"Uncompressed-Content-Length: 99\r\nContent-Length: ${http.length}\r\n\r\n") ++
+      http ++ utf8("\r\n\r\n")
+    val filler = (0 until 12).map { i =>
+      val b = utf8(s"metadata $i " + ("m" * 200))
+      WarcSource.toWireFormat("metadata", s"https://ex.gov.au/m/$i", b.length, b)
+    }
+    val (bytes, plainDir, gzDir) = writeBoth("dup", (filler.take(6) :+ dup) ++ filler.drop(6))
+    val sp = spark
+    import sp.implicits._
+    val paths = Seq(
+      "plain whole file" -> readWarc(plainDir),
+      "plain 512 B splits" -> readWarc(plainDir, 512),
+      "gzip" -> readWarc(gzDir),
+      "fromBytes" -> WarcSource.fromBytes(Seq(("dup.warc", bytes)).toDS()))
+    for ((what, recs) <- paths) {
+      val got = recs.filter(element_at($"header", "warc-type") === "response")
+        .select(size($"header"), element_at($"header", "warc-target-uri"),
+          element_at($"header", "warc-concurrent-to"))
+        .as[(Int, String, String)].collect().toSeq
+      assert(got == Seq((5, "https://ex.gov.au/second", "<urn:uuid:b>")), what)
+      assert(Pipeline.urlResources(recs).select($"url").as[String].collect().toSeq ==
+        Seq("https://ex.gov.au/second"), what)
+    }
   }
 }

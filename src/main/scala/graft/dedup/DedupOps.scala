@@ -486,11 +486,6 @@ object DedupOps {
     // admits. Residual risk is adversarially-crafted murmur multi-
     // collisions, which can hide candidates but never corrupt emitted
     // pairs (the final verify is collision-free).
-    val hashShinglesU = udf { text: String =>
-      val hs = shingles(text).iterator.map(hash64).toArray.distinct
-      java.util.Arrays.sort(hs) // sorted ⇒ the verify's two-pointer merge
-      hs.toSeq
-    }
     // the PRE-explode (doc_id, hs-array) frame is what gets cached: the
     // exploded index AND the verify's hash-set sides both derive from it
     // (explode is cheap; the UDF is not), so the corpus is tokenized and
@@ -633,7 +628,8 @@ object DedupOps {
 
   /** Distinct sorted 64-bit shingle hashes of a document — the probe
     * representation [[d22_containment]]'s candidate and phase-1 verify
-    * stages share (sorted so the overlap count is a codegen'd merge). */
+    * stages and [[d04_ngram_jaccard]]'s hash index share (sorted so the
+    * overlap count is a codegen'd merge). */
   private[graft] val hashShinglesU = udf { text: String =>
     val hs = shingles(text).iterator.map(hash64).toArray.distinct
     java.util.Arrays.sort(hs)

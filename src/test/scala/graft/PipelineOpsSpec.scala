@@ -408,6 +408,35 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == 1, s"the drill gated the corpus $n times; stage 1 must run once")
   }
 
+  test("a repeated release drill reuses its generated classes") {
+    // one Janino compile per codegen cache miss, JVM-wide. A cold drill
+    // on this corpus compiles ~360 classes, more than Spark's default
+    // cache of 100 holds, so at that size every drill compiled ~350 of
+    // them again; with the session's cache the second compiles 12–26
+    // (fused stages AQE numbered differently, a few plan variants)
+    val ColdDrillClasses = 360L
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    def drillCompiles(): Long = {
+      val docs = graft.dedup.DedupOps.withContainmentChain(spark, sf,
+        carrySource = true)
+      val dir = java.nio.file.Files.createTempDirectory("graft-drill-codegen")
+      val before = compiles.getCount
+      try {
+        val checks = graft.pipeline.TrainingPipeline
+          .releaseDrillUnified(spark, docs, dir.toString).collect()
+        assert(checks.length == 7 && checks.forall(_.getAs[Boolean]("pass")))
+      } finally rmTree(dir)
+      compiles.getCount - before
+    }
+    val first = drillCompiles()
+    val second = drillCompiles()
+    info(s"Janino compiles: first drill $first, second drill $second")
+    assert(second <= ColdDrillClasses / 5,
+      s"the second drill compiled $second classes (first: $first); a drill " +
+        s"generates ~$ColdDrillClasses, so the codegen cache does not hold them")
+  }
+
   test("card rollup: a NULL lang groups like the oracle's GROUP BY — never silently dropped") {
     val sp = spark
     import sp.implicits._
